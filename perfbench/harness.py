@@ -5,7 +5,6 @@ from __future__ import annotations
 
 import contextlib
 import os
-import statistics
 import threading
 import time
 
@@ -199,8 +198,10 @@ def persisted_rdds(spark) -> int:
 
 
 def keeps_growing(counts: list[int]) -> bool:
-    """Leak probe: persisted-RDD counts strictly rising over >= 3 operations."""
-    return len(counts) >= 3 and all(b > a for a, b in zip(counts, counts[1:]))
+    """Leak probe: the persisted-RDD count rose after every operation.  Each
+    ingest batch does the same work, so a healthy program ends each at the
+    same count."""
+    return len(counts) >= 2 and all(b > a for a, b in zip(counts, counts[1:]))
 
 
 # --- per-operation Spark work -----------------------------------------------------
@@ -260,9 +261,6 @@ class Tracer:
             self._stack.pop()
             self.spans[idx]["end"] = time.perf_counter()
 
-    def durations(self, name: str) -> list[float]:
-        return [s["end"] - s["start"] for s in self.spans if s["name"] == name and s["end"]]
-
 
 def tail(values: list[float]) -> tuple[float, float]:
     """(percentile, value): the highest percentile with at least ten samples
@@ -274,7 +272,3 @@ def tail(values: list[float]) -> tuple[float, float]:
         return 100.0, xs[-1]
     k = n - 10  # 1-based rank with exactly ten samples above it
     return 100.0 * k / n, xs[k - 1]
-
-
-def median(values: list[float]) -> float:
-    return statistics.median(values)

@@ -2,7 +2,7 @@
 product's public functions on local[4], every operation's outputs checked
 against the pure-Python oracle.
 
-    python3 perfbench/run.py --workload backfill --seed 1 --seconds 20 --trace 0
+    python3 perfbench/run.py --workload backfill --seed 1 --seconds 5 --trace 0
 
 Workloads (see README.md for why each exists):
   backfill  one lineage.run_with_lineage job over a generated corpus, into a
@@ -22,6 +22,7 @@ import argparse
 import json
 import os
 import shutil
+import statistics
 import sys
 import time
 
@@ -37,9 +38,6 @@ from pdf_parser_spark import lineage, sink, streaming  # noqa: E402
 N_BUCKETS = 8
 # Streaming sub-roots allowed to pile up before ingest compacts them.
 COMPACT_EVERY = 3
-# Timed operations per run, however long they take; the traced run, which
-# also sweeps every layer, times one so it stays well inside three minutes.
-MIN_OPS = 2
 # Docs in the backfill warm-up job.
 WARMUP_DOCS = 200
 SIZES = {
@@ -97,7 +95,6 @@ class Run:
     def __init__(self, args, work: str, run_dir: str):
         self.args = args
         self.size = SIZES[args.size]
-        self.min_ops = 1 if args.trace else MIN_OPS
         self.work = work
         self.cache = os.path.join(work, "cache")
         self.run_dir = run_dir
@@ -174,7 +171,7 @@ def backfill(r: Run) -> None:
     window = time.perf_counter()
     k = 0
     root = None
-    while k < r.min_ops or time.perf_counter() - window < args.seconds:
+    while k == 0 or time.perf_counter() - window < args.seconds:
         root = os.path.join(r.run_dir, f"backfill-{k}")
         group = f"backfill-{k}"
         spark.sparkContext.setJobGroup(group, group)
@@ -324,7 +321,7 @@ def ingest(r: Run) -> None:
     window = time.perf_counter()
     b = 1
     while b < len(batches) and not r.failed and (
-        b <= r.min_ops or time.perf_counter() - window < args.seconds
+        b == 1 or time.perf_counter() - window < args.seconds
     ):
         pending = _subroots(out)
         subroot_counts.append(len(pending))
@@ -365,10 +362,10 @@ def ingest(r: Run) -> None:
                 streaming.compact_stream_output(spark, out, n_buckets=N_BUCKETS)
             compact_s.append(s["end"] - s["start"])
         r.layer.update({
-            "streaming.subroots": harness.median(subroot_counts),
+            "streaming.subroots": statistics.median(subroot_counts),
             "streaming.known_hashes": known_before[0],
             "streaming.crossbatch_dropped": dropped[0],
-            "streaming.compact_s": harness.median(compact_s),
+            "streaming.compact_s": statistics.median(compact_s),
         })
 
 
@@ -409,7 +406,7 @@ def end_to_end(r: Run) -> dict:
     )
     return {
         "docs_per_s": r.docs / sum(r.latencies),
-        "batch_latency_p50_s": harness.median(r.latencies),
+        "batch_latency_p50_s": statistics.median(r.latencies),
         "batch_latency_tail_s": tail,
         "setup_s": r.setup_s,
         "peak_rss_mb": r.sampler.peak_mb,
@@ -420,7 +417,7 @@ def per_layer(r: Run) -> dict:
     m = dict(r.layer)
     m["session.start_s"] = r.session_s
     m["spark.persisted_after"] = max(r.persisted)
-    m["trace.batch_latency_p50_s"] = harness.median(r.latencies)
+    m["trace.batch_latency_p50_s"] = statistics.median(r.latencies)
     m["trace.bookkeeping_s"] = r.bookkeeping_s
     return m
 
