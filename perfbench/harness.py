@@ -18,9 +18,9 @@ def session_conf(work: str) -> dict:
     """Conf the benchmark adds to ``session.get_spark``'s own: every file
     Spark writes lands under ``work``, no console progress bar, and a heap
     small enough to share the machine.  The heap is committed and touched
-    at start: how far an adaptively sized heap grows differs by hundreds of
-    MB between identical runs, which would drown every other change in
-    ``peak_rss_mb``."""
+    at start and cannot grow: how far an adaptively sized heap grows
+    differs by hundreds of MB between identical runs, which would drown
+    every other change in ``peak_rss_mb`` (see README.md)."""
     tmp = os.path.join(work, "tmp")
     return {
         "spark.driver.memory": HEAP,
@@ -92,12 +92,30 @@ def _pss_kb(pid: int) -> int:
     return 0
 
 
-class MemorySampler:
-    """Peak summed memory (PSS) of the driver JVM and its Python workers."""
+def heap_after_gc_mb(spark) -> float:
+    """JVM heap that survived collection: every heap pool but eden (the
+    survivor and old-generation pools change only when a collection moves
+    objects into them), read through the gateway's MemoryPoolMXBeans.
+    ``getCollectionUsage`` would say the same more directly, but G1 on
+    JDK 17 does not update it for the old generation on young collections."""
+    factory = spark.sparkContext._jvm.java.lang.management.ManagementFactory
+    used = 0
+    for pool in factory.getMemoryPoolMXBeans():
+        if pool.getType().toString() == "Heap memory" and "Eden" not in pool.getName():
+            used += pool.getUsage().getUsed()
+    return used / 2**20
 
-    def __init__(self, root_pid: int, period_s: float = 0.5):
+
+class MemorySampler:
+    """Peak summed memory (PSS) of the driver JVM and its Python workers,
+    and, when ``heap`` is given, the peak of what it returns (heap MB in use
+    after collection)."""
+
+    def __init__(self, root_pid: int, period_s: float = 0.5, heap=None):
         self.root_pid = root_pid
         self.period_s = period_s
+        self.heap = heap
+        self.peak_heap_mb = 0.0
         self.peak_kb = 0
         self.peak_split = (0.0, 0.0, 0)  # (JVM MB, Python workers MB, worker count) at the peak
         self.pids: set[int] = set()
@@ -111,6 +129,9 @@ class MemorySampler:
         if sum(pss) > self.peak_kb:
             self.peak_kb = sum(pss)
             self.peak_split = (pss[0] / 1024.0, sum(pss[1:]) / 1024.0, len(pss) - 1)
+        if self.heap is not None:
+            with contextlib.suppress(Exception):  # the gateway closes at teardown
+                self.peak_heap_mb = max(self.peak_heap_mb, self.heap())
 
     def _run(self) -> None:
         while not self._stop.is_set():

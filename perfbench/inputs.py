@@ -22,7 +22,7 @@ import shutil
 from pdf_parser_spark import corpus, oracle
 
 # Bump when the input or expectation format changes, so stale caches are ignored.
-CACHE_VERSION = "1"
+CACHE_VERSION = "2"
 
 TABLE_COLUMNS = {
     "extracted_spans": ("doc_id", "seq", "kind", "text", "media_ref", "offset"),
@@ -164,7 +164,8 @@ def ingest_inputs(
     second batch on, ``reuploads`` of them re-upload (under a new doc_id)
     content the oracle admitted in an earlier batch, so the streaming
     cross-batch dedup must drop them.  Each batch's expectation is the
-    oracle over exactly the docs that survive that dedup."""
+    oracle over exactly the docs that survive that dedup; ``admitted_alone``
+    is how many docs the oracle admits from the batch without that dedup."""
 
     def build(d: str) -> None:
         rnd = random.Random(f"perfbench-ingest:{seed}")
@@ -188,7 +189,12 @@ def ingest_inputs(
             admitted_pool.extend(originals[x["doc_id"]] for x in admitted)
             name = f"batch-{b:05d}.parquet"
             _write_docs(os.path.join(d, name), docs)
-            batches.append({"file": name, "n_docs": len(docs), "expected": digest})
+            batches.append({
+                "file": name,
+                "n_docs": len(docs),
+                "expected": digest,
+                "admitted_alone": len(oracle.route_and_admit(docs)[0]),
+            })
         with open(os.path.join(d, "meta.json"), "w") as f:
             json.dump({"batches": batches}, f)
 
