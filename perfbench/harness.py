@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import contextlib
 import os
+import signal
 import threading
 import time
 
@@ -118,13 +119,11 @@ class MemorySampler:
         self.peak_heap_mb = 0.0
         self.peak_kb = 0
         self.peak_split = (0.0, 0.0, 0)  # (JVM MB, Python workers MB, worker count) at the peak
-        self.pids: set[int] = set()
         self._stop = threading.Event()
         self._thread = threading.Thread(target=self._run, daemon=True)
 
     def _sample(self) -> None:
         pids = process_tree(self.root_pid)
-        self.pids.update(pids)
         pss = [_pss_kb(p) for p in pids]
         if sum(pss) > self.peak_kb:
             self.peak_kb = sum(pss)
@@ -152,15 +151,41 @@ class MemorySampler:
         return self.peak_kb / 1024.0
 
 
+def become_subreaper() -> None:
+    """Make this process the reaper of its orphaned descendants (Spark's
+    Python worker daemon outlives the JVM that started it), so
+    ``reap_children`` can wait for every process the run started."""
+    import ctypes
+
+    PR_SET_CHILD_SUBREAPER = 36
+    if ctypes.CDLL(None, use_errno=True).prctl(PR_SET_CHILD_SUBREAPER, 1, 0, 0, 0) != 0:
+        raise OSError(ctypes.get_errno(), "prctl(PR_SET_CHILD_SUBREAPER)")
+
+
+def reap_children(timeout_s: float = 30.0) -> None:
+    """Wait until every descendant has ended; kill what is left after ``timeout_s``."""
+    deadline = time.monotonic() + timeout_s
+    while True:
+        try:
+            pid, _status = os.waitpid(-1, os.WNOHANG)
+        except ChildProcessError:
+            return
+        if pid:
+            continue
+        if time.monotonic() > deadline:
+            for p in process_tree(os.getpid())[1:]:
+                with contextlib.suppress(OSError):
+                    os.kill(p, signal.SIGKILL)
+        time.sleep(0.05)
+
+
 def stop_session(spark, sampler: MemorySampler | None) -> None:
-    """Stop Spark, end the JVM, and wait for every process it started."""
+    """Stop Spark and end the JVM; ``reap_children`` then waits for the rest."""
     from pyspark import SparkContext
 
     proc = jvm_process(spark)
-    tree = set(process_tree(proc.pid))
     if sampler is not None:
         sampler.stop()
-        tree |= sampler.pids
     spark.stop()
     gateway = SparkContext._gateway
     if gateway is not None:
@@ -172,15 +197,6 @@ def stop_session(spark, sampler: MemorySampler | None) -> None:
     except Exception:
         proc.kill()
         proc.wait(timeout=30)
-    tree.discard(proc.pid)
-    deadline = time.monotonic() + 30
-    alive = {p for p in tree if os.path.exists(f"/proc/{p}")}
-    while alive and time.monotonic() < deadline:
-        time.sleep(0.1)
-        alive = {p for p in alive if os.path.exists(f"/proc/{p}")}
-    for p in alive:
-        with contextlib.suppress(OSError):
-            os.kill(p, 9)
 
 
 # --- correctness -----------------------------------------------------------------
@@ -218,21 +234,14 @@ def persisted_rdds(spark) -> int:
     return spark.sparkContext._jsc.getPersistentRDDs().size()
 
 
-def keeps_growing(counts: list[int]) -> bool:
-    """Leak probe: the persisted-RDD count rose after every operation.  Each
-    ingest batch does the same work, so a healthy program ends each at the
-    same count."""
-    return len(counts) >= 2 and all(b > a for a, b in zip(counts, counts[1:]))
-
-
 # --- per-operation Spark work -----------------------------------------------------
 
 
-def job_counts(spark, group: str, skip: set[int] = frozenset()) -> tuple[int, int, int, set[int]]:
-    """(jobs, stages, tasks, job ids) Spark ran under job group ``group``,
-    ignoring job ids in ``skip``; read from the status tracker, not the program."""
+def job_counts(spark, group: str) -> tuple[int, int, int]:
+    """(jobs, stages, tasks) Spark ran under job group ``group``; read from
+    the status tracker, not the program."""
     tracker = spark.sparkContext.statusTracker()
-    ids = set(tracker.getJobIdsForGroup(group)) - set(skip)
+    ids = tracker.getJobIdsForGroup(group)
     stages = tasks = 0
     for jid in ids:
         info = tracker.getJobInfo(jid)
@@ -243,7 +252,7 @@ def job_counts(spark, group: str, skip: set[int] = frozenset()) -> tuple[int, in
             if st is not None:
                 stages += 1
                 tasks += st.numTasks
-    return len(ids), stages, tasks, ids
+    return len(ids), stages, tasks
 
 
 def tree_size(path: str) -> tuple[int, int]:

@@ -22,7 +22,7 @@ import shutil
 from pdf_parser_spark import corpus, oracle
 
 # Bump when the input or expectation format changes, so stale caches are ignored.
-CACHE_VERSION = "2"
+CACHE_VERSION = "4"
 
 TABLE_COLUMNS = {
     "extracted_spans": ("doc_id", "seq", "kind", "text", "media_ref", "offset"),
@@ -94,10 +94,13 @@ def corpus_expectation(n_docs: int, seed: int, procs: int) -> dict:
     Admission is corpus-global, so chunks may be computed apart only if no
     content hash spans two chunks; chunks are cut at multiples of 100
     (the generator's re-upload pairs sit inside one century) and the
-    disjointness is checked, falling back to one pass otherwise."""
+    disjointness is checked, falling back to one pass otherwise.  The pool
+    forks (call this before anything starts a thread): a spawned pool would
+    leave multiprocessing's resource-tracker process running until this
+    process has exited."""
     step = 1000
     chunks = [(seed, lo, min(lo + step, n_docs)) for lo in range(0, n_docs, step)]
-    ctx = multiprocessing.get_context("spawn")
+    ctx = multiprocessing.get_context("fork")
     pool = ctx.Pool(procs)
     try:
         parts = pool.map(_chunk_expectation, chunks)
@@ -148,9 +151,9 @@ def backfill_inputs(cache_root: str, seed: int, n_docs: int, procs: int) -> str:
     the oracle digest of a lineage job over all of it."""
 
     def build(d: str) -> None:
+        meta = {"n_docs": n_docs, "expected": corpus_expectation(n_docs, seed, procs)}
         os.makedirs(os.path.join(d, "docs"))
         _write_docs(os.path.join(d, "docs", "part-00000.parquet"), corpus.gen_corpus(n_docs, seed))
-        meta = {"n_docs": n_docs, "expected": corpus_expectation(n_docs, seed, procs)}
         with open(os.path.join(d, "meta.json"), "w") as f:
             json.dump(meta, f)
 
@@ -158,45 +161,49 @@ def backfill_inputs(cache_root: str, seed: int, n_docs: int, procs: int) -> str:
 
 
 def ingest_inputs(
-    cache_root: str, seed: int, n_batches: int, batch_docs: int, reuploads: int
+    cache_root: str, seed: int, history_docs: int, batch_docs: int, reuploads: int
 ) -> str:
-    """``n_batches`` upload batches of ``batch_docs`` docs each.  From the
-    second batch on, ``reuploads`` of them re-upload (under a new doc_id)
-    content the oracle admitted in an earlier batch, so the streaming
-    cross-batch dedup must drop them.  Each batch's expectation is the
-    oracle over exactly the docs that survive that dedup; ``admitted_alone``
-    is how many docs the oracle admits from the batch without that dedup."""
+    """A running ingest service's state and its next upload batch.
+
+    ``history.parquet`` holds the doc_meta rows (doc_id, vendor, file_hash)
+    the oracle admits from ``history_docs`` earlier uploads: what the
+    service's compacted layout holds of them for the cross-batch dedup.
+    ``batch.parquet`` is the next upload, ``batch_docs`` docs of which
+    ``reuploads`` re-upload (under a new doc_id) content admitted earlier,
+    so the cross-batch dedup must drop them.  ``expected`` is the oracle
+    over the docs that survive that dedup; ``admitted_alone`` is how many
+    docs the oracle admits from the batch without it."""
 
     def build(d: str) -> None:
-        rnd = random.Random(f"perfbench-ingest:{seed}")
-        fresh = batch_docs - reuploads
-        known: set[str] = set()
-        admitted_pool: list[dict] = []
-        batches = []
-        next_i = 0
-        for b in range(n_batches):
-            n_fresh = batch_docs if b == 0 else fresh
-            docs = [corpus.gen_doc(i, seed) for i in range(next_i, next_i + n_fresh)]
-            next_i += n_fresh
-            if b > 0:
-                for k, src in enumerate(rnd.sample(admitted_pool, reuploads)):
-                    docs.append({**src, "doc_id": f"u{b:04d}{k:03d}"})
-            survivors = [x for x in docs if x["file_hash"] not in known]
-            digest, admitted = oracle_expectation(survivors)
-            known |= {x["file_hash"] for x in admitted}
-            # Re-upload with the label the generator gave the original doc.
-            originals = {x["doc_id"]: x for x in docs}
-            admitted_pool.extend(originals[x["doc_id"]] for x in admitted)
-            name = f"batch-{b:05d}.parquet"
-            _write_docs(os.path.join(d, name), docs)
-            batches.append({
-                "file": name,
-                "n_docs": len(docs),
-                "expected": digest,
-                "admitted_alone": len(oracle.route_and_admit(docs)[0]),
-            })
-        with open(os.path.join(d, "meta.json"), "w") as f:
-            json.dump({"batches": batches}, f)
+        import pyarrow as pa
+        import pyarrow.parquet as pq
 
-    key = f"v{CACHE_VERSION}-ingest-s{seed}-b{n_batches}x{batch_docs}r{reuploads}"
+        history = [corpus.gen_doc(i, seed) for i in range(history_docs)]
+        admitted, _quarantine = oracle.route_and_admit(history)
+        pq.write_table(
+            pa.Table.from_pylist(
+                [{c: x[c] for c in ("doc_id", "vendor", "file_hash")} for x in admitted]
+            ),
+            os.path.join(d, "history.parquet"),
+        )
+        known = {x["file_hash"] for x in admitted}
+        rnd = random.Random(f"perfbench-ingest:{seed}")
+        originals = {x["doc_id"]: x for x in history}
+        end = history_docs + batch_docs - reuploads
+        docs = [corpus.gen_doc(i, seed) for i in range(history_docs, end)]
+        # Re-upload with the label the generator gave the original doc.
+        for k, src in enumerate(rnd.sample(admitted, reuploads)):
+            docs.append({**originals[src["doc_id"]], "doc_id": f"u{k:07d}"})
+        digest, _admitted = oracle_expectation([x for x in docs if x["file_hash"] not in known])
+        _write_docs(os.path.join(d, "batch.parquet"), docs)
+        meta = {
+            "n_docs": len(docs),
+            "n_known": len(known),
+            "expected": digest,
+            "admitted_alone": len(oracle.route_and_admit(docs)[0]),
+        }
+        with open(os.path.join(d, "meta.json"), "w") as f:
+            json.dump(meta, f)
+
+    key = f"v{CACHE_VERSION}-ingest-s{seed}-h{history_docs}x{batch_docs}r{reuploads}"
     return _cached(cache_root, key, build)

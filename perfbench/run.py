@@ -7,13 +7,15 @@ against the pure-Python oracle.
 Workloads (see README.md for why each exists):
   backfill  one lineage.run_with_lineage job over a generated corpus, into a
             fresh output root, in a freshly started application;
-  ingest    ~100-doc upload batches landed one at a time into a running
-            streaming.stream_extract query.
+  ingest    one ~100-doc upload batch landed into a freshly started
+            streaming.stream_extract query whose output root already holds
+            the compacted state of earlier uploads.
 
 ``--trace 0`` prints the end-to-end metrics; ``--trace 1`` runs the same
-loop with per-operation bookkeeping plus a layer sweep and prints the
+operation with per-operation bookkeeping plus a layer sweep and prints the
 per-layer metrics.  The last stdout line is one JSON object; the exit code is
-non-zero when any operation failed or the leak probe fired.
+non-zero when any operation failed or left more persisted RDDs than it found
+(the leak probe).
 """
 
 from __future__ import annotations
@@ -39,10 +41,12 @@ from pdf_parser_spark import lineage, sink, streaming  # noqa: E402
 # ingest batch (see README.md), which does not fit a full pass of the benchmark.
 N_BUCKETS = 8
 SIZES = {
-    # backfill docs, ingest batches (the set-up batch and the timed one),
-    # docs per batch, re-uploads per batch, sweep sample docs
-    "full": {"backfill_docs": 8000, "batches": 2, "batch_docs": 100, "reuploads": 5, "sample": 2000},
-    "tiny": {"backfill_docs": 300, "batches": 2, "batch_docs": 40, "reuploads": 3, "sample": 120},
+    # backfill docs, earlier uploads in the ingest service's state, docs in
+    # the ingest batch and re-uploads among them, sweep sample docs
+    "full": {"backfill_docs": 2000, "history": 2000, "batch_docs": 100, "reuploads": 5,
+             "sample": 1000},
+    "tiny": {"backfill_docs": 300, "history": 200, "batch_docs": 40, "reuploads": 3,
+             "sample": 120},
 }
 
 END_TO_END = {
@@ -108,6 +112,7 @@ class Run:
         self.attempted = 0
         self.failed = 0
         self.persisted: list[int] = []
+        self.leaked = False
         self.layer: dict = {}
         self.bookkeeping_s = 0.0
         self.notes: list[str] = []
@@ -121,28 +126,36 @@ class Run:
         heap = (lambda: harness.heap_after_gc_mb(spark)) if self.args.trace else None
         self.sampler = harness.MemorySampler(harness.jvm_process(spark).pid, heap=heap).start()
 
-    def record(self, name: str, ok: bool, why: str = "", probe: bool = True) -> None:
-        """Count one checked operation and probe for stranded cached frames."""
+    def record(
+        self, name: str, ok: bool, why: str = "", persisted_before: int | None = None
+    ) -> None:
+        """Count one checked operation; with ``persisted_before`` (the
+        persisted-RDD count when it began) also probe it for stranded cached
+        frames: every run of an operation does the same work, so one that
+        ends with more persisted RDDs than it found leaks on every run."""
         self.attempted += 1
         if not ok:
             self.failed += 1
             self.notes.append(f"FAILED {name}: {why}")
-        if probe:
-            self.persisted.append(harness.persisted_rdds(self.spark))
+        if persisted_before is not None:
+            after = harness.persisted_rdds(self.spark)
+            self.persisted.append(after)
+            if after > persisted_before:
+                self.leaked = True
+                self.notes.append(
+                    f"leak probe: {name} left {after} persisted RDDs, found {persisted_before}"
+                )
 
-    def first_op_counts(self, group: str, root: str, skip=frozenset()) -> set[int]:
-        """Spark work and sink output of the first timed operation (counts
-        repeat exactly for a seed, unlike a median over a varying op count)."""
+    def op_counts(self, group: str, root: str) -> None:
+        """Spark work and sink output of the timed operation."""
         t = time.perf_counter()
-        jobs, stages, tasks, ids = harness.job_counts(self.spark, group, skip)
-        if "spark.jobs" not in self.layer:
-            files, size = harness.tree_size(root)
-            self.layer.update({
-                "spark.jobs": jobs, "spark.stages": stages, "spark.tasks": tasks,
-                "sink.files": files, "sink.bytes": size,
-            })
+        jobs, stages, tasks = harness.job_counts(self.spark, group)
+        files, size = harness.tree_size(root)
+        self.layer.update({
+            "spark.jobs": jobs, "spark.stages": stages, "spark.tasks": tasks,
+            "sink.files": files, "sink.bytes": size,
+        })
         self.bookkeeping_s += time.perf_counter() - t
-        return ids
 
 
 def check_outputs(frames: dict, expected: dict) -> tuple[bool, str]:
@@ -169,6 +182,7 @@ def backfill(r: Run) -> None:
     r.setup_s = r.session_s
     root = os.path.join(r.run_dir, "backfill")
     group = "backfill"
+    persisted = harness.persisted_rdds(spark)
     spark.sparkContext.setJobGroup(group, group)
     with r.tracer.span("op", workload="backfill"):
         t = time.perf_counter()
@@ -182,20 +196,21 @@ def backfill(r: Run) -> None:
         lat = time.perf_counter() - t
     spark.sparkContext.setJobGroup("perfbench-check", "check")
     if error is not None:
-        r.record(group, False, error)
+        r.record(group, False, error, persisted)
         return
     r.latencies.append(lat)
     r.docs += meta["n_docs"]
     if args.trace:
-        r.first_op_counts(group, root)
+        r.op_counts(group, root)
     done = lineage.completed_buckets(spark, root)
     if summary["buckets_run"] == 0 or len(done) != summary["buckets_run"]:
-        r.record(group, False, f"lineage not committed: {summary}, completed={sorted(done)}")
-    else:
-        r.record(group, *check_outputs(
-            {t: lineage.read_output(spark, root, t) for t in inputs.TABLE_COLUMNS},
-            meta["expected"],
-        ))
+        r.record(group, False, f"lineage not committed: {summary}, completed={sorted(done)}",
+                 persisted)
+        return
+    r.record(group, *check_outputs(
+        {t: lineage.read_output(spark, root, t) for t in inputs.TABLE_COLUMNS},
+        meta["expected"],
+    ), persisted)
 
     if args.trace and not r.failed:
         import layers
@@ -210,32 +225,29 @@ def backfill(r: Run) -> None:
                 spark, spark.read.parquet(docs_path), root, "resume", n_buckets=N_BUCKETS
             ),
         ))
-        r.layer.update(streaming_layers_on_lineage_root(r, root))
-
-
-def streaming_layers_on_lineage_root(r: Run, root: str) -> dict:
-    """Streaming state as seen from a backfill root: the known-content set a
-    stream started over it would anti-join against.  A backfill has no
-    micro-batch sub-roots, drops nothing across batches and has nothing to
-    compact, so those three metrics are constant 0 on this workload."""
-    known = sink.read(r.spark, root, "doc_meta").select("file_hash").distinct().count()
-    return {
-        "streaming.subroots": 0,
-        "streaming.known_hashes": known,
-        "streaming.crossbatch_dropped": 0,
-        "streaming.compact_s": 0.0,
-    }
+        # A backfill root is what a stream started over it would anti-join
+        # against.  It has no micro-batch sub-roots, drops nothing across
+        # batches and has nothing to compact: those three are constant 0 here.
+        known = sink.read(spark, root, "doc_meta").select("file_hash").distinct().count()
+        r.layer.update({
+            "streaming.subroots": 0,
+            "streaming.known_hashes": known,
+            "streaming.crossbatch_dropped": 0,
+            "streaming.compact_s": 0.0,
+        })
 
 
 # --- ingest --------------------------------------------------------------------
 
 
 def ingest(r: Run) -> None:
+    from pyspark.sql import functions as F
+
     size, args = r.size, r.args
     inp = inputs.ingest_inputs(
-        r.cache, args.seed, size["batches"], size["batch_docs"], size["reuploads"]
+        r.cache, args.seed, size["history"], size["batch_docs"], size["reuploads"]
     )
-    batches = inputs.load_meta(inp)["batches"]
+    meta = inputs.load_meta(inp)
     base = os.path.join(r.run_dir, "ingest")
     in_dir, out, ckpt = (os.path.join(base, d) for d in ("in", "out", "ckpt"))
     os.makedirs(in_dir)
@@ -243,130 +255,99 @@ def ingest(r: Run) -> None:
     r.start_session()
     spark = r.spark
     t_setup = time.perf_counter()
+    # The service has compacted its earlier uploads: their admitted content
+    # sits in the compacted layout that the cross-batch anti-join reads.
+    history = spark.read.parquet(os.path.join(inp, "history.parquet"))
+    sink.write_partitioned(
+        history.withColumn("bucket", lineage._bucket(F.col("doc_id"), N_BUCKETS)),
+        os.path.join(out, streaming.COMPACTED_DIR), "doc_meta", "bucket",
+    )
     query = streaming.stream_extract(
         spark, in_dir, out, ckpt, job_id="ingest", n_buckets=N_BUCKETS, available_now=False
     )
-    group = str(query.runId)
-    seen_jobs: set[int] = set()
-    stream_layer: dict = {}
-    last_sub = None
-
-    def one_batch(b: int, timed: bool) -> None:
-        nonlocal seen_jobs, last_sub
-        batch = batches[b]
-        first_timed = args.trace and timed and not stream_layer
-        if first_timed:
+    try:
+        query.processAllAvailable()  # running, with nothing landed yet
+        r.setup_s = r.session_s + (time.perf_counter() - t_setup)
+        if args.trace:
             t = time.perf_counter()
-            known = streaming.accumulated_doc_meta(spark, out)
-            stream_layer["streaming.known_hashes"] = known.distinct().count()
+            known = streaming.accumulated_doc_meta(spark, out).distinct().count()
             r.bookkeeping_s += time.perf_counter() - t
-        before = set(_subroots(out))
-        hidden = os.path.join(in_dir, "." + batch["file"])
-        shutil.copyfile(os.path.join(inp, batch["file"]), hidden)
-        with r.tracer.span("op", workload="ingest", batch=b):
+        persisted = harness.persisted_rdds(spark)
+        hidden = os.path.join(in_dir, ".batch.parquet")
+        shutil.copyfile(os.path.join(inp, "batch.parquet"), hidden)
+        with r.tracer.span("op", workload="ingest"):
             t = time.perf_counter()
-            os.rename(hidden, os.path.join(in_dir, batch["file"]))  # the upload lands
+            os.rename(hidden, os.path.join(in_dir, "batch.parquet"))  # the upload lands
             error = None
             try:
                 query.processAllAvailable()
-            except Exception as e:
+            except Exception as e:  # an operation that raises counts as failed
                 error = repr(e)
             lat = time.perf_counter() - t
-        name = f"ingest batch {b}"
-        if error is not None:
-            r.record(name, False, error)
-            return
-        new = sorted(set(_subroots(out)) - before)
-        if len(new) != 1:
-            r.record(name, False, f"expected one new micro-batch sub-root, got {new}")
-            return
-        last_sub = new[0]
-        subroot = os.path.join(out, last_sub)
-        if timed:
-            r.latencies.append(lat)
-            r.docs += batch["n_docs"]
-            if args.trace:
-                ids = r.first_op_counts(group, subroot, seen_jobs)
-                seen_jobs |= ids
-        seen_jobs |= harness.job_counts(spark, group, seen_jobs)[3]
-        if first_timed:
-            # Docs the oracle would admit from this batch on its own, minus
-            # the docs the program admitted into the batch's doc_meta.
-            t = time.perf_counter()
-            written = lineage.read_output(spark, subroot, "doc_meta").count()
-            stream_layer["streaming.crossbatch_dropped"] = batch["admitted_alone"] - written
-            r.bookkeeping_s += time.perf_counter() - t
-        if not lineage.completed_buckets(spark, subroot):
-            r.record(name, False, "no lineage rows committed")
-            return
-        r.record(name, *check_outputs(
-            {t: lineage.read_output(spark, subroot, t) for t in inputs.TABLE_COLUMNS},
-            batch["expected"],
-        ))
-
-    # Set-up ends once the first batch has committed: a running ingest
-    # service has already paid its first-batch cost.
-    one_batch(0, timed=False)
-    r.setup_s = r.session_s + (time.perf_counter() - t_setup)
-    window = time.perf_counter()
-    b = 1
-    while b < len(batches) and not r.failed and (
-        b == 1 or time.perf_counter() - window < args.seconds
-    ):
-        one_batch(b, timed=True)
-        b += 1
-    last_file = batches[b - 1]["file"]
-    if query.exception() is not None:
-        r.record("ingest query", False, str(query.exception()))
-    query.stop()
+        if error is None and query.exception() is not None:
+            error = str(query.exception())
+    finally:
+        query.stop()
+    name = "ingest batch"
+    if error is not None:
+        r.record(name, False, error, persisted)
+        return
+    subs = _subroots(out)
+    if len(subs) != 1 or not lineage.completed_buckets(spark, os.path.join(out, subs[0])):
+        r.record(name, False, f"expected one committed micro-batch sub-root, got {subs}",
+                 persisted)
+        return
+    subroot = os.path.join(out, subs[0])
+    r.latencies.append(lat)
+    r.docs += meta["n_docs"]
+    if args.trace:
+        r.op_counts(str(query.runId), subroot)
+    r.record(name, *check_outputs(
+        {t: lineage.read_output(spark, subroot, t) for t in inputs.TABLE_COLUMNS},
+        meta["expected"],
+    ), persisted)
 
     if args.trace and not r.failed:
         import layers
 
-        py_docs = []
-        for i in range(b):
-            py_docs.extend(_read_docs(os.path.join(inp, batches[i]["file"])))
+        batch_path = os.path.join(in_dir, "batch.parquet")
 
         def resume():
-            # The last micro-batch again, through the same cross-batch
-            # anti-join, into its completed sub-root.
-            docs = spark.read.parquet(os.path.join(in_dir, last_file))
-            known = streaming.accumulated_doc_meta(spark, out, exclude_batch=last_sub)
-            if known is not None:
-                docs = docs.join(known, "file_hash", "left_anti")
+            # The batch again, through the same cross-batch anti-join, into
+            # its completed sub-root.
+            prior = streaming.accumulated_doc_meta(spark, out, exclude_batch=subs[0])
             lineage.run_with_lineage(
-                spark, docs, os.path.join(out, last_sub), "resume", n_buckets=N_BUCKETS
+                spark, spark.read.parquet(batch_path).join(prior, "file_hash", "left_anti"),
+                subroot, "resume", n_buckets=N_BUCKETS,
             )
 
         r.layer.update(layers.sweep(
-            spark, r.tracer, spark.read.parquet(in_dir), py_docs,
+            spark, r.tracer, spark.read.parquet(batch_path), _read_docs(batch_path),
             read=lambda name, track: streaming.read_stream_output(spark, out, name, track=track),
             resume=resume,
         ))
-        # Compaction folds every landed sub-root; its output must still be
-        # the oracle's over all the batches.
+        # Docs the oracle admits from the batch on its own, minus the docs
+        # the program admitted into the batch's doc_meta.
+        written = lineage.read_output(spark, subroot, "doc_meta").count()
+        # Compaction folds the batch's sub-root into the compacted layout;
+        # the outputs it holds must still be the oracle's for the batch.
         with r.tracer.span("streaming.compact_s") as s:
             folded = streaming.compact_stream_output(spark, out, n_buckets=N_BUCKETS)
-        expected = inputs.empty_digest()
-        for i in range(b):
-            expected = inputs.add_digests(expected, batches[i]["expected"])
         r.record("compaction", *check_outputs(
             {t: streaming.read_stream_output(spark, out, t) for t in inputs.TABLE_COLUMNS},
-            expected,
-        ), probe=False)
-        r.layer.update(stream_layer)
+            meta["expected"],
+        ))
         r.layer.update({
             "streaming.subroots": folded,
+            "streaming.known_hashes": known,
+            "streaming.crossbatch_dropped": meta["admitted_alone"] - written,
             "streaming.compact_s": s["end"] - s["start"],
         })
 
 
 def _subroots(out: str) -> list[str]:
-    """Micro-batch sub-roots (``batch=<id>``) under a stream's output root, oldest first."""
-    if not os.path.isdir(out):
-        return []
-    names = [d for d in os.listdir(out) if d.startswith("batch=")]
-    return sorted(names, key=lambda d: int(d.split("=", 1)[1]))
+    """Micro-batch sub-roots (``batch=<id>``) under a stream's output root."""
+    return sorted(d for d in os.listdir(out) if d.startswith("batch="))
 
 
 def _read_docs(path: str) -> list[dict]:
@@ -428,6 +409,7 @@ def main(argv=None) -> int:
     os.makedirs(os.path.join(run_dir, "tmp"))
     os.environ["TMPDIR"] = os.path.join(run_dir, "tmp")
     os.environ["PYSPARK_PYTHON"] = sys.executable
+    harness.become_subreaper()
     r = Run(args, work, run_dir)
     try:
         WORKLOADS[args.workload](r)
@@ -435,15 +417,13 @@ def main(argv=None) -> int:
     finally:
         if r.spark is not None:
             harness.stop_session(r.spark, r.sampler)
+        harness.reap_children()
         if args.trace:
             with open(os.path.join(work, f"trace-{args.workload}-s{args.seed}.json"), "w") as f:
                 json.dump(r.tracer.spans, f)
         shutil.rmtree(run_dir, ignore_errors=True)
 
-    leak = args.workload == "ingest" and harness.keeps_growing(r.persisted)
-    if leak:
-        r.notes.append(f"leak probe: persisted RDDs keep growing across batches {r.persisted}")
-    correct = r.failed == 0 and not leak and r.attempted > 0 and bool(r.latencies)
+    correct = r.failed == 0 and not r.leaked and r.attempted > 0 and bool(r.latencies)
     metrics = {}
     if r.latencies:
         values, units = (per_layer(r), PER_LAYER) if args.trace else (end_to_end(r), END_TO_END)
@@ -464,7 +444,7 @@ def main(argv=None) -> int:
     print(json.dumps({
         "correct": correct,
         "attempted": r.attempted,
-        "failed": r.failed + (1 if leak else 0),
+        "failed": r.failed + (1 if r.leaked else 0),
         "metrics": metrics,
     }))
     return 0 if correct else 1
