@@ -21,17 +21,13 @@ from pdf_parser_spark.analytics import ANALYTIC_QUERIES
 from pdf_parser_spark.boilerplate import BOILERPLATE_QUERIES
 from pdf_parser_spark.curation import CURATION_QUERIES
 from pdf_parser_spark.datapipe import DATAPIPE_QUERIES
-from pdf_parser_spark.layout import LAYOUT_QUERIES
 from pdf_parser_spark.lm_filter import LM_QUERIES
 from pdf_parser_spark.bpe import BPE_QUERIES
 from pdf_parser_spark.graph import GRAPH_QUERIES
-from pdf_parser_spark.ir import IR_QUERIES
 from pdf_parser_spark.sketches import SKETCH_QUERIES
 from pdf_parser_spark.selection import SELECTION_QUERIES
 from pdf_parser_spark.snapshot import SNAPSHOT_QUERIES
 from pdf_parser_spark.timeseries import TIMESERIES_QUERIES
-from pdf_parser_spark.urlops import URL_QUERIES
-from pdf_parser_spark.webcorpus import WEBCORPUS_QUERIES
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -43,38 +39,14 @@ def entry(spark: SparkSession) -> DataFrame:
     ]
 
 
-# Round 2's driver recorded exactly the FIRST 50 queries() entries in
-# CORRECTNESS_r02.json while 59 were exposed — the 9 last-inserted (8
-# datapipe + boilerplate_main_text) silently fell off a driver-side cap.
-# Iteration order therefore decides which queries get a driver-verified
-# row, so entries NOT yet driver-verified go first and the tail holds
-# only queries already green in BOTH CORRECTNESS_r01 and _r02. Whatever
-# still overflows is re-verified in-repo by the identical check
-# (scripts/check_correctness.py → CORRECTNESS_SUPPLEMENT_r03.json).
-# Round-3 additions (lm_perplexity_filter, source_mixture_plan,
-# exact_substring_dedup, semdedup_keep, corpus_funnel, ccnet_terciles,
-# mixture_realize, vocab_coverage, dsir_select, then mojibake_repair,
-# shard_assign, domain_cap, then the urlops suite (url_canonicalize,
-# url_dedup, url_host_gate)) displace fifteen more doubly-verified
-# queries into the tail (31 total), every one re-verified in
-# CORRECTNESS_SUPPLEMENT_r03.json.
-# Promoted to the FRONT of queries(): late-module (analytics) round-3
-# additions that would otherwise land past the driver's 50-row cap no
-# matter how many names the tail absorbs, because queries() builds
-# module-by-module and analytics is last.
-# Round-5 rotation (r04 verdict task 1 — close the ledger): _FRONT holds
-# exactly 50 names. First the 31 never-driver-verified registry names —
-# the 23 names queued at COVERAGE.md §driver-verification, the 6 round-4
-# webcorpus/kmeans additions (kmeans_embeddings_float's rows-only row is
-# its designed record), and the 2 round-5 additions
-# (kmeans_float_agreement, corpus_funnel_delta). After this round EVERY
-# registry name has had a driver row at least once. The remaining 19
-# slots refresh the names whose last driver row is oldest (r02): the 13
-# flagship extract_*/report_* pipeline rows plus 6 core kernel queries.
-# Every displaced name stays green in the in-repo supplement
-# (CORRECTNESS_SUPPLEMENT_r05.json).
+# The driver records only the FIRST 50 queries() entries, so iteration
+# order decides which queries get a driver-verified row. _FRONT holds the
+# names never driver-verified (plus the oldest-verified flagship pipeline
+# and core kernel rows); _OVERFLOW_TAIL holds the names with the freshest
+# driver rows. Every name past the cap is re-verified in-repo by the same
+# check (scripts/check_correctness.py → CORRECTNESS_SUPPLEMENT_r05.json).
 _FRONT = [
-    # --- never driver-verified (31): round-3 backlog ---
+    # --- never driver-verified: round-3 backlog ---
     "interval_overlap_join",
     "json_props_stats",
     "rate_anomaly",
@@ -87,8 +59,6 @@ _FRONT = [
     "ab_test_purchase",
     "copurchase_pairs",
     "revenue_pareto",
-    "token_pmi",
-    "zorder_layout",
     "embedding_quantize",
     "embedding_covariance",
     "domain_cap",
@@ -98,12 +68,7 @@ _FRONT = [
     "mojibake_repair",
     "line_dedup_in_doc",
     "ann_recall",
-    # --- never driver-verified: round-4 webcorpus/kmeans additions ---
-    "kn_bigram_counts",
-    "doc_containment",
-    "l_diversity",
-    "softdedup_weights",
-    "sentence_stats",
+    # --- never driver-verified: round-4 kmeans addition ---
     "kmeans_embeddings_float",
     # --- round-5 additions ---
     "kmeans_float_agreement",
@@ -132,18 +97,10 @@ _FRONT = [
     "filename_sanitize",
 ]
 
-# Names verified by the round-4 driver window (CORRECTNESS_r04.json,
-# 50/50 green) carry the freshest driver rows in the registry, so they
-# sort LAST; everything between _FRONT and this tail keeps natural
-# (module) order and is re-verified by the in-repo supplement.
 _OVERFLOW_TAIL = [
     "volume_shipping",
     "returned_top_customers",
     "referential_integrity",
-    "inverted_index",
-    "bm25_search",
-    "fuzzy_token_join",
-    "top_docs_per_source",
     "tfidf_top_terms",
     "hll_distinct",
     "hll_window_distinct",
@@ -190,39 +147,26 @@ _OVERFLOW_TAIL = [
 ]
 
 
+# Every registry maps name -> (spark_fn, oracle SQL or a callable taking sf);
+# queries() takes its natural order from this tuple.
+_REGISTRIES = (
+    driver_contract.PIPELINE_QUERIES,
+    DATAPIPE_QUERIES,
+    LM_QUERIES,
+    SNAPSHOT_QUERIES,
+    SELECTION_QUERIES,
+    CURATION_QUERIES,
+    TIMESERIES_QUERIES,
+    SKETCH_QUERIES,
+    GRAPH_QUERIES,
+    BPE_QUERIES,
+    BOILERPLATE_QUERIES,
+    ANALYTIC_QUERIES,
+)
+
+
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    out: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-    out.update(driver_contract.pipeline_query_fns())
-    for name, (fn, _sql) in DATAPIPE_QUERIES.items():
-        out[name] = fn
-    for name, (fn, _sql) in LM_QUERIES.items():
-        out[name] = fn
-    for name, (fn, _sql) in URL_QUERIES.items():
-        out[name] = fn
-    for name, (fn, _sql) in SNAPSHOT_QUERIES.items():
-        out[name] = fn
-    for name, (fn, _sql) in SELECTION_QUERIES.items():
-        out[name] = fn
-    for name, (fn, _sql) in CURATION_QUERIES.items():
-        out[name] = fn
-    for name, (fn, _sql) in TIMESERIES_QUERIES.items():
-        out[name] = fn
-    for name, (fn, _sql) in IR_QUERIES.items():
-        out[name] = fn
-    for name, (fn, _sql) in LAYOUT_QUERIES.items():
-        out[name] = fn
-    for name, (fn, _sql) in SKETCH_QUERIES.items():
-        out[name] = fn
-    for name, (fn, _sql) in GRAPH_QUERIES.items():
-        out[name] = fn
-    for name, (fn, _sql) in BPE_QUERIES.items():
-        out[name] = fn
-    for name, (fn, _sql) in BOILERPLATE_QUERIES.items():
-        out[name] = fn
-    for name, (fn, _sql) in ANALYTIC_QUERIES.items():
-        out[name] = fn
-    for name, (fn, _sql) in WEBCORPUS_QUERIES.items():
-        out[name] = fn
+    out = {name: fn for reg in _REGISTRIES for name, (fn, _sql) in reg.items()}
     tail = [n for n in _OVERFLOW_TAIL if n in out]
     front = [n for n in _FRONT if n in out]
     moved = set(tail) | set(front)
@@ -237,36 +181,9 @@ def oracle_sql() -> dict[str, str]:
     (callable) oracle entries are resolved with that sf here, at call time,
     so importing the analytics package stays side-effect-free."""
     correctness_sf = "0.01"
-    out = dict(driver_contract.pipeline_oracle_sql(correctness_sf))
-    for name, (_fn, sql) in ANALYTIC_QUERIES.items():
-        if sql is not None:
-            out[name] = sql if isinstance(sql, str) else sql(correctness_sf)
-    for name, (_fn, sql) in BOILERPLATE_QUERIES.items():
-        out[name] = sql if isinstance(sql, str) else sql(correctness_sf)
-    for name, (_fn, sql) in DATAPIPE_QUERIES.items():
-        out[name] = sql if isinstance(sql, str) else sql(correctness_sf)
-    for name, (_fn, sql) in LM_QUERIES.items():
-        out[name] = sql if isinstance(sql, str) else sql(correctness_sf)
-    for name, (_fn, sql) in URL_QUERIES.items():
-        out[name] = sql if isinstance(sql, str) else sql(correctness_sf)
-    for name, (_fn, sql) in SNAPSHOT_QUERIES.items():
-        out[name] = sql if isinstance(sql, str) else sql(correctness_sf)
-    for name, (_fn, sql) in TIMESERIES_QUERIES.items():
-        out[name] = sql if isinstance(sql, str) else sql(correctness_sf)
-    for name, (_fn, sql) in IR_QUERIES.items():
-        out[name] = sql if isinstance(sql, str) else sql(correctness_sf)
-    for name, (_fn, sql) in LAYOUT_QUERIES.items():
-        out[name] = sql if isinstance(sql, str) else sql(correctness_sf)
-    for name, (_fn, sql) in SKETCH_QUERIES.items():
-        out[name] = sql if isinstance(sql, str) else sql(correctness_sf)
-    for name, (_fn, sql) in GRAPH_QUERIES.items():
-        out[name] = sql if isinstance(sql, str) else sql(correctness_sf)
-    for name, (_fn, sql) in BPE_QUERIES.items():
-        out[name] = sql if isinstance(sql, str) else sql(correctness_sf)
-    for name, (_fn, sql) in SELECTION_QUERIES.items():
-        out[name] = sql if isinstance(sql, str) else sql(correctness_sf)
-    for name, (_fn, sql) in CURATION_QUERIES.items():
-        out[name] = sql if isinstance(sql, str) else sql(correctness_sf)
-    for name, (_fn, sql) in WEBCORPUS_QUERIES.items():
-        out[name] = sql if isinstance(sql, str) else sql(correctness_sf)
-    return out
+    return {
+        name: sql if isinstance(sql, str) else sql(correctness_sf)
+        for reg in _REGISTRIES
+        for name, (_fn, sql) in reg.items()
+        if sql is not None
+    }

@@ -31,31 +31,6 @@ def _t(spark, sf_dir: str, name: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 
-def q_regex_token_extract(spark, sf_dir):
-    """R1 global match-all (JVM-expressible subset): extract every
-    word-bounded s-token, fan out, aggregate."""
-    docs = _t(spark, sf_dir, "documents")
-    return (
-        docs.select(
-            "doc_id",
-            F.explode(F.regexp_extract_all("text", F.lit(r"\bs[a-z]{3,}\b"), 0)).alias("token"),
-        )
-        .groupBy("token")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.countDistinct("doc_id").alias("n_docs"),
-        )
-    )
-
-
-SQL_REGEX_TOKEN_EXTRACT = r"""
-SELECT token, count(*)::BIGINT AS n, count(DISTINCT doc_id)::BIGINT AS n_docs
-FROM (SELECT doc_id, unnest(regexp_extract_all(text, '\bs[a-z]{3,}\b')) AS token
-      FROM documents)
-GROUP BY token
-"""
-
-
 def q_exact_dedup_md5(spark, sf_dir):
     """H1/H3 exact content dedup: md5 groups with first-wins keeper."""
     docs = _t(spark, sf_dir, "documents")
@@ -856,57 +831,6 @@ SELECT qid, cid, dot, rank::BIGINT AS rank FROM ranked WHERE rank <= 5
 """
 
 
-def q_embedding_lsh_buckets(spark, sf_dir):
-    """Sign-LSH bucketing over the first 8 dimensions — the scale path for
-    similarity search: candidates only form within a bucket."""
-    emb = _t(spark, sf_dir, "embeddings")
-    bucket = F.concat_ws(
-        "",
-        *[
-            F.when(F.element_at("embedding", i + 1) >= 0, F.lit("1")).otherwise(F.lit("0"))
-            for i in range(8)
-        ],
-    )
-    return emb.groupBy(bucket.alias("bucket")).agg(
-        F.count(F.lit(1)).alias("n"),
-        F.min("vec_id").alias("min_vec_id"),
-    )
-
-
-SQL_EMBEDDING_LSH_BUCKETS = """
-SELECT concat(
-         CASE WHEN embedding[1] >= 0 THEN '1' ELSE '0' END,
-         CASE WHEN embedding[2] >= 0 THEN '1' ELSE '0' END,
-         CASE WHEN embedding[3] >= 0 THEN '1' ELSE '0' END,
-         CASE WHEN embedding[4] >= 0 THEN '1' ELSE '0' END,
-         CASE WHEN embedding[5] >= 0 THEN '1' ELSE '0' END,
-         CASE WHEN embedding[6] >= 0 THEN '1' ELSE '0' END,
-         CASE WHEN embedding[7] >= 0 THEN '1' ELSE '0' END,
-         CASE WHEN embedding[8] >= 0 THEN '1' ELSE '0' END) AS bucket,
-       count(*)::BIGINT AS n, min(vec_id) AS min_vec_id
-FROM embeddings GROUP BY 1
-"""
-
-
-def q_token_stats_by_lang(spark, sf_dir):
-    """Token counting / language rollup (text-analysis surface)."""
-    docs = _t(spark, sf_dir, "documents")
-    n_tokens = F.size(F.split("text", " ")).cast("long")
-    return docs.groupBy("lang").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum(n_tokens).alias("total_tokens"),
-        F.round(F.avg(n_tokens), 3).alias("avg_tokens"),
-    )
-
-
-SQL_TOKEN_STATS_BY_LANG = """
-SELECT lang, count(*)::BIGINT AS n_docs,
-       sum(len(string_split(text, ' ')))::BIGINT AS total_tokens,
-       round(avg(len(string_split(text, ' '))), 3) AS avg_tokens
-FROM documents GROUP BY lang
-"""
-
-
 # Characteristic terms per source: top-K by tf-idf. K is a constant, so
 # the per-source cut is a bounded row_number over the VOCABULARY frame.
 TFIDF_K = 5
@@ -998,34 +922,6 @@ r AS (
   FROM sc
 )
 SELECT source, token, tf, df, tfidf, rk FROM r WHERE rk <= {TFIDF_K}
-"""
-
-
-def q_doc_fingerprint(spark, sf_dir):
-    """Winnowing-style document fingerprint: min md5 over the 3-token
-    shingle set."""
-    docs = _t(spark, sf_dir, "documents").withColumn("toks", F.split("text", " "))
-    docs = docs.where(F.size("toks") >= 3)
-    shingles = F.transform(
-        F.sequence(F.lit(0), F.size("toks") - 3),
-        lambda i: F.md5(
-            F.concat_ws(
-                " ",
-                F.element_at(F.col("toks"), i + 1),
-                F.element_at(F.col("toks"), i + 2),
-                F.element_at(F.col("toks"), i + 3),
-            )
-        ),
-    )
-    return docs.select("doc_id", F.array_min(shingles).alias("fingerprint"))
-
-
-SQL_DOC_FINGERPRINT = """
-SELECT doc_id,
-       list_min([md5(concat_ws(' ', toks[i + 1], toks[i + 2], toks[i + 3]))
-                 for i in range(0, len(toks) - 2)]) AS fingerprint
-FROM (SELECT doc_id, string_split(text, ' ') AS toks FROM documents)
-WHERE len(toks) >= 3
 """
 
 
@@ -1202,76 +1098,6 @@ WITH bits AS (
   GROUP BY c.da, c.db
 )
 SELECT da, db, hamming FROM ham WHERE hamming <= {MEDIA_HAM_MAX}
-"""
-
-
-# --------------------------------------------------------------------------
-# Text analysis: language-ID (the synthetic text carries no real language
-# signal, so this checks the operator's scoring/argmax, not label recovery)
-# --------------------------------------------------------------------------
-
-_LANG_MARKERS = {
-    "en": (" the ", " a "),
-    "de": (" der ", " und "),
-    "fr": (" le ", " la "),
-    "es": (" el ", " los "),
-}
-
-
-def q_lang_id_ngram(spark, sf_dir):
-    """Marker-n-gram language ID: per language, score = Σ occurrences of
-    its marker grams (substring counts via length arithmetic — identical
-    semantics in Spark and DuckDB, unlike regex); argmax with fixed
-    priority-order tiebreak; 'und' (undetermined) when all scores are 0."""
-    docs = _t(spark, sf_dir, "documents").select(
-        "doc_id", F.concat(F.lit(" "), F.col("text"), F.lit(" ")).alias("t")
-    )
-
-    def count_of(m: str):
-        return (F.length("t") - F.length(F.replace(F.col("t"), F.lit(m), F.lit("")))) / len(m)
-
-    scored = docs.select(
-        "doc_id",
-        *[
-            sum(count_of(m) for m in ms).cast("long").alias(f"s_{lang}")
-            for lang, ms in _LANG_MARKERS.items()
-        ],
-    )
-    best = F.greatest(*[F.col(f"s_{lang}") for lang in _LANG_MARKERS])
-    pick = F.lit("und")
-    for lang in reversed(list(_LANG_MARKERS)):
-        pick = F.when(F.col(f"s_{lang}") == best, F.lit(lang)).otherwise(pick)
-    return scored.select(
-        "doc_id",
-        F.when(best > 0, pick).otherwise(F.lit("und")).alias("lang_pred"),
-        best.alias("score"),
-    )
-
-
-def _sql_lang_count(ms):
-    return " + ".join(
-        f"(length(t) - length(replace(t, '{m}', ''))) / {len(m)}" for m in ms
-    )
-
-
-SQL_LANG_ID_NGRAM = f"""
-WITH scored AS (
-  SELECT doc_id,
-         {", ".join(f"CAST({_sql_lang_count(ms)} AS BIGINT) AS s_{lang}" for lang, ms in _LANG_MARKERS.items())}
-  FROM (SELECT doc_id, ' ' || text || ' ' AS t FROM documents)
-), best AS (
-  SELECT doc_id, s_en, s_de, s_fr, s_es,
-         greatest(s_en, s_de, s_fr, s_es) AS score
-  FROM scored
-)
-SELECT doc_id,
-       CASE WHEN score = 0 THEN 'und'
-            WHEN s_en = score THEN 'en'
-            WHEN s_de = score THEN 'de'
-            WHEN s_fr = score THEN 'fr'
-            ELSE 'es' END AS lang_pred,
-       score
-FROM best
 """
 
 
@@ -2111,39 +1937,6 @@ SELECT doc_id, plate, heat, dy FROM (
 """
 
 
-def q_promo_revenue(spark, sf_dir):
-    """TPC-H Q14 shape: lineitem ⋈ broadcast(part), conditional aggregate —
-    revenue share of ECONOMY-type parts per part brand. Revenue per row is
-    rounded BEFORE the sum (identical arithmetic both engines)."""
-    li = _t(spark, sf_dir, "lineitem").where("l_shipdate >= date'1995-01-01'")
-    part = _t(spark, sf_dir, "part")
-    rev = F.round(F.col("l_extendedprice") * (1 - F.col("l_discount")), 4)
-    joined = li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
-    return (
-        joined.groupBy("p_brand")
-        .agg(
-            F.round(
-                F.sum(F.when(F.col("p_type") == "ECONOMY", rev).otherwise(F.lit(0.0))), 2
-            ).alias("promo_revenue"),
-            F.round(F.sum(rev), 2).alias("total_revenue"),
-            F.count(F.lit(1)).alias("n_items"),
-        )
-    )
-
-
-SQL_PROMO_REVENUE = """
-SELECT p_brand,
-       round(sum(CASE WHEN p_type = 'ECONOMY'
-                      THEN round(l_extendedprice * (1 - l_discount), 4)
-                      ELSE 0.0 END), 2) AS promo_revenue,
-       round(sum(round(l_extendedprice * (1 - l_discount), 4)), 2) AS total_revenue,
-       count(*)::BIGINT AS n_items
-FROM lineitem JOIN part ON l_partkey = p_partkey
-WHERE l_shipdate >= DATE '1995-01-01'
-GROUP BY p_brand
-"""
-
-
 # --------------------------------------------------------------------------
 # session_window_builtin — Spark's native session-window aggregate
 # --------------------------------------------------------------------------
@@ -2575,7 +2368,6 @@ JOIN nation ON n_nationkey = c_nationkey
 
 
 ANALYTIC_QUERIES: dict[str, tuple] = {
-    "regex_token_extract": (q_regex_token_extract, SQL_REGEX_TOKEN_EXTRACT),
     "exact_dedup_md5": (q_exact_dedup_md5, SQL_EXACT_DEDUP_MD5),
     "filename_sanitize": (q_filename_sanitize, SQL_FILENAME_SANITIZE),
     "pdf_ingest_filter": (q_pdf_ingest_filter, SQL_PDF_INGEST_FILTER),
@@ -2598,15 +2390,11 @@ ANALYTIC_QUERIES: dict[str, tuple] = {
     "minhash_jaccard_est": (q_minhash_jaccard_est, SQL_MINHASH_JACCARD_EST),
     "ann_recall": (q_ann_recall, _sql_ann_recall_lazy),
     "embedding_knn": (q_embedding_knn, SQL_EMBEDDING_KNN),
-    "embedding_lsh_buckets": (q_embedding_lsh_buckets, SQL_EMBEDDING_LSH_BUCKETS),
-    "token_stats_by_lang": (q_token_stats_by_lang, SQL_TOKEN_STATS_BY_LANG),
     "tfidf_top_terms": (q_tfidf_top_terms, SQL_TFIDF_TOP_TERMS),
-    "doc_fingerprint": (q_doc_fingerprint, SQL_DOC_FINGERPRINT),
     "media_decode": (q_media_decode, SQL_MEDIA_DECODE),
     "media_frame_sample": (q_media_frame_sample, SQL_MEDIA_FRAME_SAMPLE),
     "media_features": (q_media_features, SQL_MEDIA_FEATURES),
     "media_phash_dedup": (q_media_phash_dedup, SQL_MEDIA_PHASH_DEDUP),
-    "lang_id_ngram": (q_lang_id_ngram, SQL_LANG_ID_NGRAM),
     "embedding_near_dup": (q_embedding_near_dup, SQL_EMBEDDING_NEAR_DUP),
     "embedding_ivf_knn": (q_embedding_ivf_knn, SQL_EMBEDDING_IVF_KNN),
     "semdedup_keep": (q_semdedup_keep, SQL_SEMDEDUP_KEEP),
@@ -2627,7 +2415,6 @@ ANALYTIC_QUERIES: dict[str, tuple] = {
     "recent_top_events": (q_recent_top_events, SQL_RECENT_TOP_EVENTS),
     "layout_y_lines": (q_layout_y_lines, SQL_LAYOUT_Y_LINES),
     "layout_nearest_heat": (q_layout_nearest_heat, SQL_LAYOUT_NEAREST_HEAT),
-    "promo_revenue": (q_promo_revenue, SQL_PROMO_REVENUE),
     "priority_return_rate": (q_priority_return_rate, SQL_PRIORITY_RETURN_RATE),
     "large_volume_orders": (q_large_volume_orders, SQL_LARGE_VOLUME_ORDERS),
     "dormant_customers": (q_dormant_customers, SQL_DORMANT_CUSTOMERS),

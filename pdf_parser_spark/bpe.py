@@ -27,7 +27,7 @@ pair count) — N_MERGES rows, the artifact a tokenizer build persists.
 
 Verification: BPE's iterative argmax+rewrite is not expressible as a
 direct DuckDB query, so this op uses the PIPELINE oracle pattern
-(driver_contract.pipeline_oracle_sql): an independent pure-Python BPE
+(driver_contract.PIPELINE_QUERIES): an independent pure-Python BPE
 reference (`py_bpe_merges`) materializes the expected merge table to
 parquet and the oracle SQL reads it — Spark's distributed fold is
 checked row-for-row against a from-scratch sequential implementation,

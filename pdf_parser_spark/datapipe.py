@@ -3078,16 +3078,3 @@ DATAPIPE_QUERIES = {
     "chunk_text": (q_chunk_text, SQL_CHUNK_TEXT),
     "pps_sample": (q_pps_sample, SQL_PPS_SAMPLE),
 }
-
-# Queries that are a free projection over another benched query: timing them
-# would double-count the expensive stage (near_dup_keep re-runs the whole
-# LSH edge build that near_dup_components already times). bench.py skips
-# these and says so — an explicit list, not a silent cap.
-BENCH_DERIVED = {
-    "near_dup_keep",
-    "leakage_safe_split",
-    # re-runs BOTH kmeans twins end-to-end purely to compare their
-    # assignments (a correctness-harness record, never a production
-    # stage) — timing it would double-count the two already-benched paths
-    "kmeans_float_agreement",
-}

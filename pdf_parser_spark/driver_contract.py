@@ -211,23 +211,20 @@ def pipeline_outputs(spark, sf_dir: str) -> dict[str, DataFrame]:
     return _PIPELINE_CACHE[key]
 
 
-def pipeline_query_fns() -> dict:
-    def make(name):
-        def fn(spark, sf_dir):
-            return pipeline_outputs(spark, sf_dir)[name]
+def _pipeline_query(name: str) -> tuple:
+    def fn(spark, sf_dir):
+        return pipeline_outputs(spark, sf_dir)[name]
 
-        return fn
+    def oracle_sql(sf: str) -> str:
+        """DuckDB side: the pure-Python oracle's materialized expectations."""
+        ensure_corpus(sf)
+        return f"SELECT * FROM read_parquet('{expected_path(sf, name)}')"
 
-    return {f"extract_{n}" if not n.startswith("report_") else n: make(n)
-            for n in PIPELINE_TABLES + REPORT_TABLES + STRATEGY_TABLES}
+    return fn, oracle_sql
 
 
-def pipeline_oracle_sql(sf: str = "0.01") -> dict[str, str]:
-    """DuckDB side: the pure-Python oracle's materialized expectations.
-    The driver's correctness pass runs at sf=0.01 (TESTDATA.md)."""
-    ensure_corpus(sf)
-    out = {}
-    for n in PIPELINE_TABLES + REPORT_TABLES + STRATEGY_TABLES:
-        key = f"extract_{n}" if not n.startswith("report_") else n
-        out[key] = f"SELECT * FROM read_parquet('{expected_path(sf, n)}')"
-    return out
+# name -> (spark_fn, lazy oracle SQL), the shape of analytics.ANALYTIC_QUERIES.
+PIPELINE_QUERIES = {
+    n if n.startswith("report_") else f"extract_{n}": _pipeline_query(n)
+    for n in PIPELINE_TABLES + REPORT_TABLES + STRATEGY_TABLES
+}

@@ -36,15 +36,6 @@ import hashlib
 import os
 import re
 
-# Benchmark-attribution knob (scripts/profile_features.py): disables O6
-# orientation correction on the OCR path so its cost can be measured in
-# isolation. Read once per worker at module import — set it BEFORE the
-# SparkSession starts so executors inherit it. Never set in production
-# or tests: with it on, span outputs diverge from the reference oracle.
-_AB_NO_ORIENTATION = os.environ.get(
-    "SPARK_GRAFT_AB_NO_ORIENTATION", ""
-).strip().lower() in {"1", "true", "yes"}
-
 FIELD_KEYS = ("PLATE_NO", "HEAT_NO", "TEST_CERT_NO")
 
 # Field names that table mode copies through verbatim instead of regex-matching
@@ -740,15 +731,12 @@ def extract_page_entries(
         if not entries:
             text = normalize_text(text_layer_raw)
             if not text or len(text.strip()) < 50:
-                if not _AB_NO_ORIENTATION:
-                    w, h = parse_geom(page_geom)
-                    rotation, _conf, _tm, _pm = classify_orientation(
-                        text_layer_raw, w, h
-                    )
-                    if rotation != 0:
-                        media_texts = [
-                            rotate_text(m, rotation) for m in media_texts
-                        ]
+                w, h = parse_geom(page_geom)
+                rotation, _conf, _tm, _pm = classify_orientation(
+                    text_layer_raw, w, h
+                )
+                if rotation != 0:
+                    media_texts = [rotate_text(m, rotation) for m in media_texts]
                 text = (ocr_engine or resolve_ocr_engine())(media_texts)
                 used_ocr = True
             if text:

@@ -160,7 +160,6 @@ def run_with_lineage(
         for f in reversed(cached):
             f.unpersist()
         return {"job_id": job_id, "buckets_run": 0, "buckets_skipped": len(done)}
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
 
     # doc_meta is written FIRST, and it is the ONLY write whose plan may
     # carry the admission DAG. V1 write commands do NOT substitute cached

@@ -26,32 +26,9 @@ def get_spark(
         is sized by AQE advisory partition bytes instead.
     """
     cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 4)
-    # SPARK_GRAFT_MASTER overrides the master, e.g. "local-cluster[4,4,6144]"
-    # (separate executor *processes* — the faithful stand-in for a
-    # multi-executor cluster, and the mode the scaling bench uses: this
-    # sandbox's kernel serializes page faults per process, so a single
-    # 32-thread JVM cannot scale past ~8 threads no matter the plan).
-    master = os.environ.get("SPARK_GRAFT_MASTER") or f"local[{cores}]"
-    executor_mem = None
-    if master.startswith("local-cluster"):
-        if "SPARK_HOME" not in os.environ:
-            import pyspark
-
-            os.environ["SPARK_HOME"] = pyspark.__path__[0]
-        # local-cluster[w,c,mem]: mem is WORKER capacity; executors still
-        # request spark.executor.memory (default 1g) unless set — size the
-        # executor to the worker so the heap matches the declared capacity.
-        try:
-            executor_mem = int(master.split(",")[2].rstrip("]").strip())
-        except (IndexError, ValueError):
-            executor_mem = None
-        try:
-            executor_cores = int(master.split(",")[1].strip())
-        except (IndexError, ValueError):
-            executor_cores = None
     repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     builder = (
-        SparkSession.builder.master(master)
+        SparkSession.builder.master(f"local[{cores}]")
         .config("spark.executorEnv.PYTHONPATH", repo_root)
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions or max(8, cores * 2)))
@@ -66,42 +43,6 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
     )
-    # Ad-hoc conf overrides for experiments and cluster-shaped tuning:
-    # SPARK_GRAFT_EXTRA_CONF="k=v;k=v" (used by the scaling bench to A/B
-    # bandwidth-vs-CPU trades like the shuffle codec without code edits).
-    # Values may not contain ';' (the entry separator); a token without
-    # '=' is a malformed entry and raises rather than silently becoming
-    # an empty-valued conf key.
-    extra = os.environ.get("SPARK_GRAFT_EXTRA_CONF", "")
-    for kv in filter(None, (t.strip() for t in extra.split(";"))):
-        k, sep, v = kv.partition("=")
-        if not sep or not k.strip():
-            raise ValueError(
-                f"SPARK_GRAFT_EXTRA_CONF entry {kv!r} is not k=v "
-                "(values must not contain ';')"
-            )
-        builder = builder.config(k.strip(), v.strip())
-    if executor_mem:
-        builder = builder.config("spark.executor.memory", f"{executor_mem}m")
-    if master.startswith("local-cluster") and executor_cores:
-        # Each executor JVM must size its internal pools (GC/JIT/common
-        # ForkJoinPool) to its CORE SHARE, not the whole machine: without
-        # this, w executors on an m-core box each spawn ~m-sized GC/compiler
-        # thread pools (w*~23 GC threads at m=32), and allocation-heavy
-        # stages collapse under oversubscription exactly at the larger
-        # cluster level — the scaling bench's 4N regression. On a real
-        # cluster YARN/k8s cgroup limits make the JVM see the right count;
-        # local-cluster workers see the bare machine, so pin it.
-        java_opts = f"-XX:ActiveProcessorCount={executor_cores}"
-        extra_java = os.environ.get("SPARK_GRAFT_EXEC_JAVA_OPTS", "")
-        if extra_java:
-            java_opts = f"{java_opts} {extra_java}"
-        builder = builder.config("spark.executor.extraJavaOptions", java_opts)
-    # Extra executor-process environment (inherited by Python workers), e.g.
-    # glibc malloc tuning: SPARK_GRAFT_EXEC_ENV="MALLOC_MMAP_THRESHOLD_=...,K=V"
-    for kv in filter(None, os.environ.get("SPARK_GRAFT_EXEC_ENV", "").split(",")):
-        k, _, v = kv.partition("=")
-        builder = builder.config(f"spark.executorEnv.{k}", v)
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

@@ -40,6 +40,9 @@ def table_ident(root: str, name: str) -> str:
     # normalization (normpath never consults the CWD), so a resume started
     # from a different working directory maps to the same tables. abspath
     # here would silently fork table identity per CWD (ADVICE r04).
+    # Upgrade note: older code hashed abspath(root), so a catalog-mode
+    # resume from a RELATIVE root written by it maps to new, empty tables
+    # and redoes every bucket; resume such jobs with the absolute root.
     tag = hashlib.md5(os.path.normpath(root).encode()).hexdigest()[:8]
     return f"{catalog_ns()}.{name}_{tag}"
 
@@ -67,8 +70,8 @@ def write_partitioned(df: DataFrame, root: str, name: str, partition_col: str) -
     """Dynamic partition overwrite: only the partitions present in ``df``
     are replaced (the exactly-once bucket-rewrite contract). V2
     ``overwritePartitions`` IS dynamic by definition; the parquet path
-    relies on partitionOverwriteMode=dynamic (set by the caller's
-    session — lineage sets it per job)."""
+    sets partitionOverwriteMode=dynamic on the write itself, leaving the
+    session's conf untouched."""
     ns = catalog_ns()
     if ns:
         spark = df.sparkSession
@@ -96,7 +99,12 @@ def write_partitioned(df: DataFrame, root: str, name: str, partition_col: str) -
             # Iceberg (or any V2) catalog: dynamic by definition.
             df.writeTo(ident).overwritePartitions()
         return
-    df.write.partitionBy(partition_col).mode("overwrite").parquet(_path(root, name))
+    (
+        df.write.option("partitionOverwriteMode", "dynamic")
+        .partitionBy(partition_col)
+        .mode("overwrite")
+        .parquet(_path(root, name))
+    )
 
 
 def _is_session_catalog(ident: str) -> bool:

@@ -1,6 +1,7 @@
 #!/usr/bin/env bash
 # Package the engine and launch the extraction job via spark-submit.
-# In-sandbox this runs local[32]; on a cluster, drop --local-cores and set
+# Locally this runs local[k], k = SPARK_GRAFT_CPUS or the core count
+# (nproc); on a cluster, drop --local-cores and set
 # --master/--deploy-mode/--num-executors as usual — nothing in the job code
 # assumes local mode.
 set -euo pipefail
@@ -26,4 +27,4 @@ spark-submit \
   --conf spark.sql.shuffle.partitions=64 \
   jobs/run_extraction.py \
   --input "$INPUT" --output "$OUTPUT" --job-id "$JOB_ID" \
-  --buckets 64 --local-cores "${SPARK_GRAFT_CPUS:-32}"
+  --buckets 64 --local-cores "${SPARK_GRAFT_CPUS:-$(nproc)}"

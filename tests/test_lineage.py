@@ -52,6 +52,18 @@ def test_single_shot_then_noop_resume(spark, docs_df, tmp_path):
     assert s2["buckets_skipped"] == s1["buckets_run"]
 
 
+
+def test_run_leaves_session_overwrite_mode_untouched(spark, docs_df, tmp_path):
+    """Dynamic partition overwrite is scoped to each write: a run must not
+    change the session's partitionOverwriteMode under other queries."""
+    key = "spark.sql.sources.partitionOverwriteMode"
+    spark.conf.set(key, "STATIC")
+    try:
+        lineage.run_with_lineage(spark, docs_df, str(tmp_path / "out"), "job_c", N_BUCKETS)
+        assert spark.conf.get(key) == "STATIC"
+    finally:
+        spark.conf.unset(key)
+
 def test_crash_resume_equals_single_shot(spark, docs_df, tmp_path):
     ref_root = str(tmp_path / "ref")
     lineage.run_with_lineage(spark, docs_df, ref_root, "ref", N_BUCKETS)
@@ -136,8 +148,7 @@ def test_no_stranded_persists_after_run_and_report_read(spark, docs_df, tmp_path
     (streaming reader, repeated reports) strands nothing in the cache.
 
     Compared by RDD-id SET, not count: other tests in the shared session
-    leave GC-owned cache entries (e.g. pack_sequences' lazy
-    localCheckpoint) that the ContextCleaner removes at an arbitrary
+    leave GC-owned cache entries that the ContextCleaner removes at an arbitrary
     later moment, so an absolute count can legitimately DROP while this
     test runs. RDD ids are never reused, so "no new ids remain" is the
     exact stranding property regardless of concurrent cleanup."""

@@ -33,43 +33,26 @@ def no_checkpoint(monkeypatch):
     )
 
 
-def test_url_dedup_is_aggregate_not_window(spark):
-    """The refetch collapse must stay a min-struct hash aggregate (map-
-    side combine) — never a window over canon_url (a viral URL would
-    serialize into one task)."""
-    from pdf_parser_spark.urlops import q_url_dedup
-
-    p = _plan(q_url_dedup(spark, SF_DIR))
-    assert "Window" not in p
-    assert "partial_min" in p  # map-side combine of the winner struct
-    assert "CartesianProduct" not in p
-
-
 def test_host_gate_and_bloom_broadcast(spark, no_checkpoint):
-    """The blocklist and the bloom word-frame must ship as broadcasts —
-    zero corpus-side shuffle for the gate, bounded for the bloom."""
+    """The bloom word-frame must ship as a broadcast — bounded shuffle for
+    the bloom."""
     from pdf_parser_spark.snapshot import q_bloom_dedup
-    from pdf_parser_spark.urlops import q_url_host_gate
 
-    p = _plan(q_url_host_gate(spark, SF_DIR))
-    assert "BroadcastHashJoin" in p
-    assert "SortMergeJoin" not in p
     p = _plan(q_bloom_dedup(spark, SF_DIR))
     assert "BroadcastHashJoin" in p
     assert "partial_bit_or" in p  # sketch partials combine map-side
 
 
 def test_scan_only_ops_have_single_exchange(spark):
-    """mojibake_repair, url_canonicalize and line_dedup_in_doc are
-    embarrassingly parallel scans: exactly one Exchange (the explicit
-    round-robin spread), no aggregate, no join."""
+    """mojibake_repair and line_dedup_in_doc are embarrassingly parallel
+    scans: exactly one Exchange (the explicit round-robin spread), no
+    aggregate, no join."""
     from pdf_parser_spark.datapipe import (
         q_line_dedup_in_doc,
         q_mojibake_repair,
     )
-    from pdf_parser_spark.urlops import q_url_canonicalize
 
-    for q in (q_mojibake_repair, q_url_canonicalize, q_line_dedup_in_doc):
+    for q in (q_mojibake_repair, q_line_dedup_in_doc):
         p = _plan(q(spark, SF_DIR))
         assert p.count("Exchange") == 1, q.__name__
         assert "Join" not in p and "Window" not in p, q.__name__
@@ -249,27 +232,6 @@ def test_pivot_is_single_aggregate_no_discovery_scan(spark):
     assert "partial_sum" in p
 
 
-def test_top_k_per_group_pushes_group_limit(spark):
-    """Grouped top-k must carry Spark's WindowGroupLimit so no partition
-    buffers more than k rows per group through the sort."""
-    from pdf_parser_spark.ir import q_top_docs_per_source
-
-    p = _plan(q_top_docs_per_source(spark, SF_DIR))
-    assert "WindowGroupLimit" in p
-    assert p.count("Exchange") == 1
-
-
-def test_bm25_stats_broadcast(spark):
-    """BM25's df/(N, avgdl) statistics join the tf frame as broadcasts —
-    the corpus-side tf aggregate is the only wide shuffle."""
-    from pdf_parser_spark.ir import q_bm25_search
-
-    p = _plan(q_bm25_search(spark, SF_DIR))
-    assert "BroadcastHashJoin" in p
-    assert "CartesianProduct" not in p
-    assert "BroadcastNestedLoopJoin" in p  # the 1-row stats crossJoin
-
-
 def test_triangle_no_cartesian(spark):
     """Triangle enumeration is two equi-joins + one aggregate — a
     cartesian/nested-loop anywhere means the wedge join degenerated."""
@@ -369,14 +331,3 @@ def test_selection_suite_plan_shapes(spark):
     p = _plan(q_chi2_lang_source(spark, SF_DIR))
     assert "CartesianProduct" not in p  # the N scalar ships as broadcast
     assert "partial_count" in p or "partial_sum" in p
-
-
-def test_rrf_fusion_pools_are_take_ordered(spark):
-    """Both RRF pools must come from TakeOrderedAndProject (per-partition
-    heaps + driver merge), never a global Sort over the corpus-sized
-    frame, and the fuse itself stays joins over the 50-row pools."""
-    from pdf_parser_spark.ir import q_rrf_fusion
-
-    p = _plan(q_rrf_fusion(spark, SF_DIR))
-    assert p.count("TakeOrderedAndProject") >= 3  # two pools + final top-20
-    assert "CartesianProduct" not in p
