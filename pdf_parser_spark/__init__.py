@@ -11,7 +11,7 @@ Layout:
   configs         — the five vendor extraction "programs" (declarative regex configs)
   kernel          — pure-Python per-page extraction semantics (single source of
                     truth, shared by the Arrow UDF and the pytest oracle)
-  vendor_detect   — vendor routing: pure-Python spec + JVM expression form
+  vendor_detect   — vendor routing: pure-Python spec, run on Spark as an Arrow UDF
   corpus          — deterministic synthetic corpus generator (seeded)
   oracle          — pure-Python corpus-level reference implementation
   extraction/     — the Spark pipeline (admission → page agg → kernel UDF →

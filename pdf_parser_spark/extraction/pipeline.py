@@ -4,11 +4,12 @@ extract_pdf_fields + tasks.py persistence (/root/reference/extractor/).
 Shape of the job (one scan, two shuffles on the hot path):
 
   documents(doc_id, vendor, file_hash, spans)
+    → routing: vendor_detect.route_doc per doc (Python crossing 1; Arrow)
     → admission (window first-wins on file_hash; H3/J4)            [shuffle 1]
     → explode(spans) EARLY — a giant document becomes many page rows,
       so skew is bounded by page size, not document size (SURVEY.md §7)
     → groupBy(doc_id, page): ordered page assembly                 [shuffle 2]
-    → extract_page_udf (the only Python crossing; Arrow batches)
+    → extract_page_udf (Python crossing 2; Arrow batches)
     → posexplode(entries) fan-out (R8)
     → md5 entry hash (H1) + first-wins window dedup (H2)
     → per-doc sequencing → ordered output spans / unpivot / stats
@@ -41,7 +42,7 @@ def _vendor_name_col(vendor_col):
 
 def _routed_ranked(docs: DataFrame, track: list | None = None) -> DataFrame:
     """Shared admission-router plan: per-doc detection/routing columns
-    (vendor_detect.route_columns — one JVM projection folded into the scan)
+    (vendor_detect.route_columns — the routing spec through one Arrow UDF)
     + hash first-wins winner flag (`_rn` 1/2) and the slot winner's
     effective vendor.
 
@@ -61,13 +62,10 @@ def _routed_ranked(docs: DataFrame, track: list | None = None) -> DataFrame:
       sits on the big side of an equi-join, which AQE skew-split handles.
 
     The slim frame is persist()ed before it branches into the aggregate
-    and the join-back: without the barrier, Catalyst plans the
-    detection-regex projection into BOTH join sides — the duplicated
-    expression tree made planning alone take ~30 s and re-ran the
-    routing regexes per side. With it, routing is computed once and both
-    branches read the InMemoryRelation (O(n_docs) routing columns, no
-    span payloads). persist, not localCheckpoint: the barrier is the
-    same (InMemoryRelation substitution), but CacheManager entries are
+    and the join-back: without it, each join side would run the routing
+    UDF over the docs again. With it, routing runs once and both branches
+    read the InMemoryRelation (O(n_docs) routing columns, no span
+    payloads). persist, not localCheckpoint: CacheManager entries are
     released deterministically via ``track``/clearCache, while a
     localCheckpoint RDD proved unreclaimable even after full GC
     (UI/listener references pin it), stranding one slim copy per job in
@@ -265,10 +263,18 @@ def page_frame(admitted: DataFrame, salt_pages: bool = True) -> DataFrame:
     # stage to a handful of partitions (page blobs compress well), but the
     # downstream cost is per-row Python in the kernel UDF, not bytes — a
     # coalesced exchange serializes the pipeline's only expensive stage.
-    # 4x core count keeps every core busy with skew headroom.
-    spark = pages.sparkSession
-    width = spark.sparkContext.defaultParallelism * 4
-    return pages.repartition(width, "doc_id", "page")
+    return pages.repartition(_kernel_width(pages.sparkSession), "doc_id", "page")
+
+
+def _kernel_width(spark) -> int:
+    """Task count of the kernel UDF stage: one task per core. Each Python
+    task pays a fixed set-up (~0.3 s measured on a 4-core host against
+    8-23 ms for a JVM task): PySpark's worker calls
+    ``importlib.invalidate_caches()`` per task, which on Python 3.11
+    re-reads pyspark.zip's directory once per zipimporter. Per-doc kernel
+    cost is bounded by pages per doc (at most 50 pages of ~0.2 ms), so
+    further waves buy no skew headroom — only more set-ups."""
+    return spark.sparkContext.defaultParallelism
 
 
 def orientation_frame(docs: DataFrame) -> DataFrame:
@@ -531,6 +537,51 @@ def doc_stats_frame(page_entries: DataFrame) -> DataFrame:
     )
 
 
+def incremental_outputs(
+    spark,
+    docs: DataFrame,
+    winners: DataFrame | None,
+    job_ts: str = JOB_TS,
+    persist: bool = True,
+    track: list | None = None,
+) -> dict[str, DataFrame]:
+    """The three per-doc outputs (extracted_spans, extracted, doc_stats) —
+    everything a bucketed lineage job writes. ``winners`` is the slim
+    admission decision ``(doc_id, eff_vendor, ...)`` to join onto ``docs``;
+    None when ``docs`` are already admitted. ``job_ts``, ``persist`` and
+    ``track`` as in run_pipeline."""
+    if winners is not None:
+        # One span-bytes shuffle total: pin the PAYLOAD side of the
+        # admission join to hash partitioning on doc_id at the kernel's
+        # width, so the page explode happens in place and the kernel UDF
+        # inherits it. Skew moves from page- to doc-granularity, bounded
+        # by pages per doc. The slim winner side is NOT manually
+        # repartitioned: the join plans its own exchange to match the
+        # payload's partitioning when it sort-merges, and skips it
+        # entirely when AQE broadcasts the winner set — a manual
+        # repartition would pay that exchange even in the broadcast case.
+        big = docs.repartition(_kernel_width(spark), "doc_id")
+        admitted = big.join(winners.select("doc_id", "eff_vendor"), "doc_id").select(
+            "doc_id", F.col("eff_vendor").alias("vendor"), "file_hash", "spans"
+        )
+        pages = page_frame(admitted, salt_pages=False)
+    else:
+        pages = page_frame(docs)
+    page_entries = page_entries_frame(pages)
+    if persist:
+        page_entries = page_entries.persist()
+    entries = entries_frame(page_entries)
+    if persist:
+        entries = entries.persist()
+    if persist and track is not None:
+        track.extend([page_entries, entries])
+    return {
+        "extracted_spans": extracted_spans_frame(entries),
+        "extracted": extracted_frame(entries, job_ts),
+        "doc_stats": doc_stats_frame(page_entries),
+    }
+
+
 def run_pipeline(
     spark,
     docs: DataFrame,
@@ -538,9 +589,9 @@ def run_pipeline(
     persist: bool = True,
     admit: bool = True,
     track: list | None = None,
-    winners: DataFrame | None = None,
 ) -> dict[str, DataFrame]:
-    """Full job. Returns the four output DataFrames; callers persist with
+    """Full job: ``incremental_outputs`` plus the corpus-global master log.
+    Returns the four output DataFrames; callers persist with
     .write.partitionBy(...).parquet(...) (Iceberg writeTo on a real cluster).
 
     ``persist`` caches the two frames downstream of the Arrow kernel — all
@@ -556,63 +607,22 @@ def run_pipeline(
     run it corpus-globally (admission is a first-wins window over the
     *whole* input, so it must not be applied per resume subset).
 
-    ``winners`` (with ``admit=True``) supplies a precomputed slim winner
-    set ``(doc_id, eff_vendor, file_hash)`` — lineage.run_with_lineage
-    persists one and reuses it here, for ``doc_meta`` and for the bucket
-    listing, so the routing regexes run exactly once per job instead of
-    once per derivation. When absent, run_pipeline builds and (with
-    ``persist``) persists its own: the master log's doc-level meta then
-    reads three slim columns from cache instead of replaying the
-    admission join over the span payload — at round 2 that replay made
-    report_master_log 4.4x slower than the pipeline outputs that reused
-    the persisted kernel frames."""
+    With ``persist``, the slim winner set is persisted too: the master
+    log's doc-level meta then reads three slim columns from cache instead
+    of replaying the admission join over the span payload — at round 2
+    that replay made report_master_log 4.4x slower than the pipeline
+    outputs that reused the persisted kernel frames."""
     from .reports import master_log_frame
 
+    winners = None
+    doc_meta = docs.select("doc_id", "vendor", "file_hash")
     if admit:
-        # One span-bytes shuffle total: pin the PAYLOAD side of the
-        # admission join to hash partitioning on doc_id (width = the same
-        # 4x-cores the page salt used), so the page explode happens in
-        # place and the kernel UDF inherits the pinned width. Skew moves
-        # from page- to doc-granularity, bounded by pages-per-doc
-        # (GIANT_PAGES * ~ms of kernel time ≈ 100 ms — noise at task
-        # scale). The slim winner side is NOT manually repartitioned: the
-        # join plans its own exchange to match the payload's partitioning
-        # when it sort-merges, and skips it entirely when AQE broadcasts
-        # the winner set — a manual repartition would pay that exchange
-        # even in the broadcast case.
-        width = spark.sparkContext.defaultParallelism * 4
-        if winners is None:
-            winners = admission_meta(docs, track=track)
-            if persist:
-                winners = winners.persist()
-                if track is not None:
-                    track.append(winners)
-        big = docs.repartition(width, "doc_id")
-        admitted = big.join(winners.select("doc_id", "eff_vendor"), "doc_id").select(
-            "doc_id", F.col("eff_vendor").alias("vendor"), "file_hash", "spans"
-        )
-        # Doc-level meta for the master log: three slim columns straight off
-        # the (persisted) winner set — never via the span-payload join above.
-        doc_meta = winners.select(
-            "doc_id", F.col("eff_vendor").alias("vendor"), "file_hash"
-        )
-        pages = page_frame(admitted, salt_pages=False)
-    else:
-        admitted = docs
-        doc_meta = admitted.select("doc_id", "vendor", "file_hash")
-        pages = page_frame(admitted)
-    page_entries = page_entries_frame(pages)
-    if persist:
-        page_entries = page_entries.persist()
-    entries = entries_frame(page_entries)
-    if persist:
-        entries = entries.persist()
-    if persist and track is not None:
-        track.extend([page_entries, entries])
-    extracted = extracted_frame(entries, job_ts)
-    return {
-        "extracted_spans": extracted_spans_frame(entries),
-        "extracted": extracted,
-        "doc_stats": doc_stats_frame(page_entries),
-        "master_log": master_log_frame(extracted, doc_meta, job_ts, track=track),
-    }
+        winners = admission_meta(docs, track=track)
+        if persist:
+            winners = winners.persist()
+            if track is not None:
+                track.append(winners)
+        doc_meta = winners.select("doc_id", F.col("eff_vendor").alias("vendor"), "file_hash")
+    out = incremental_outputs(spark, docs, winners, job_ts=job_ts, persist=persist, track=track)
+    out["master_log"] = master_log_frame(out["extracted"], doc_meta, job_ts, track=track)
+    return out

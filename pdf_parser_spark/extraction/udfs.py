@@ -1,10 +1,11 @@
 """Arrow-vectorized extraction UDF.
 
-The single Python crossing of the pipeline: one scalar pandas UDF that runs
-the per-page kernel (pdf_parser_spark.kernel) over Arrow batches of page
-rows. Everything upstream (span explode, page grouping, ordering) and
-downstream (fan-out, hashing, dedup, sequencing, unpivot, aggregation) is
-JVM-side DataFrame algebra.
+The kernel's Python crossing: one scalar pandas UDF that runs the per-page
+kernel (pdf_parser_spark.kernel) over Arrow batches of page rows. Everything
+upstream (span explode, page grouping, ordering) and downstream (fan-out,
+hashing, dedup, sequencing, unpivot, aggregation) is JVM-side DataFrame
+algebra; the pipeline's only other crossing is routing
+(vendor_detect.route_columns), in the same shape.
 
 Python ``re`` inside the kernel is a fidelity requirement, not a shortcut:
 the reference's first-non-None-capture-group selection over alternations and

@@ -44,6 +44,7 @@ Layout::
 
 from __future__ import annotations
 
+import logging
 import os
 import time
 
@@ -51,8 +52,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import sink
-from .extraction import run_pipeline
-from .extraction.pipeline import _routed_ranked
+from .extraction.pipeline import _routed_ranked, incremental_outputs
 
 INCREMENTAL_TABLES = ("extracted_spans", "extracted", "doc_stats", "doc_meta")
 OUTPUT_TABLES = INCREMENTAL_TABLES + ("master_log",)
@@ -61,6 +61,10 @@ _LINEAGE_SCHEMA = (
     "job_id string, bucket int, n_docs long, n_entries long, n_spans long, "
     "status string, completed_ts double"
 )
+
+_METRICS_READ_SCHEMA = "doc_id string, bucket int"
+
+log = logging.getLogger(__name__)
 
 
 def _bucket(doc_id_col, n_buckets: int):
@@ -88,11 +92,6 @@ def completed_buckets(spark: SparkSession, root: str) -> set[int]:
     return {r["bucket"] for r in rows}
 
 
-
-def _dbg(msg):
-    import sys, time as _t
-    if os.environ.get("SPARK_GRAFT_DEBUG_PHASES"):
-        print(f"[lineage-dbg {_t.time():.1f}] {msg}", file=sys.stderr, flush=True)
 
 def run_with_lineage(
     spark: SparkSession,
@@ -131,8 +130,9 @@ def run_with_lineage(
     # Slim admission, computed ONCE: routing columns + first-wins window
     # over (doc_id, eff_vendor, file_hash) only — no span payloads. The
     # persisted handle feeds the bucket listing, doc_meta, and the pipeline
-    # join (run_pipeline's winners=), so the routing regexes run a single
-    # time per job. It is O(n_docs) slim rows — tiny next to span bytes.
+    # join, so routing runs a single time per job. It is O(n_docs) slim
+    # rows — tiny next to span bytes. Every persisted frame is released
+    # on the way out, whether the job finished or raised.
     cached: list = []
     slim = (
         _routed_ranked(docs, track=cached)
@@ -143,163 +143,74 @@ def run_with_lineage(
     if done:
         slim = slim.where(~F.col("bucket").isin(list(done)))
     slim = slim.persist()
-
-    _dbg("slim collect start")
-    ran = sorted(r["bucket"] for r in slim.select("bucket").distinct().collect())
-    _dbg("slim collect done")
-    if not ran:
-        # Most-derived first: unpersisting a BASE entry first makes
-        # CacheManager.recacheByCondition try to REBUILD every dependent
-        # cache entry against the raw (un-substituted) plan — on the
-        # admission DAG that rebuild re-analyzes a multiplicatively
-        # inlined tree and ground for minutes / OOMed the driver
-        # (jstack: Dataset.unpersist -> tryRebuildCacheEntry ->
-        # transformDown over the routing projections). Dropping
-        # dependents first leaves nothing to rebuild.
-        slim.unpersist()
-        for f in reversed(cached):
-            f.unpersist()
-        return {"job_id": job_id, "buckets_run": 0, "buckets_skipped": len(done)}
-
-    # doc_meta is written FIRST, and it is the ONLY write whose plan may
-    # carry the admission DAG. V1 write commands do NOT substitute cached
-    # plans (IgnoreCachedData), so unlike every action on these frames, a
-    # write re-optimizes the RAW admission plan: the ranking join plans
-    # the routing projections into BOTH sides, and with the resume
-    # anti-join underneath, PushDownPredicates alias-substitutes the
-    # admission filters down through the staged routing projections — the
-    # predicate grows multiplicatively (pre_reason inlines the score
-    # arithmetic, which inlines the guarded counts, which inline the
-    # framed-text HOFs): one doc_meta write burned 60+ s of pure Catalyst
-    # time and gigabytes of canonicalization garbage on a 120-doc corpus
-    # (RuleExecutor.dumpTimeSpent: PushDownPredicates 63 s of a 64 s
-    # optimize). Two defenses:
-    #   1. PushDownPredicates is excluded for exactly this write (the
-    #      predicates all test COMPUTED columns — pushdown buys nothing);
-    #   2. every OTHER write (and run_pipeline's winners side) reads the
-    #      just-written doc_meta parquet back instead of referencing the
-    #      slim plan, so the admission DAG appears in exactly one write
-    #      command per job instead of four.
-    prev_excluded = spark.conf.get("spark.sql.optimizer.excludedRules", None)
-    pdp = "org.apache.spark.sql.catalyst.optimizer.PushDownPredicates"
-    spark.conf.set(
-        "spark.sql.optimizer.excludedRules",
-        f"{prev_excluded},{pdp}" if prev_excluded else pdp,
-    )
-    # Constraint propagation is the second raw-plan hazard: with the
-    # admission filters above the first-wins join, InferFiltersFromConstraints
-    # materializes EqualNullSafe(alias, expr) constraint sets over the
-    # routing projections' aliases — combinatorial in the alias count and
-    # gigabytes of canonicalized copies on this plan (heap-OOMed an 8g
-    # driver on a 120-doc corpus). The inferred IsNotNull filters buy the
-    # write plans nothing.
-    prev_cp = spark.conf.get("spark.sql.constraintPropagation.enabled", None)
-    spark.conf.set("spark.sql.constraintPropagation.enabled", "false")
-
-    def _restore_optimizer_confs():
-        if prev_excluded is None:
-            spark.conf.unset("spark.sql.optimizer.excludedRules")
-        else:
-            spark.conf.set("spark.sql.optimizer.excludedRules", prev_excluded)
-        if prev_cp is None:
-            spark.conf.unset("spark.sql.constraintPropagation.enabled")
-        else:
-            spark.conf.set("spark.sql.constraintPropagation.enabled", prev_cp)
-
-    # The exclusion scope covers EXACTLY the doc_meta write — the only
-    # plan that carries the raw admission DAG. Everything after it
-    # (winners parquet read, kernel-pipeline writes) runs with the full
-    # optimizer, so parquet predicate pushdown + partition pruning stay
-    # live for the bucket filters on file relations — at 100 TB the
-    # winners read below prunes to the ran-bucket partitions only
-    # because PushDownPredicates is back. The kernel writes' plans do
-    # carry the resume anti-join under the page-assembly filters, but
-    # without the routing projections underneath it the pushdown is
-    # linear, not multiplicative (measured: lineage suite 96.5 s both
-    # ways, sf0.01 job wall unchanged).
+    cached.append(slim)
     try:
+        ran = sorted(r["bucket"] for r in slim.select("bucket").distinct().collect())
+        log.debug("job %s: %d buckets to run, %d done", job_id, len(ran), len(done))
+        if not ran:
+            return {"job_id": job_id, "buckets_run": 0, "buckets_skipped": len(done)}
+
+        # Exactly-once is preserved with doc_meta leading: a crash after
+        # this write but before a bucket's lineage row leaves the bucket
+        # un-lineaged, so the next resume ignores its doc_meta rows (the
+        # known-hash anti-set filters to COMPLETED buckets only) and the
+        # dynamic overwrite rewrites them.
         sink.write_partitioned(
-            slim.select(
-                "doc_id",
-                F.col("eff_vendor").alias("vendor"),
-                "file_hash",
-                "bucket",
-            ),
+            slim.select("doc_id", F.col("eff_vendor").alias("vendor"), "file_hash", "bucket"),
             root,
             "doc_meta",
             "bucket",
         )
-        _dbg("doc_meta write done")
-    finally:
-        _restore_optimizer_confs()
+        log.debug("doc_meta written")
+        out = incremental_outputs(spark, docs, slim, track=cached)
+        for name, df in out.items():
+            sink.write_partitioned(
+                df.withColumn("bucket", _bucket(F.col("doc_id"), n_buckets)), root, name, "bucket"
+            )
+            log.debug("%s written", name)
 
-    # Exactly-once is preserved with doc_meta leading: a crash after
-    # this write but before a bucket's lineage row leaves the bucket
-    # un-lineaged, so the next resume ignores its doc_meta rows (the
-    # known-hash anti-set filters to COMPLETED buckets only) and the
-    # dynamic overwrite rewrites them.
-    winners = (
-        sink.read(spark, root, "doc_meta")
-        .where(F.col("bucket").isin(ran))
-        .select("doc_id", F.col("vendor").alias("eff_vendor"), "file_hash")
-    )
-    out = run_pipeline(spark, docs, track=cached, winners=winners)
-    to_write = {
-        name: out[name].withColumn(
-            "bucket", _bucket(F.col("doc_id"), n_buckets)
-        )
-        for name in ("extracted_spans", "extracted", "doc_stats")
-    }
-    for name, df in to_write.items():
-        _dbg(f"write {name} start")
-        sink.write_partitioned(df, root, name, "bucket")
-        _dbg(f"write {name} done")
-
-    # Metrics per bucket from the materialized outputs (reads parquet back —
-    # cheap, and guarantees metrics describe what was actually written).
-    _dbg("metrics start")
-    spans = sink.read(spark, root, "extracted_spans")
-    extracted = sink.read(spark, root, "extracted")
-    metrics = (
-        spans.where(F.col("bucket").isin(ran))
-        .groupBy("bucket")
-        .agg(
-            F.countDistinct("doc_id").alias("n_docs"),
-            F.count(F.lit(1)).alias("n_spans"),
-        )
-        .join(
-            extracted.where(F.col("bucket").isin(ran))
+        # Metrics per bucket from the materialized outputs (reads parquet
+        # back — cheap, and guarantees metrics describe what was written).
+        # Naming the two columns read skips a schema-inference job per table.
+        spans = sink.read(spark, root, "extracted_spans", schema=_METRICS_READ_SCHEMA)
+        extracted = sink.read(spark, root, "extracted", schema=_METRICS_READ_SCHEMA)
+        metrics = (
+            spans.where(F.col("bucket").isin(ran))
             .groupBy("bucket")
-            .agg(F.count(F.lit(1)).alias("n_entries")),
-            "bucket",
-            "left",
+            .agg(
+                F.countDistinct("doc_id").alias("n_docs"),
+                F.count(F.lit(1)).alias("n_spans"),
+            )
+            .join(
+                extracted.where(F.col("bucket").isin(ran))
+                .groupBy("bucket")
+                .agg(F.count(F.lit(1)).alias("n_entries")),
+                "bucket",
+                "left",
+            )
         )
-    )
-    # Buckets that had input docs but produced zero spans still complete.
-    all_ran = spark.createDataFrame([(b,) for b in ran], "bucket int")
-    now = time.time()
-    sink.append(
-        all_ran.join(metrics, "bucket", "left").select(
-            F.lit(job_id).alias("job_id"),
-            "bucket",
-            F.coalesce("n_docs", F.lit(0)).cast("long").alias("n_docs"),
-            F.coalesce("n_entries", F.lit(0)).cast("long").alias("n_entries"),
-            F.coalesce("n_spans", F.lit(0)).cast("long").alias("n_spans"),
-            F.lit("COMPLETED").alias("status"),
-            F.lit(now).alias("completed_ts"),
-        ),
-        root,
-        "lineage",
-    )
-    _dbg("metrics done; unpersisting")
-    # slim (most derived) first, then cached in reverse creation order —
-    # see the no-work branch above for why base-first unpersist is a
-    # driver-side OOM on this DAG.
-    slim.unpersist()
-    for f in reversed(cached):
-        f.unpersist()
-    _dbg("returning")
-    return {"job_id": job_id, "buckets_run": len(ran), "buckets_skipped": len(done)}
+        # Buckets that had input docs but produced zero spans still complete.
+        all_ran = spark.createDataFrame([(b,) for b in ran], "bucket int")
+        now = time.time()
+        sink.append(
+            all_ran.join(metrics, "bucket", "left").select(
+                F.lit(job_id).alias("job_id"),
+                "bucket",
+                F.coalesce("n_docs", F.lit(0)).cast("long").alias("n_docs"),
+                F.coalesce("n_entries", F.lit(0)).cast("long").alias("n_entries"),
+                F.coalesce("n_spans", F.lit(0)).cast("long").alias("n_spans"),
+                F.lit("COMPLETED").alias("status"),
+                F.lit(now).alias("completed_ts"),
+            ),
+            root,
+            "lineage",
+        )
+        log.debug("lineage appended")
+        return {"job_id": job_id, "buckets_run": len(ran), "buckets_skipped": len(done)}
+    finally:
+        # Most-derived first, so no unpersist re-caches a dependent.
+        for f in reversed(cached):
+            f.unpersist()
 
 
 def read_output(

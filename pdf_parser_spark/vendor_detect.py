@@ -12,12 +12,13 @@ Transcribes the reference's vendor-detection scoring
   * 0.4 minimum-confidence threshold (:190);
   * detection budget = the first 3 pages' text, framed per page
     (:21-52 — the OCR fallback for short text layers is not consulted
-    here: media spans are OCR *candidates* in the span model, and
-    detection must stay a pure JVM column expression at scale).
+    here: media spans are OCR *candidates* in the span model).
 
-Both implementations live here — ``detect_vendor_from_text`` (pure Python,
-the oracle spec) and ``route_columns`` (Spark column expressions, zero
-Python on the hot path) — so they cannot drift independently.
+One implementation: ``route_doc`` (pure Python) is the spec, the oracle
+calls it directly, and ``route_columns`` runs it on Spark through one Arrow
+``pandas_udf`` over each doc's label and text spans — the same shape as the
+kernel UDF (extraction/udfs.py). Python ``re`` is the only regex dialect
+routing is written in.
 
 Routing semantics (the reference's upload flow, views.py:154-240 +
 views/core.py:622-668, re-expressed for an unattended table-scale run):
@@ -39,16 +40,19 @@ views/core.py:622-668, re-expressed for an unattended table-scale run):
 Documented deviations (determinism / span model): detected→config identity
 uses the explicit ``DETECTED_TO_CONFIG`` map instead of the reference's
 substring-in-display-name fallback (:296-300); the page framing joins
-non-empty pages with a fixed separator instead of concat-then-strip so the
-Python and JVM forms agree byte-for-byte on arbitrary span content.
+non-empty pages with a fixed separator instead of concat-then-strip, so the
+detection text is a pure function of the span list.
 """
 
 from __future__ import annotations
 
 import re
 
-from pyspark.sql import Column, DataFrame
+import pandas as pd
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.functions import pandas_udf
+from pyspark.sql.types import DoubleType, StringType, StructField, StructType
 
 # vendor_detection.py:77-148, order preserved (ties resolve first-declared).
 VENDOR_PATTERNS: dict[str, dict] = {
@@ -139,12 +143,9 @@ def detect_vendor_from_text(text: str) -> tuple[str | None, float]:
     if not text:
         return None, 0.0
     text_lower = text.lower()
-    # Deviation (exactness across engines): length normalization uses the
-    # LOWERED text's length. The reference uses len(text); they differ only
-    # for case-folding-expanding chars (e.g. İ → i̇), none of which occur
-    # in any indicator domain — and the Spark form must avoid a second
-    # evaluation of the (expensive, interpreted) detection-text expression
-    # just to measure the un-lowered length.
+    # Deviation: length normalization uses the LOWERED text's length. The
+    # reference uses len(text); they differ only for case-folding-expanding
+    # chars (e.g. İ → i̇), none of which occur in any indicator domain.
     tlen = len(text_lower)
     scores: dict[str, float] = {}
     for vendor_id, config in VENDOR_PATTERNS.items():
@@ -200,265 +201,35 @@ def route_doc(doc: dict) -> dict:
     }
 
 
-# --- Spark-first implementation -------------------------------------------------
+# --- Spark form: the spec through one Arrow UDF ------------------------------
+
+ROUTE_TYPE = StructType(
+    [
+        StructField("eff_vendor", StringType()),
+        StructField("detected", StringType()),
+        StructField("confidence", DoubleType()),
+        StructField("pre_reason", StringType()),
+    ]
+)
 
 
-def _jvm_rx(p: str) -> str:
-    """Python regex → JVM regex with case-insensitivity inlined. The
-    patterns travel via F.lit (literal column values), NOT through the SQL
-    parser, so backslashes must stay single — doubling them (as F.expr
-    embedding would require) turns \\s into a literal-backslash class."""
-    return "(?i)" + p
-
-
-_GUARD_SPLIT = re.compile(r"\\s[+*]|&\?")
-_GUARD_META = re.compile(r"[\\.^$|?*+()\[\]{}]")
-
-
-def _literal_guard(p: str) -> list[str] | None:
-    """The whitespace-free literals every match of ``p`` must ALL contain,
-    lowercased — or None when the pattern has constructs (alternation,
-    optional atoms beyond ``&?``) under which no literal set is implied.
-
-    Used to gate each regexp_count behind codegen ``contains`` ANDs: regex
-    matching is the dominant per-row cost of the routing scan (measured
-    ~4 s of a ~12 s sf20 scan at 16 cores), and contains(lit) is a plain
-    byte scan. Exactness: any guard literal absent implies the regex
-    cannot match, so the guarded count is identically the unguarded one.
-    Each literal is whitespace-free, so it also cannot straddle a span
-    join or a page-frame header — a match inside the framed detection
-    text implies every literal appears inside a single span's text."""
-    parts = [t for t in _GUARD_SPLIT.split(p) if t]
-    if not parts or any(_GUARD_META.search(t) or re.search(r"\s", t) for t in parts):
-        return None
-    return [t.lower() for t in parts]
-
-
-def sorted_text_spans_col(spans_col: str = "spans") -> Column:
-    """(offset, text) structs of the text spans, offset-sorted — the shared
-    input of the detection-text framing. Callers should materialize this
-    ONCE as a named column: HOF trees run interpreted with no
-    common-subexpression elimination, so every *expression* reference
-    re-filters and re-sorts the whole span array per row."""
-    return F.array_sort(
-        F.transform(
-            F.filter(F.col(spans_col), lambda s: s["kind"] == "text"),
-            lambda s: F.struct(s["offset"].alias("offset"), s["text"].alias("text")),
-        )
-    )
-
-
-def framed_text_col(tspans: Column) -> Column:
-    """First-3-pages framed detection text from a PREPARED (named-column)
-    sorted text-span array — the JVM form of ``detection_text``'s framing.
-    ``tspans`` is an attribute reference, so the per-page passes below scan
-    a materialized array instead of re-deriving it."""
-    # tspans is offset-sorted, so page ids arrive nondecreasing and
-    # array_distinct alone yields them sorted — no extra sort pass.
-    pages = F.slice(
-        F.array_distinct(F.transform(tspans, lambda s: (s["offset"] / 1000).cast("int"))),
-        1,
-        DETECTION_MAX_PAGES,
-    )
-
-    def page_text(p):
-        return F.array_join(
-            F.transform(
-                F.filter(tspans, lambda s: (s["offset"] / 1000).cast("int") == p),
-                lambda s: s["text"],
-            ),
-            "\n",
-        )
-
-    # (page, ptxt) pairs; pages whose joined text is '' are skipped exactly
-    # like the reference's `if text:` guard (extract_pdf_text:49).
-    pairs = F.filter(
-        F.transform(pages, lambda p: F.struct(p.alias("p"), page_text(p).alias("t"))),
-        lambda x: x["t"] != "",
-    )
-    pieces = F.transform(
-        pairs,
-        lambda x: F.concat(
-            F.lit("--- Page "), (x["p"] + 1).cast("string"), F.lit(" ---\n"), x["t"]
-        ),
-    )
-    return F.array_join(pieces, "\n\n")
-
-
-def detection_text_col(spans_col: str = "spans") -> Column:
-    """JVM HOF form of ``detection_text`` — no shuffle, no Python. Single
-    self-contained expression; prefer sorted_text_spans_col + framed_text_col
-    staged as named columns on hot paths (route_columns does)."""
-    return framed_text_col(sorted_text_spans_col(spans_col))
-
-
-def _map_detected(detected: Column) -> Column:
-    out = F.lit(None).cast("string")
-    for det, cfg_id in DETECTED_TO_CONFIG.items():
-        out = F.when(detected == det, F.lit(cfg_id)).otherwise(out)
-    return out
+@pandas_udf(ROUTE_TYPE)
+def _route_udf(vendor: pd.Series, text_spans: pd.Series) -> pd.DataFrame:
+    """(vendor label, the doc's text spans) → ``route_doc``'s decision."""
+    rows = [
+        route_doc({"vendor": v, "spans": [] if sp is None else sp})
+        for v, sp in zip(vendor, text_spans)
+    ]
+    return pd.DataFrame(rows, columns=ROUTE_TYPE.fieldNames())
 
 
 def route_columns(docs: DataFrame) -> DataFrame:
-    """Adds eff_vendor / detected / confidence / pre_reason — the Spark form
-    of ``route_doc``. Staged as separate projections with NAMED intermediate
-    columns (detection text → lowered text/length → per-pattern match
-    counts → scores → decision): Spark columns are expression *trees*, so
-    referencing an unnamed detection-text expression from ~30 regexp_count
-    calls would copy its whole HOF subtree 30× (measured: a 17 MB task
-    binary and minutes of analysis time on a 400-doc corpus). Named columns
-    keep every stage computed once; Catalyst's CollapseProject leaves
-    multi-referenced non-cheap aliases alone, so the plan stays linear."""
-    from .configs import VENDOR_CONFIGS
-
-    # Prefilter: token-contains scan over the WHOLE doc's text spans (cheap
-    # concat, no page logic). Every positive pattern implies one literal
-    # guard token (_literal_guard), the detection text is a subset of this
-    # text (first 3 pages; its page framing contains no guard token and a
-    # whitespace-free token can't straddle a join boundary), so a negative
-    # prefilter proves detection returns (None, 0.0) — the expensive
-    # framed-text assembly + 30 per-pattern scans run only on the ~quarter
-    # of docs that mention a brand at all. An OR of per-pattern
-    # contains-AND groups instead of one combined rlike alternation: the
-    # backtracking regex alternation tried every branch per position
-    # (measured ~3 s of the sf20 scan at 16 cores); byte-scan contains
-    # are codegen, short-circuit, and cheaper. A prefilter
-    # false positive only wastes one framed-text evaluation (detection
-    # still scores 0 → (None, 0.0), same as the oracle); a pattern with no
-    # derivable guard falls back into a residual rlike alternation so the
-    # prefilter can never under-select.
-    guard_groups: list[list[str]] = []
-    unguarded: list[str] = []
-    for cfg in VENDOR_PATTERNS.values():
-        for p, _w in cfg["patterns"]:
-            g = _literal_guard(p)
-            if g is None:
-                unguarded.append(p)
-            elif g not in guard_groups:
-                guard_groups.append(g)
-    whole_text = F.lower(
-        F.concat_ws(
-            " ",
-            F.transform(
-                F.filter(F.col("spans"), lambda s: s["kind"] == "text"),
-                lambda s: s["text"],
-            ),
-        )
+    """Adds eff_vendor / detected / confidence / pre_reason — ``route_doc``
+    per row. Only the text spans cross into Python (detection reads
+    nothing else); the struct result is selected once and expanded in a
+    second projection so the UDF is planned once, not once per field."""
+    cols = docs.columns
+    text_spans = F.filter(F.col("spans"), lambda s: s["kind"] == "text")
+    return docs.select(*cols, _route_udf("vendor", text_spans).alias("_r")).select(
+        *cols, *(F.col(f"_r.{f}").alias(f) for f in ROUTE_TYPE.fieldNames())
     )
-    d = docs.select("*", whole_text.alias("_wt"))
-    pre = None
-    for group in guard_groups:
-        c = None
-        for tok in group:
-            t = F.col("_wt").contains(F.lit(tok))
-            c = t if c is None else c & t
-        pre = c if pre is None else pre | c
-    if unguarded:
-        rx = "(?i)(?:" + "|".join(unguarded) + ")"
-        c = F.col("_wt").rlike(rx)
-        pre = c if pre is None else pre | c
-    d = d.withColumn("_pre", pre).drop("_wt")
-    # Sorted text spans materialize ONCE (named column, own projection);
-    # the framing's per-page passes then scan that array instead of
-    # re-filtering + re-sorting the raw spans up to 4x per row. Empty for
-    # prefilter-negative rows, so the sort runs only where detection will.
-    d = d.select(
-        "*",
-        F.when(F.col("_pre"), sorted_text_spans_col())
-        .otherwise(F.array().cast("array<struct<offset:int,text:string>>"))
-        .alias("_tspans"),
-    )
-    d = d.withColumn(
-        "_dt", F.when(F.col("_pre"), framed_text_col(F.col("_tspans"))).otherwise(F.lit(""))
-    )
-    # ONE reference to _dt per projection level: the detection-text HOF tree
-    # runs interpreted (no codegen, no common-subexpression elimination), and
-    # a projection referencing _dt twice evaluates the whole tree twice per
-    # row (measured 2x). _tlen therefore derives from _lt — matching the
-    # Python spec, which normalizes by the lowered length.
-    d = d.select("*", F.lower(F.col("_dt")).alias("_lt"))
-    d = d.select("*", F.length(F.col("_lt")).cast("double").alias("_tlen"))
-
-    # Stage 1: every pattern's match count as its own column (one
-    # projection), each regexp_count gated behind a codegen contains() on
-    # the pattern's implied literal (_literal_guard): contains == false
-    # proves count == 0, so the guarded column is identically the unguarded
-    # one, and the regex engine runs only where the token actually occurs
-    # (for 3/4 of rows _lt is "" and every guard fails without touching a
-    # matcher — measured ~4 s → sub-second for this stage at sf20/16c).
-    def _guarded_count(pattern: str) -> Column:
-        cnt = F.regexp_count(F.col("_lt"), F.lit(_jvm_rx(pattern))).cast("double")
-        g = _literal_guard(pattern)
-        if g is None:
-            return cnt
-        guard = None
-        for tok in g:
-            t = F.col("_lt").contains(F.lit(tok))
-            guard = t if guard is None else guard & t
-        return F.when(guard, cnt).otherwise(F.lit(0.0))
-
-    counts = []
-    for vendor_id, config in VENDOR_PATTERNS.items():
-        for i, (pattern, _w) in enumerate(config["patterns"]):
-            counts.append(_guarded_count(pattern).alias(f"_m_{vendor_id}_{i}"))
-        for i, neg in enumerate(config["negative_patterns"]):
-            counts.append(_guarded_count(neg).alias(f"_g_{vendor_id}_{i}"))
-    d = d.select("*", *counts)
-
-    # Stage 2: scores (pure arithmetic over attribute refs — cheap to copy).
-    scores: dict[str, Column] = {}
-    helper_cols = ["_pre", "_tspans", "_dt", "_lt", "_tlen"]
-    for vendor_id, config in VENDOR_PATTERNS.items():
-        mc = None
-        raw = None
-        for i, (_pattern, weight) in enumerate(config["patterns"]):
-            n = F.col(f"_m_{vendor_id}_{i}")
-            helper_cols.append(f"_m_{vendor_id}_{i}")
-            mc = n if mc is None else mc + n
-            term = F.lit(weight) * n
-            raw = term if raw is None else raw + term
-        for i, _neg in enumerate(config["negative_patterns"]):
-            raw = raw - F.lit(0.5) * F.col(f"_g_{vendor_id}_{i}")
-            helper_cols.append(f"_g_{vendor_id}_{i}")
-        boosted = F.when(mc > 1, raw * F.lit(1.2)).otherwise(raw)
-        lf = F.when(
-            F.col("_tlen") > 1000, F.least(F.lit(1.0), F.lit(1000.0) / F.col("_tlen"))
-        ).otherwise(F.lit(1.0))
-        scores[vendor_id] = F.when(mc > 0, F.least(boosted * lf, F.lit(1.0)))
-    d = d.select("*", *[scores[v].alias(f"_s_{v}") for v in scores])
-    helper_cols += [f"_s_{v}" for v in scores]
-
-    # Stage 3: argmax (first-declared wins ties), threshold, routing decision.
-    best = F.greatest(*[F.col(f"_s_{v}") for v in scores])  # greatest() skips NULLs
-    pick = F.lit(None).cast("string")
-    for vendor_id in reversed(list(scores)):
-        pick = F.when(F.col(f"_s_{vendor_id}") == best, F.lit(vendor_id)).otherwise(pick)
-    d = d.withColumn("_best", best).withColumn(
-        "detected", F.when(F.col("_best") >= MIN_CONFIDENCE, pick)
-    ).withColumn(
-        "confidence",
-        F.when(F.col("_best") >= MIN_CONFIDENCE, F.col("_best")).otherwise(F.lit(0.0)),
-    )
-    helper_cols.append("_best")
-
-    mapped = _map_detected(F.col("detected"))
-    eff = F.when(
-        (F.col("vendor") == "") & F.col("detected").isNotNull() & mapped.isNotNull(),
-        mapped,
-    ).otherwise(F.col("vendor"))
-    d = d.withColumn("eff_vendor", eff)
-    mismatch = (
-        (F.col("vendor") != "")
-        & F.col("detected").isNotNull()
-        & (F.col("confidence") >= MISMATCH_CONFIDENCE)
-        & (F.coalesce(mapped, F.lit("\x00")) != F.col("vendor"))
-    )
-    no_config = ~F.col("eff_vendor").isin(list(VENDOR_CONFIGS))
-    d = d.withColumn(
-        "pre_reason",
-        F.when(mismatch, F.lit("detection_mismatch"))
-        .when(no_config, F.lit("no_vendor_config"))
-        .otherwise(F.lit(None).cast("string")),
-    )
-    # Helper columns must not survive into the admission window's shuffle.
-    return d.drop(*helper_cols)

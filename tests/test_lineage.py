@@ -35,6 +35,11 @@ def _rows(spark, root, name):
     )
 
 
+def _persisted_rdd_ids(spark) -> set:
+    m = spark.sparkContext._jsc.getPersistentRDDs()
+    return {int(k) for k in m.keySet().toArray()}
+
+
 def test_single_shot_then_noop_resume(spark, docs_df, tmp_path):
     root = str(tmp_path / "out")
     s1 = lineage.run_with_lineage(spark, docs_df, root, "job1", N_BUCKETS)
@@ -53,16 +58,50 @@ def test_single_shot_then_noop_resume(spark, docs_df, tmp_path):
 
 
 
-def test_run_leaves_session_overwrite_mode_untouched(spark, docs_df, tmp_path):
-    """Dynamic partition overwrite is scoped to each write: a run must not
-    change the session's partitionOverwriteMode under other queries."""
+def test_run_leaves_session_overwrite_mode_untouched(spark, docs_df, tmp_path, monkeypatch):
+    """No session-global side effects: a run sets and unsets no session
+    conf (dynamic partition overwrite is scoped to each write), so it
+    cannot change what other queries on the session see."""
+    calls = []
+    real_set, real_unset = spark.conf.set, spark.conf.unset
+
+    def spy_set(key, value):
+        calls.append(("set", key))
+        return real_set(key, value)
+
+    def spy_unset(key):
+        calls.append(("unset", key))
+        return real_unset(key)
+
     key = "spark.sql.sources.partitionOverwriteMode"
     spark.conf.set(key, "STATIC")
     try:
+        monkeypatch.setattr(spark.conf, "set", spy_set)
+        monkeypatch.setattr(spark.conf, "unset", spy_unset)
         lineage.run_with_lineage(spark, docs_df, str(tmp_path / "out"), "job_c", N_BUCKETS)
+        monkeypatch.undo()
+        assert calls == []
         assert spark.conf.get(key) == "STATIC"
     finally:
         spark.conf.unset(key)
+
+
+def test_lineage_job_never_plans_master_log(spark, docs_df, tmp_path, monkeypatch):
+    """master_log is derived on read, so a lineage job must not build it."""
+    from pdf_parser_spark.extraction import reports
+
+    calls = []
+    real = reports.master_log_frame
+
+    def spy(*args, **kwargs):
+        calls.append(1)
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(reports, "master_log_frame", spy)
+    s = lineage.run_with_lineage(spark, docs_df, str(tmp_path / "out"), "job_m", N_BUCKETS)
+    assert s["buckets_run"] > 0
+    assert calls == []
+
 
 def test_crash_resume_equals_single_shot(spark, docs_df, tmp_path):
     ref_root = str(tmp_path / "ref")
@@ -152,16 +191,11 @@ def test_no_stranded_persists_after_run_and_report_read(spark, docs_df, tmp_path
     later moment, so an absolute count can legitimately DROP while this
     test runs. RDD ids are never reused, so "no new ids remain" is the
     exact stranding property regardless of concurrent cleanup."""
-
-    def cached_ids() -> set:
-        m = spark.sparkContext._jsc.getPersistentRDDs()
-        return {int(k) for k in m.keySet().toArray()}
-
     root = str(tmp_path / "out_persist")
-    before = cached_ids()
+    before = _persisted_rdd_ids(spark)
     lineage.run_with_lineage(spark, docs_df, root, "job_p", N_BUCKETS)
     # the run released everything it pinned
-    assert cached_ids() - before == set()
+    assert _persisted_rdd_ids(spark) - before == set()
 
     track: list = []
     log = lineage.read_output(spark, root, "master_log", track=track)
@@ -169,4 +203,23 @@ def test_no_stranded_persists_after_run_and_report_read(spark, docs_df, tmp_path
     assert len(track) == 1  # exactly the global_seq handle
     for f in track:
         f.unpersist()
-    assert cached_ids() - before == set()
+    assert _persisted_rdd_ids(spark) - before == set()
+
+
+def test_failed_write_strands_no_cache(spark, docs_df, tmp_path, monkeypatch):
+    """A job whose write raises still releases every frame it persisted:
+    a stream retries a failed micro-batch in the same session, and each
+    retry must not strand another set of cached frames. Compared by RDD-id
+    set, as in the test above."""
+    real_write = lineage.sink.write_partitioned
+
+    def failing_write(df, root, name, partition_col):
+        if name == "extracted":
+            raise RuntimeError("injected write failure")
+        return real_write(df, root, name, partition_col)
+
+    monkeypatch.setattr(lineage.sink, "write_partitioned", failing_write)
+    before = _persisted_rdd_ids(spark)
+    with pytest.raises(RuntimeError, match="injected"):
+        lineage.run_with_lineage(spark, docs_df, str(tmp_path / "out"), "job_f", N_BUCKETS)
+    assert _persisted_rdd_ids(spark) - before == set()
