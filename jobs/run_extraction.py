@@ -44,6 +44,8 @@ def main() -> None:
             .config("spark.sql.adaptive.skewJoin.enabled", "true")
             .config("spark.sql.execution.arrow.pyspark.enabled", "true")
             .config("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
+            # As in session.get_spark: errors lose their Python call site.
+            .config("spark.python.sql.dataFrameDebugging.enabled", "false")
             .getOrCreate()
         )
 

@@ -136,8 +136,3 @@ VENDOR_CONFIGS: dict[str, dict] = {
         },
     },
 }
-
-
-def vendor_names() -> dict[str, str]:
-    """vendor_id -> display name (the reference's Vendor.name)."""
-    return {vid: cfg["vendor_name"] for vid, cfg in VENDOR_CONFIGS.items()}

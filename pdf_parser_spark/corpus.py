@@ -3,9 +3,7 @@
 Emits ``documents(doc_id string, vendor string, file_hash string,
 spans array<struct<kind string, text string, media_ref string, offset int>>)``
 — the input contract from BASELINE.json. Every document is a pure function of
-``(seed, index)``: the generator can run driver-side (pyarrow) for tests or
-distributed (mapInPandas over spark.range) for benchmark-scale corpora, and
-both produce byte-identical rows.
+``(seed, index)``, so any process can generate any slice of a corpus.
 
 Content templates are modeled on the reference's own fixtures
 (/root/reference/test_posco_extraction.py:75-79,
@@ -589,32 +587,3 @@ def spark_schema():
             ),
         ]
     )
-
-
-def spark_gen_corpus(spark, n_docs: int, seed: int = 42, partitions: int | None = None):
-    """Distributed generator: spark.range(n) → mapInPandas building the rows.
-
-    This is how a benchmark-scale corpus is produced without funnelling
-    through the driver; each task generates its index range independently
-    (documents are pure functions of (seed, index))."""
-    import pandas as pd
-
-    schema = spark_schema()
-
-    def build(batches):
-        for pdf in batches:
-            rows = [gen_doc(int(i), seed) for i in pdf["id"]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": [r["doc_id"] for r in rows],
-                    "vendor": [r["vendor"] for r in rows],
-                    "file_hash": [r["file_hash"] for r in rows],
-                    "spans": [
-                        [(s["kind"], s["text"], s["media_ref"], s["offset"]) for s in r["spans"]]
-                        for r in rows
-                    ],
-                }
-            )
-
-    parts = partitions or max(8, n_docs // 512)
-    return spark.range(0, n_docs, numPartitions=parts).mapInPandas(build, schema)

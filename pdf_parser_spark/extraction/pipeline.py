@@ -537,19 +537,22 @@ def doc_stats_frame(page_entries: DataFrame) -> DataFrame:
     )
 
 
-def incremental_outputs(
+def kernel_frames(
     spark,
     docs: DataFrame,
     winners: DataFrame | None,
-    job_ts: str = JOB_TS,
     persist: bool = True,
     track: list | None = None,
-) -> dict[str, DataFrame]:
-    """The three per-doc outputs (extracted_spans, extracted, doc_stats) —
-    everything a bucketed lineage job writes. ``winners`` is the slim
+    cluster_by=None,
+) -> tuple[DataFrame, DataFrame]:
+    """``(page_entries, entries)``: the two frames downstream of the Arrow
+    kernel that every per-doc output derives from. ``winners`` is the slim
     admission decision ``(doc_id, eff_vendor, ...)`` to join onto ``docs``;
-    None when ``docs`` are already admitted. ``job_ts``, ``persist`` and
-    ``track`` as in run_pipeline."""
+    None when ``docs`` are already admitted. ``persist`` and ``track`` as
+    in run_pipeline. ``cluster_by``, an expression of ``doc_id``,
+    hash-partitions the entries before they are cached: outputs derived
+    from them, and anything grouped by the same expression, then need no
+    further shuffle on it."""
     if winners is not None:
         # One span-bytes shuffle total: pin the PAYLOAD side of the
         # admission join to hash partitioning on doc_id at the kernel's
@@ -571,10 +574,20 @@ def incremental_outputs(
     if persist:
         page_entries = page_entries.persist()
     entries = entries_frame(page_entries)
+    if cluster_by is not None:
+        entries = entries.repartition(cluster_by)
     if persist:
         entries = entries.persist()
     if persist and track is not None:
         track.extend([page_entries, entries])
+    return page_entries, entries
+
+
+def incremental_outputs(
+    page_entries: DataFrame, entries: DataFrame, job_ts: str = JOB_TS
+) -> dict[str, DataFrame]:
+    """The three per-doc outputs (extracted_spans, extracted, doc_stats) —
+    everything a bucketed lineage job writes."""
     return {
         "extracted_spans": extracted_spans_frame(entries),
         "extracted": extracted_frame(entries, job_ts),
@@ -590,7 +603,8 @@ def run_pipeline(
     admit: bool = True,
     track: list | None = None,
 ) -> dict[str, DataFrame]:
-    """Full job: ``incremental_outputs`` plus the corpus-global master log.
+    """Full job: ``kernel_frames`` → ``incremental_outputs`` plus the
+    corpus-global master log.
     Returns the four output DataFrames; callers persist with
     .write.partitionBy(...).parquet(...) (Iceberg writeTo on a real cluster).
 
@@ -623,6 +637,8 @@ def run_pipeline(
             if track is not None:
                 track.append(winners)
         doc_meta = winners.select("doc_id", F.col("eff_vendor").alias("vendor"), "file_hash")
-    out = incremental_outputs(spark, docs, winners, job_ts=job_ts, persist=persist, track=track)
+    out = incremental_outputs(
+        *kernel_frames(spark, docs, winners, persist=persist, track=track), job_ts
+    )
     out["master_log"] = master_log_frame(out["extracted"], doc_meta, job_ts, track=track)
     return out

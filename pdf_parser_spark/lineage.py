@@ -18,10 +18,13 @@ Model
    One run processes every bucket not yet COMPLETED in the lineage table,
    writes each *incremental* output table partitioned by bucket with
    dynamic partition overwrite (a re-run of a bucket replaces, never
-   duplicates, its output), and only then appends one COMPLETED lineage row
-   per bucket with metrics. Crash anywhere ⇒ un-lineaged buckets are
-   rewritten wholesale on resume; lineaged buckets are skipped. Exactly-once
-   per bucket, no transaction coordinator.
+   duplicates, its output; one file per bucket per table), and only then
+   appends one COMPLETED lineage row per bucket with metrics. The metrics
+   come from the frames the job already persisted, not from a read-back of
+   what it wrote, so the bookkeeping is one small JVM-only write. Crash
+   anywhere ⇒ un-lineaged buckets are rewritten wholesale on resume;
+   lineaged buckets are skipped. Exactly-once per bucket, no transaction
+   coordinator.
 3. **Corpus-global reports derived on read.** ``master_log`` carries a
    corpus-global sr_no (update_excel.py:114-139) which is not
    bucket-decomposable; it (and the dashboard aggregates) are derived from
@@ -52,7 +55,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import sink
-from .extraction.pipeline import _routed_ranked, incremental_outputs
+from .extraction.pipeline import _routed_ranked, incremental_outputs, kernel_frames
 
 INCREMENTAL_TABLES = ("extracted_spans", "extracted", "doc_stats", "doc_meta")
 OUTPUT_TABLES = INCREMENTAL_TABLES + ("master_log",)
@@ -61,8 +64,6 @@ _LINEAGE_SCHEMA = (
     "job_id string, bucket int, n_docs long, n_entries long, n_spans long, "
     "status string, completed_ts double"
 )
-
-_METRICS_READ_SCHEMA = "doc_id string, bucket int"
 
 log = logging.getLogger(__name__)
 
@@ -121,7 +122,7 @@ def run_with_lineage(
     done = completed_buckets(spark, root)
     if done:
         known_hashes = (
-            sink.read(spark, root, "doc_meta")
+            sink.read(spark, root, "doc_meta", schema="file_hash string, bucket int")
             .where(F.col("bucket").isin(list(done)))
             .select("file_hash")
         )
@@ -131,18 +132,21 @@ def run_with_lineage(
     # over (doc_id, eff_vendor, file_hash) only — no span payloads. The
     # persisted handle feeds the bucket listing, doc_meta, and the pipeline
     # join, so routing runs a single time per job. It is O(n_docs) slim
-    # rows — tiny next to span bytes. Every persisted frame is released
-    # on the way out, whether the job finished or raised.
+    # rows — tiny next to span bytes. It is cached clustered by bucket, so
+    # neither the bucket listings nor the doc_meta write shuffle again.
+    # Every persisted frame is released on the way out, whether the job
+    # finished or raised.
     cached: list = []
+    bucket = _bucket(F.col("doc_id"), n_buckets)
     slim = (
         _routed_ranked(docs, track=cached)
         .where((F.col("_rn") == 1) & F.col("pre_reason").isNull())
         .select("doc_id", "eff_vendor", "file_hash")
-        .withColumn("bucket", _bucket(F.col("doc_id"), n_buckets))
+        .withColumn("bucket", bucket)
     )
     if done:
         slim = slim.where(~F.col("bucket").isin(list(done)))
-    slim = slim.persist()
+    slim = slim.repartition("bucket").persist()
     cached.append(slim)
     try:
         ran = sorted(r["bucket"] for r in slim.select("bucket").distinct().collect())
@@ -162,38 +166,30 @@ def run_with_lineage(
             "bucket",
         )
         log.debug("doc_meta written")
-        out = incremental_outputs(spark, docs, slim, track=cached)
-        for name, df in out.items():
-            sink.write_partitioned(
-                df.withColumn("bucket", _bucket(F.col("doc_id"), n_buckets)), root, name, "bucket"
-            )
+        # The entries are cached clustered by bucket as well, so the
+        # extracted_spans/extracted writes and the metrics below shuffle no
+        # further; doc_stats, grouped by doc_id, pays one bucket exchange.
+        page_entries, entries = kernel_frames(spark, docs, slim, track=cached, cluster_by=bucket)
+        for name, df in incremental_outputs(page_entries, entries).items():
+            sink.write_partitioned(df.withColumn("bucket", bucket), root, name, "bucket")
             log.debug("%s written", name)
 
-        # Metrics per bucket from the materialized outputs (reads parquet
-        # back — cheap, and guarantees metrics describe what was written).
-        # Naming the two columns read skips a schema-inference job per table.
-        spans = sink.read(spark, root, "extracted_spans", schema=_METRICS_READ_SCHEMA)
-        extracted = sink.read(spark, root, "extracted", schema=_METRICS_READ_SCHEMA)
-        metrics = (
-            spans.where(F.col("bucket").isin(ran))
-            .groupBy("bucket")
-            .agg(
-                F.countDistinct("doc_id").alias("n_docs"),
-                F.count(F.lit(1)).alias("n_spans"),
-            )
-            .join(
-                extracted.where(F.col("bucket").isin(ran))
-                .groupBy("bucket")
-                .agg(F.count(F.lit(1)).alias("n_entries")),
-                "bucket",
-                "left",
-            )
+        # Metrics per bucket from the persisted entries the outputs were
+        # written from: each entry is 4 extracted_spans rows and one
+        # extracted row per non-empty field, and each doc with entries has
+        # exactly one entry ranked 1. Listing the buckets from slim
+        # completes buckets whose admitted docs yielded no entries. One
+        # task writes the few rows.
+        metrics = entries.groupBy(bucket.alias("bucket")).agg(
+            F.count(F.when(F.col("entry_rank") == 1, 1)).alias("n_docs"),
+            sum(F.count(F.when(F.col(c) != "", 1)) for c in ("plate", "heat", "cert")).alias(
+                "n_entries"
+            ),
+            (F.count(F.lit(1)) * 4).alias("n_spans"),
         )
-        # Buckets that had input docs but produced zero spans still complete.
-        all_ran = spark.createDataFrame([(b,) for b in ran], "bucket int")
         now = time.time()
         sink.append(
-            all_ran.join(metrics, "bucket", "left").select(
+            slim.select("bucket").distinct().join(metrics, "bucket", "left").select(
                 F.lit(job_id).alias("job_id"),
                 "bucket",
                 F.coalesce("n_docs", F.lit(0)).cast("long").alias("n_docs"),
@@ -201,7 +197,7 @@ def run_with_lineage(
                 F.coalesce("n_spans", F.lit(0)).cast("long").alias("n_spans"),
                 F.lit("COMPLETED").alias("status"),
                 F.lit(now).alias("completed_ts"),
-            ),
+            ).coalesce(1),
             root,
             "lineage",
         )

@@ -23,7 +23,11 @@ def get_spark(
       - mapKeyDedupPolicy=LAST_WIN: the master-log page map replicates the
         reference's dict last-write-wins (update_excel.py:46);
       - shuffle partitions default 2x cores locally; on a real cluster this
-        is sized by AQE advisory partition bytes instead.
+        is sized by AQE advisory partition bytes instead;
+      - DataFrame call-site capture off: with it on, every DataFrame API
+        call walks the Python stack and tries to import IPython/ipykernel
+        (~0.5 s on the first call where IPython is installed). The
+        trade-off: DataFrame errors lose their Python call-site context.
     """
     cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 4)
     repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -42,6 +46,7 @@ def get_spark(
         .config("spark.local.dir", os.environ.get("SPARK_GRAFT_LOCAL_DIR", "/tmp"))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

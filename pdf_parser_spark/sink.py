@@ -40,11 +40,21 @@ def table_ident(root: str, name: str) -> str:
     # normalization (normpath never consults the CWD), so a resume started
     # from a different working directory maps to the same tables. abspath
     # here would silently fork table identity per CWD (ADVICE r04).
-    # Upgrade note: older code hashed abspath(root), so a catalog-mode
-    # resume from a RELATIVE root written by it maps to new, empty tables
-    # and redoes every bucket; resume such jobs with the absolute root.
     tag = hashlib.md5(os.path.normpath(root).encode()).hexdigest()[:8]
     return f"{catalog_ns()}.{name}_{tag}"
+
+
+def _resolve(spark: SparkSession, root: str, name: str) -> str:
+    """The table a catalog-mode operation on ``root`` uses. Older code
+    hashed abspath(root): when the normpath table is absent and that
+    legacy table exists, keep using it, so a resume from a relative root
+    finds its completed buckets instead of starting empty tables."""
+    ident = table_ident(root, name)
+    legacy = table_ident(os.path.abspath(root), name)  # abspath is normalized
+    exists = spark.catalog.tableExists
+    if legacy != ident and not exists(ident) and exists(legacy):
+        return legacy
+    return ident
 
 
 def _path(root: str, name: str) -> str:
@@ -54,14 +64,14 @@ def _path(root: str, name: str) -> str:
 def exists(spark: SparkSession, root: str, name: str) -> bool:
     ns = catalog_ns()
     if ns:
-        return spark.catalog.tableExists(table_ident(root, name))
+        return spark.catalog.tableExists(_resolve(spark, root, name))
     return os.path.exists(_path(root, name))
 
 
 def read(spark: SparkSession, root: str, name: str, schema: str | None = None) -> DataFrame:
     ns = catalog_ns()
     if ns:
-        return spark.table(table_ident(root, name))
+        return spark.table(_resolve(spark, root, name))
     reader = spark.read.schema(schema) if schema else spark.read
     return reader.parquet(_path(root, name))
 
@@ -71,11 +81,14 @@ def write_partitioned(df: DataFrame, root: str, name: str, partition_col: str) -
     are replaced (the exactly-once bucket-rewrite contract). V2
     ``overwritePartitions`` IS dynamic by definition; the parquet path
     sets partitionOverwriteMode=dynamic on the write itself, leaving the
-    session's conf untouched."""
+    session's conf untouched. Rows are clustered by ``partition_col``
+    first, so each partition value is written by one task into one file
+    (a deployment sizes its buckets to the file size it wants)."""
+    df = df.repartition(partition_col)
     ns = catalog_ns()
     if ns:
         spark = df.sparkSession
-        ident = table_ident(root, name)
+        ident = _resolve(spark, root, name)
         if not spark.catalog.tableExists(ident):
             from pyspark.sql import functions as F
 
@@ -128,7 +141,7 @@ def _aligned_to_table(df: DataFrame, ident: str) -> DataFrame:
 def append(df: DataFrame, root: str, name: str) -> None:
     ns = catalog_ns()
     if ns:
-        ident = table_ident(root, name)
+        ident = _resolve(df.sparkSession, root, name)
         if not df.sparkSession.catalog.tableExists(ident):
             df.writeTo(ident).create()
         elif _is_session_catalog(ident):

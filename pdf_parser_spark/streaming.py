@@ -35,12 +35,13 @@ from __future__ import annotations
 
 import os
 import shutil
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .corpus import spark_schema
-from .lineage import INCREMENTAL_TABLES, _bucket, run_with_lineage
+from .lineage import INCREMENTAL_TABLES, _bucket, read_output, run_with_lineage
 
 COMPACTED_DIR = "compacted"
 
@@ -73,13 +74,14 @@ def accumulated_doc_meta(
 ) -> DataFrame | None:
     """Union of doc_meta across the compacted layout + prior sub-roots —
     the known-content set the cross-batch anti-join runs against."""
-    from functools import reduce
-
     roots = _table_roots(root, "doc_meta", exclude_batch)
     if not roots:
         return None
+    # Naming the one column read skips a schema-inference job per root.
     frames = [
-        spark.read.parquet(os.path.join(r, "doc_meta")).select("file_hash") for r in roots
+        spark.read.schema("file_hash string").parquet(os.path.join(r, "doc_meta"))
+        .select("file_hash")
+        for r in roots
     ]
     return reduce(DataFrame.unionByName, frames)
 
@@ -105,8 +107,8 @@ def stream_extract(
     docs = reader.load(input_dir)
 
     def process_batch(batch_df, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+        # An empty batch needs no guard: run_with_lineage writes nothing
+        # when no bucket has admitted docs.
         session = batch_df.sparkSession
         known = accumulated_doc_meta(session, output_root, exclude_batch=f"batch={batch_id}")
         if known is not None:
@@ -142,8 +144,6 @@ def compact_stream_output(spark: SparkSession, root: str, n_buckets: int = 64) -
     the next attempt). On a real cluster this is an Iceberg
     rewrite_data_files / RewriteManifests action; directory moves are the
     parquet stand-in."""
-    from functools import reduce
-
     batches = _batch_dirs(root)
     if not batches:
         return 0
@@ -161,7 +161,8 @@ def compact_stream_output(spark: SparkSession, root: str, n_buckets: int = 64) -
         merged = reduce(DataFrame.unionByName, frames).withColumn(
             "bucket", _bucket(F.col("doc_id"), n_buckets)
         )
-        merged.write.partitionBy("bucket").mode("overwrite").parquet(
+        # One task, so one file, per bucket (as sink.write_partitioned).
+        merged.repartition("bucket").write.partitionBy("bucket").mode("overwrite").parquet(
             os.path.join(tmp, name)
         )
 
@@ -192,10 +193,6 @@ def read_stream_output(
             read_stream_output(spark, root, "doc_meta"),
             track=track,
         )
-    from functools import reduce
-
-    from .lineage import read_output
-
     roots = _table_roots(root, name)
     frames = [read_output(spark, r, name) for r in roots]
     return reduce(DataFrame.unionByName, frames)

@@ -223,3 +223,57 @@ def test_failed_write_strands_no_cache(spark, docs_df, tmp_path, monkeypatch):
     with pytest.raises(RuntimeError, match="injected"):
         lineage.run_with_lineage(spark, docs_df, str(tmp_path / "out"), "job_f", N_BUCKETS)
     assert _persisted_rdd_ids(spark) - before == set()
+
+
+def test_lineage_rows_need_no_local_frame(spark, docs_df, tmp_path, monkeypatch):
+    """The lineage rows derive from the job's persisted frames: no
+    driver-side list becomes a DataFrame (that would start a Python worker
+    daemon just to ship a few bucket numbers)."""
+    calls = []
+    real = type(spark).createDataFrame
+
+    def spy(self, *args, **kwargs):
+        calls.append(1)
+        return real(self, *args, **kwargs)
+
+    monkeypatch.setattr(type(spark), "createDataFrame", spy)
+    s = lineage.run_with_lineage(spark, docs_df, str(tmp_path / "out"), "job_l", N_BUCKETS)
+    assert s["buckets_run"] > 0
+    assert calls == []
+
+
+def test_one_file_per_bucket_per_table(spark, docs_df, tmp_path):
+    root = tmp_path / "out"
+    s = lineage.run_with_lineage(spark, docs_df, str(root), "job_f1", N_BUCKETS)
+    for name in lineage.INCREMENTAL_TABLES:
+        parts = sorted((root / name).glob("bucket=*"))
+        assert len(parts) == s["buckets_run"], name
+        for part in parts:
+            assert len(list(part.glob("part-*.parquet"))) == 1, part
+
+
+def test_lineage_metrics_match_written_outputs(spark, docs_df, tmp_path):
+    """Every lineage row's metrics equal the ones recomputed per bucket
+    from the written extracted_spans and extracted tables."""
+    root = str(tmp_path / "out")
+    s = lineage.run_with_lineage(spark, docs_df, root, "job_mm", N_BUCKETS)
+    spans = lineage.sink.read(spark, root, "extracted_spans")
+    per_bucket = {
+        r["bucket"]: (r["n_docs"], r["n_spans"])
+        for r in spans.groupBy("bucket")
+        .agg(F.countDistinct("doc_id").alias("n_docs"), F.count("*").alias("n_spans"))
+        .collect()
+    }
+    n_entries = {
+        r["bucket"]: r["count"]
+        for r in lineage.sink.read(spark, root, "extracted").groupBy("bucket").count().collect()
+    }
+    lin = spark.read.parquet(lineage.lineage_path(root)).collect()
+    assert len(lin) == s["buckets_run"]
+    for r in lin:
+        n_docs, n_spans = per_bucket.get(r["bucket"], (0, 0))
+        assert (r["n_docs"], r["n_entries"], r["n_spans"]) == (
+            n_docs,
+            n_entries.get(r["bucket"], 0),
+            n_spans,
+        ), r

@@ -7,6 +7,8 @@ emulation where the session catalog refuses V2 writes; the V2
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -189,3 +191,24 @@ def test_partition_spec_evolution_is_detected(spark, simple_catalog):
     assert [(r["doc_id"], r["n"], r["bucket"], r["shard"]) for r in rows] == [
         ("a", 1, 0, 7)
     ]
+
+
+def test_relative_root_keeps_legacy_abspath_tables(spark, monkeypatch, tmp_path):
+    """Older code named a root's tables by md5(abspath(root)). Through a
+    relative root whose normpath table is absent, the legacy table is
+    still found, read and appended to, so a resume does not start empty
+    tables and redo every bucket."""
+    monkeypatch.setenv("SPARK_GRAFT_ICEBERG_NS", "spark_catalog.default")
+    monkeypatch.chdir(tmp_path)
+    root = "legacy_job"
+    legacy = sink.table_ident(os.path.abspath(root), "lineage")
+    assert legacy != sink.table_ident(root, "lineage")
+    try:
+        spark.createDataFrame([("j1", 3)], "job_id string, bucket int").writeTo(legacy).create()
+        assert sink.exists(spark, root, "lineage")
+        sink.append(spark.createDataFrame([("j2", 5)], "job_id string, bucket int"), root, "lineage")
+        assert sorted(r["bucket"] for r in sink.read(spark, root, "lineage").collect()) == [3, 5]
+        assert not spark.catalog.tableExists(sink.table_ident(root, "lineage"))
+    finally:
+        for ident in (legacy, sink.table_ident(root, "lineage")):
+            spark.sql(f"DROP TABLE IF EXISTS {ident}")

@@ -99,6 +99,19 @@ def test_stream_matches_batch_and_resumes(spark, dirs):
     assert rows3 == stream_rows  # nothing new admitted
 
 
+def test_empty_upload_writes_nothing(spark, tmp_path):
+    """A zero-row file landing in the input raises nothing and commits no
+    lineage: the micro-batch has no admitted doc, so no bucket runs."""
+    inp, out = tmp_path / "in", tmp_path / "out"
+    inp.mkdir()
+    pq.write_table(corpus.arrow_schema().empty_table(), str(inp / "empty.parquet"))
+    q = streaming.stream_extract(spark, str(inp), str(out), str(tmp_path / "ckpt"), n_buckets=8)
+    q.awaitTermination(300)
+    assert q.exception() is None
+    assert [p["numInputRows"] for p in q.recentProgress if p["batchId"] == 0] == [0]
+    assert not list(out.glob("batch=*/lineage"))
+
+
 class _FakeState:
     """Minimal GroupState stand-in for unit-testing _status_update."""
 
