@@ -18,13 +18,9 @@ from pyspark.sql import DataFrame, SparkSession
 
 from pdf_parser_spark import driver_contract
 from pdf_parser_spark.analytics import ANALYTIC_QUERIES
-from pdf_parser_spark.boilerplate import BOILERPLATE_QUERIES
 from pdf_parser_spark.curation import CURATION_QUERIES
 from pdf_parser_spark.datapipe import DATAPIPE_QUERIES
 from pdf_parser_spark.lm_filter import LM_QUERIES
-from pdf_parser_spark.bpe import BPE_QUERIES
-from pdf_parser_spark.graph import GRAPH_QUERIES
-from pdf_parser_spark.sketches import SKETCH_QUERIES
 from pdf_parser_spark.selection import SELECTION_QUERIES
 from pdf_parser_spark.snapshot import SNAPSHOT_QUERIES
 from pdf_parser_spark.timeseries import TIMESERIES_QUERIES
@@ -59,15 +55,12 @@ _FRONT = [
     "ab_test_purchase",
     "copurchase_pairs",
     "revenue_pareto",
-    "embedding_quantize",
-    "embedding_covariance",
     "domain_cap",
     "chunk_text",
     "pps_sample",
     "corpus_length_stats",
     "mojibake_repair",
     "line_dedup_in_doc",
-    "ann_recall",
     # --- never driver-verified: round-4 kmeans addition ---
     "kmeans_embeddings_float",
     # --- round-5 additions ---
@@ -102,19 +95,9 @@ _OVERFLOW_TAIL = [
     "returned_top_customers",
     "referential_integrity",
     "tfidf_top_terms",
-    "hll_distinct",
-    "hll_window_distinct",
-    "cms_heavy_hitters",
     "bloom_dedup",
-    "hist_quantiles",
     "bitmap_distinct_window",
-    "minhash_jaccard_est",
-    "pagerank_hosts",
-    "triangle_count",
-    "host_shortest_paths",
     "snapshot_diff",
-    "bpe_train",
-    "bpe_encode",
     "bpe_token_count",
     "asof_join_events",
     "rollup_revenue",
@@ -134,7 +117,6 @@ _OVERFLOW_TAIL = [
     "stratified_sample",
     "dup_ngram_fraction",
     "pii_redact",
-    "boilerplate_main_text",
     "session_window_builtin",
     "salted_join",
     "kmeans_embeddings",
@@ -157,10 +139,6 @@ _REGISTRIES = (
     SELECTION_QUERIES,
     CURATION_QUERIES,
     TIMESERIES_QUERIES,
-    SKETCH_QUERIES,
-    GRAPH_QUERIES,
-    BPE_QUERIES,
-    BOILERPLATE_QUERIES,
     ANALYTIC_QUERIES,
 )
 

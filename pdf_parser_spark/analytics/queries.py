@@ -695,142 +695,6 @@ JOIN sizes sb ON sb.doc_id = doc_a + 1
 """
 
 
-MH_EST_K = 16  # independent minhash components for the Jaccard estimator
-
-
-def q_minhash_jaccard_est(spark, sf_dir):
-    """MinHash Jaccard ESTIMATOR with measured error: for each
-    consecutive-doc pair (the ngram_jaccard pair set, so estimate and
-    truth are directly comparable), emit the number of agreeing minhash
-    components (of ``MH_EST_K``=16 — est = n_agree/16, the textbook
-    Pr[min agree] = J identity) next to the exact intersection/union
-    sizes. All columns are BIGINT, so the cross-engine check is
-    bit-exact and the estimator's error is OBSERVED per pair, the same
-    discipline as bloom_dedup's false_pos and cms's overest.
-
-    Scale shape (100 TB): signatures are ONE aggregate over the distinct
-    token stream (16 mins computed as columns of the same groupBy — no
-    16x explode); each doc's signature is 16x2 hex chars however long
-    the doc. Pair scoring joins two 48-byte signature rows; the exact
-    intersection (here, for error measurement) is the shuffle equi-join
-    on token — the piece a production estimator run OMITS, which is the
-    point of carrying the estimate."""
-    docs = _t(spark, sf_dir, "documents")
-    toks = docs.select(
-        "doc_id",
-        F.explode(F.array_distinct(F.split("text", " "))).alias("token"),
-    )
-    sigs = toks.groupBy("doc_id").agg(
-        F.count(F.lit(1)).alias("n"),
-        *[
-            F.min(F.substring(F.md5("token"), k * 2 + 1, 2)).alias(f"s{k}")
-            for k in range(MH_EST_K)
-        ],
-    )
-    sa = sigs.select(
-        F.col("doc_id").alias("doc_a"),
-        F.col("n").alias("na"),
-        *[F.col(f"s{k}").alias(f"a{k}") for k in range(MH_EST_K)],
-    )
-    sb = sigs.select(
-        (F.col("doc_id") - 1).alias("doc_a"),
-        F.col("n").alias("nb"),
-        *[F.col(f"s{k}").alias(f"b{k}") for k in range(MH_EST_K)],
-    )
-    agree = sum(
-        (F.col(f"a{k}") == F.col(f"b{k}")).cast("long")
-        for k in range(MH_EST_K)
-    )
-    a = toks.select(F.col("doc_id").alias("doc_a"), "token")
-    b = toks.select(
-        (F.col("doc_id") - 1).alias("doc_a2"), F.col("token").alias("token_b")
-    )
-    inter = (
-        a.join(b, (a.doc_a == b.doc_a2) & (a.token == b.token_b))
-        .groupBy("doc_a")
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
-    return (
-        sa.join(sb, "doc_a")
-        .join(inter, "doc_a")
-        .select(
-            "doc_a",
-            (F.col("doc_a") + 1).alias("doc_b"),
-            agree.alias("n_agree"),
-            F.col("inter"),
-            (F.col("na") + F.col("nb") - F.col("inter")).alias("uni"),
-        )
-    )
-
-
-SQL_MINHASH_JACCARD_EST = f"""
-WITH toks AS (SELECT DISTINCT doc_id, unnest(string_split(text, ' ')) AS token
-              FROM documents),
-     sizes AS (SELECT doc_id, count(*) AS n FROM toks GROUP BY 1),
-     sigk AS (SELECT doc_id, k,
-                     min(substr(md5(token), k * 2 + 1, 2)) AS s
-              FROM toks, (SELECT unnest(range({MH_EST_K})) AS k)
-              GROUP BY doc_id, k),
-     agree AS (SELECT a.doc_id AS doc_a,
-                      count(*) FILTER (WHERE a.s = b.s)::BIGINT AS n_agree
-               FROM sigk a JOIN sigk b
-                 ON b.doc_id = a.doc_id + 1 AND b.k = a.k
-               GROUP BY 1),
-     inter AS (SELECT a.doc_id AS doc_a, count(*)::BIGINT AS inter
-               FROM toks a JOIN toks b
-                 ON b.doc_id = a.doc_id + 1 AND b.token = a.token
-               GROUP BY 1)
-SELECT g.doc_a, g.doc_a + 1 AS doc_b, g.n_agree, i.inter,
-       (sa.n + sb.n - i.inter)::BIGINT AS uni
-FROM agree g
-JOIN inter i USING (doc_a)
-JOIN sizes sa ON sa.doc_id = g.doc_a
-JOIN sizes sb ON sb.doc_id = g.doc_a + 1
-"""
-
-
-def q_embedding_knn(spark, sf_dir):
-    """Brute-force cosine/dot top-k similarity search: queries (vec_id < 3)
-    vs corpus (vec_id >= 3) via posexplode + equi-join on dimension — the
-    formulation that distributes (no driver-side loop, no cross collect).
-    Ranking uses the ROUNDED dot product + id tiebreak so both engines rank
-    identically."""
-    emb = _t(spark, sf_dir, "embeddings")
-    q = emb.where("vec_id < 3").select(
-        F.col("vec_id").alias("qid"), F.posexplode("embedding").alias("i", "qv")
-    )
-    c = emb.where("vec_id >= 3").select(
-        F.col("vec_id").alias("cid"), F.posexplode("embedding").alias("ci", "cv")
-    )
-    dots = (
-        q.join(c, q.i == c.ci)
-        .groupBy("qid", "cid")
-        .agg(F.round(F.sum(F.col("qv").cast("double") * F.col("cv").cast("double")), 3).alias("dot"))
-    )
-    w = Window.partitionBy("qid").orderBy(F.desc("dot"), "cid")
-    return dots.withColumn("rank", F.row_number().over(w)).where("rank <= 5").select(
-        "qid", "cid", "dot", F.col("rank").cast("long").alias("rank")
-    )
-
-
-SQL_EMBEDDING_KNN = """
-WITH q AS (SELECT vec_id AS qid, u.qv::DOUBLE AS qv, u.i
-           FROM embeddings, LATERAL (SELECT unnest(embedding) AS qv,
-                                            generate_subscripts(embedding, 1) AS i) u
-           WHERE vec_id < 3),
-     c AS (SELECT vec_id AS cid, u.cv::DOUBLE AS cv, u.i
-           FROM embeddings, LATERAL (SELECT unnest(embedding) AS cv,
-                                            generate_subscripts(embedding, 1) AS i) u
-           WHERE vec_id >= 3),
-     dots AS (SELECT qid, cid, round(sum(qv * cv), 3) AS dot
-              FROM q JOIN c ON q.i = c.i GROUP BY qid, cid),
-     ranked AS (SELECT qid, cid, dot,
-                       row_number() OVER (PARTITION BY qid ORDER BY dot DESC, cid) AS rank
-                FROM dots)
-SELECT qid, cid, dot, rank::BIGINT AS rank FROM ranked WHERE rank <= 5
-"""
-
-
 # Characteristic terms per source: top-K by tf-idf. K is a constant, so
 # the per-source cut is a bounded row_number over the VOCABULARY frame.
 TFIDF_K = 5
@@ -1275,54 +1139,6 @@ SELECT qid, cand_id, dot, rank::BIGINT AS rank FROM (
          row_number() OVER (PARTITION BY qid ORDER BY dot DESC, cand_id) AS rank
   FROM scored) WHERE rank <= 5
 """
-
-
-def q_ann_recall(spark, sf_dir):
-    """ANN quality, measured: per query vector, how many of the exact
-    brute-force top-5 the IVF probe search recovered (recall@5 =
-    n_hits/5) plus the candidate count the probe actually scored. Same
-    discipline as bloom_dedup's false_pos / cms's overest / the minhash
-    estimator: the approximation ships WITH its observed error, all
-    columns integers so the cross-engine check is bit-exact.
-
-    Scale shape: composes the two existing searches (exact only exists
-    for measurement — a production run omits it, which is the point);
-    the recall join is top-k-sized (queries x 5 rows)."""
-    exact = q_embedding_knn(spark, sf_dir).select(
-        "qid", F.col("cid").alias("id")
-    )
-    approx = q_embedding_ivf_knn(spark, sf_dir).select(
-        "qid", F.col("cand_id").alias("id")
-    )
-    hits = exact.join(approx, ["qid", "id"]).groupBy("qid").agg(
-        F.count(F.lit(1)).alias("n_hits")
-    )
-    ex = exact.groupBy("qid").agg(F.count(F.lit(1)).alias("n_exact"))
-    ap = approx.groupBy("qid").agg(F.count(F.lit(1)).alias("n_approx"))
-    return (
-        ex.join(ap, "qid")
-        .join(hits, "qid", "left")
-        .select(
-            "qid",
-            "n_exact",
-            "n_approx",
-            F.coalesce("n_hits", F.lit(0)).alias("n_hits"),
-        )
-    )
-
-
-def _sql_ann_recall_lazy(sf: str) -> str:
-    return f"""
-WITH exact AS (SELECT qid, cid AS id FROM ({SQL_EMBEDDING_KNN}) t),
-     approx AS (SELECT qid, cand_id AS id FROM ({SQL_EMBEDDING_IVF_KNN}) t),
-     hits AS (SELECT e.qid, count(*)::BIGINT AS n_hits
-              FROM exact e JOIN approx a USING (qid, id) GROUP BY e.qid),
-     ex AS (SELECT qid, count(*)::BIGINT AS n_exact FROM exact GROUP BY qid),
-     ap AS (SELECT qid, count(*)::BIGINT AS n_approx FROM approx GROUP BY qid)
-SELECT qid, n_exact, n_approx, COALESCE(n_hits, 0)::BIGINT AS n_hits
-FROM ex JOIN ap USING (qid) LEFT JOIN hits USING (qid)
-"""
-
 
 
 # SemDedup prune threshold. Abbas et al. 2023 use ~0.95+ on real encoder
@@ -2387,9 +2203,6 @@ ANALYTIC_QUERIES: dict[str, tuple] = {
     "minhash_band_candidates": (q_minhash_band_candidates, SQL_MINHASH_BAND_CANDIDATES),
     "simhash": (q_simhash, SQL_SIMHASH),
     "ngram_jaccard": (q_ngram_jaccard, SQL_NGRAM_JACCARD),
-    "minhash_jaccard_est": (q_minhash_jaccard_est, SQL_MINHASH_JACCARD_EST),
-    "ann_recall": (q_ann_recall, _sql_ann_recall_lazy),
-    "embedding_knn": (q_embedding_knn, SQL_EMBEDDING_KNN),
     "tfidf_top_terms": (q_tfidf_top_terms, SQL_TFIDF_TOP_TERMS),
     "media_decode": (q_media_decode, SQL_MEDIA_DECODE),
     "media_frame_sample": (q_media_frame_sample, SQL_MEDIA_FRAME_SAMPLE),

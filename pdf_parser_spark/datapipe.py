@@ -69,10 +69,10 @@ Scale shape (100 TB):
     per-iteration state is one (doc_id, label) row per active doc.
 
 The PII/paragraph fixture (``text_docs``) is generated deterministically
-at a size derived from sf — same pattern as boilerplate.ensure_html_corpus;
-the driver's testdata ``documents`` table is word-soup without newlines or
-PII, so those two operators need a corpus that actually contains their
-signal (no vacuous green rows — VERDICT.md round-1 rule).
+at a size derived from sf and cached under ``.cache/``; the driver's
+testdata ``documents`` table is word-soup without newlines or PII, so
+those two operators need a corpus that actually contains their signal
+(no vacuous green rows — VERDICT.md round-1 rule).
 """
 
 from __future__ import annotations
@@ -945,7 +945,7 @@ def _read_text(spark, sf_dir: str) -> DataFrame:
     sf = sf_of(sf_dir)
     ensure_text_corpus(sf)
     # One small cached parquet file -> one scan partition; the cost is
-    # regex CPU per doc, so spread rows across cores (see boilerplate.py).
+    # regex CPU per doc, so spread rows across cores.
     return spark.read.parquet(corpus_path(sf)).repartition(
         spark.sparkContext.defaultParallelism
     )

@@ -1,10 +1,1 @@
-from .pipeline import (  # noqa: F401
-    admit_documents,
-    doc_stats_frame,
-    entries_frame,
-    extracted_frame,
-    extracted_spans_frame,
-    page_frame,
-    run_pipeline,
-)
-from .reports import master_log_frame  # noqa: F401
+from .pipeline import run_pipeline  # noqa: F401

@@ -1,27 +1,25 @@
 """The extraction pipeline — idiomatic-Spark restatement of the reference's
 extract_pdf_fields + tasks.py persistence (/root/reference/extractor/).
 
-Shape of the job (one scan, two shuffles on the hot path):
+Shape of the job (the span payload is shuffled once):
 
   documents(doc_id, vendor, file_hash, spans)
     → routing: vendor_detect.route_doc per doc (Python crossing 1; Arrow)
-    → admission (window first-wins on file_hash; H3/J4)            [shuffle 1]
-    → explode(spans) EARLY — a giant document becomes many page rows,
-      so skew is bounded by page size, not document size (SURVEY.md §7)
-    → groupBy(doc_id, page): ordered page assembly                 [shuffle 2]
+    → admission on a slim projection: min_by first-wins per file_hash
+      (H3/J4), joined back to every routed doc
+    → the payload, hash-partitioned by doc_id at one task per core, joined
+      to the winners (the only exchange that moves span bytes)
+    → in-row page assembly (higher-order functions over each doc's spans)
     → extract_page_udf (Python crossing 2; Arrow batches)
     → posexplode(entries) fan-out (R8)
-    → md5 entry hash (H1) + first-wins window dedup (H2)
-    → per-doc sequencing → ordered output spans / unpivot / stats
-
-The dedup window partitions by (doc_id, hash) and the sequencing window by
-doc_id; both operate on *entries* (a few per page), not spans, so the giant
-document tail is small by the time data converges on a single partition.
+    → groupBy(doc_id): md5 entry hash (H1), first-wins dedup (H2) and
+      sequencing in one in-row fold
+    → ordered output spans / unpivot / stats
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .. import kernel
@@ -100,12 +98,6 @@ def _routed_ranked(docs: DataFrame, track: list | None = None) -> DataFrame:
     )
 
 
-def admission_winners(docs: DataFrame) -> DataFrame:
-    """(doc_id, eff_vendor) of every admitted doc — the slim admission
-    decision, to be joined back onto the span rows."""
-    return admission_meta(docs).select("doc_id", "eff_vendor")
-
-
 def admission_meta(docs: DataFrame, track: list | None = None) -> DataFrame:
     """(doc_id, eff_vendor, file_hash) of every admitted doc — the winner
     set PLUS the doc-level metadata the master log needs, so report
@@ -118,7 +110,7 @@ def admission_meta(docs: DataFrame, track: list | None = None) -> DataFrame:
     )
 
 
-def admit_documents(docs: DataFrame) -> DataFrame:
+def admit_documents(docs: DataFrame, winners: DataFrame | None = None) -> DataFrame:
     """Admission control + router (views.py:154-240, views/core.py:622-668
     → SURVEY.md H3/J4/R11/S10): vendor detection routes unlabeled docs and
     blocks high-confidence label contradictions; first-wins dedup on the
@@ -127,12 +119,19 @@ def admit_documents(docs: DataFrame) -> DataFrame:
     per-doc decision order lives in oracle.route_and_admit — this is its
     DataFrame form; admitted docs carry their effective vendor.
 
-    Physically: slim window (no spans) + equi-join of the winner set back
-    onto the span rows by doc_id. The join is the only exchange that moves
-    span bytes, and callers that feed the kernel pin and REUSE its
-    partitioning (run_pipeline) so the payload is shuffled exactly once."""
-    winners = admission_winners(docs)
-    return docs.join(winners, "doc_id").select(
+    ``winners`` is the slim admission decision ``(doc_id, eff_vendor, ...)``
+    (``admission_meta`` when omitted), joined back onto the span rows by
+    doc_id. That join is the only exchange that moves span bytes: the
+    PAYLOAD side is pinned to hash partitioning on doc_id at the kernel's
+    width, so the page explode happens in place and the kernel UDF
+    inherits it. Skew is bounded by pages per doc. The slim winner side is
+    NOT manually repartitioned: the join plans its own exchange to match
+    the payload's partitioning when it sort-merges, and skips it entirely
+    when AQE broadcasts the winner set."""
+    if winners is None:
+        winners = admission_meta(docs)
+    payload = docs.repartition(_kernel_width(docs.sparkSession), "doc_id")
+    return payload.join(winners.select("doc_id", "eff_vendor"), "doc_id").select(
         "doc_id", F.col("eff_vendor").alias("vendor"), "file_hash", "spans"
     )
 
@@ -181,21 +180,15 @@ def vendor_routing_frame(docs: DataFrame) -> DataFrame:
     )
 
 
-def page_frame(admitted: DataFrame, salt_pages: bool = True) -> DataFrame:
+def page_frame(admitted: DataFrame) -> DataFrame:
     """Assemble ordered per-page inputs for the kernel UDF — shuffle-free.
 
     A document's spans are already co-located in its row, so per-page blobs
     are built entirely JVM-side with higher-order functions over the
     offset-sorted span list (no explode→groupBy round trip: that was a full
     shuffle + sort of every span payload). Separators are control chars
-    outside the payload alphabet (kernel.TABLE_SEP / MEDIA_SEP).
-
-    ``salt_pages`` then hash-repartitions the *page rows* by
-    (doc_id, page) — the explicit skew salt of the north rule: a giant
-    document becomes many page rows spread across tasks before the
-    expensive kernel stage, instead of one straggler partition. This is the
-    pipeline's only data-sized exchange besides admission; disable for
-    corpora with bounded document sizes."""
+    outside the payload alphabet (kernel.TABLE_SEP / MEDIA_SEP). The page
+    rows keep the admitted frame's partitioning."""
     sorted_spans = F.sort_array(
         F.transform(
             F.col("spans"),
@@ -248,7 +241,7 @@ def page_frame(admitted: DataFrame, salt_pages: bool = True) -> DataFrame:
     gh = F.regexp_extract(first_media_ref, r"[?&]h=(\d+)", 1)
     geom = F.when((gw != "") & (gh != ""), F.concat(gw, F.lit("x"), gh)).otherwise(F.lit(""))
 
-    pages = with_pages.select(
+    return with_pages.select(
         "doc_id",
         "vendor",
         "page",
@@ -257,13 +250,6 @@ def page_frame(admitted: DataFrame, salt_pages: bool = True) -> DataFrame:
         F.array_join(_texts_of("media"), kernel.MEDIA_SEP).alias("media_blob"),
         F.coalesce(geom, F.lit("")).alias("geom"),
     )
-    if not salt_pages:
-        return pages
-    # Pin the exchange width: AQE's byte-based coalescing would shrink this
-    # stage to a handful of partitions (page blobs compress well), but the
-    # downstream cost is per-row Python in the kernel UDF, not bytes — a
-    # coalesced exchange serializes the pipeline's only expensive stage.
-    return pages.repartition(_kernel_width(pages.sparkSession), "doc_id", "page")
 
 
 def _kernel_width(spark) -> int:
@@ -288,7 +274,7 @@ def orientation_frame(docs: DataFrame) -> DataFrame:
     table_matches>=3 → no rotation, high confidence."""
     from .. import kernel as K
 
-    pages = page_frame(admit_documents(docs), salt_pages=False)
+    pages = page_frame(admit_documents(docs))
 
     def _hits(patterns):
         out = None
@@ -538,47 +524,24 @@ def doc_stats_frame(page_entries: DataFrame) -> DataFrame:
 
 
 def kernel_frames(
-    spark,
     docs: DataFrame,
-    winners: DataFrame | None,
-    persist: bool = True,
+    winners: DataFrame,
     track: list | None = None,
     cluster_by=None,
 ) -> tuple[DataFrame, DataFrame]:
-    """``(page_entries, entries)``: the two frames downstream of the Arrow
-    kernel that every per-doc output derives from. ``winners`` is the slim
-    admission decision ``(doc_id, eff_vendor, ...)`` to join onto ``docs``;
-    None when ``docs`` are already admitted. ``persist`` and ``track`` as
-    in run_pipeline. ``cluster_by``, an expression of ``doc_id``,
+    """``(page_entries, entries)``: the two persisted frames downstream of
+    the Arrow kernel that every per-doc output derives from, over the docs
+    ``winners`` admits (as in ``admit_documents``). ``track`` as in
+    run_pipeline. ``cluster_by``, an expression of ``doc_id``,
     hash-partitions the entries before they are cached: outputs derived
     from them, and anything grouped by the same expression, then need no
     further shuffle on it."""
-    if winners is not None:
-        # One span-bytes shuffle total: pin the PAYLOAD side of the
-        # admission join to hash partitioning on doc_id at the kernel's
-        # width, so the page explode happens in place and the kernel UDF
-        # inherits it. Skew moves from page- to doc-granularity, bounded
-        # by pages per doc. The slim winner side is NOT manually
-        # repartitioned: the join plans its own exchange to match the
-        # payload's partitioning when it sort-merges, and skips it
-        # entirely when AQE broadcasts the winner set — a manual
-        # repartition would pay that exchange even in the broadcast case.
-        big = docs.repartition(_kernel_width(spark), "doc_id")
-        admitted = big.join(winners.select("doc_id", "eff_vendor"), "doc_id").select(
-            "doc_id", F.col("eff_vendor").alias("vendor"), "file_hash", "spans"
-        )
-        pages = page_frame(admitted, salt_pages=False)
-    else:
-        pages = page_frame(docs)
-    page_entries = page_entries_frame(pages)
-    if persist:
-        page_entries = page_entries.persist()
+    page_entries = page_entries_frame(page_frame(admit_documents(docs, winners))).persist()
     entries = entries_frame(page_entries)
     if cluster_by is not None:
         entries = entries.repartition(cluster_by)
-    if persist:
-        entries = entries.persist()
-    if persist and track is not None:
+    entries = entries.persist()
+    if track is not None:
         track.extend([page_entries, entries])
     return page_entries, entries
 
@@ -599,46 +562,33 @@ def run_pipeline(
     spark,
     docs: DataFrame,
     job_ts: str = JOB_TS,
-    persist: bool = True,
-    admit: bool = True,
     track: list | None = None,
 ) -> dict[str, DataFrame]:
-    """Full job: ``kernel_frames`` → ``incremental_outputs`` plus the
-    corpus-global master log.
+    """Full job over ``docs`` (``spark`` is their session): admission →
+    ``kernel_frames`` → ``incremental_outputs`` plus the corpus-global
+    master log.
     Returns the four output DataFrames; callers persist with
     .write.partitionBy(...).parquet(...) (Iceberg writeTo on a real cluster).
 
-    ``persist`` caches the two frames downstream of the Arrow kernel — all
-    four outputs derive from them, and recomputing the kernel per output
-    would quadruple the job's only expensive stage. On a real cluster this
-    is persist(MEMORY_AND_DISK) or a checkpoint to the lineage location.
-    ``track`` (a caller-owned list) receives the persisted handles so the
-    caller can unpersist once its outputs are materialized — long-running
-    sessions (streaming micro-batches, repeated report jobs) must not
-    accumulate cached RDDs until eviction pressure.
+    The two frames downstream of the Arrow kernel are persisted — all four
+    outputs derive from them, and recomputing the kernel per output would
+    quadruple the job's only expensive stage. ``track`` (a caller-owned
+    list) receives the persisted handles so the caller can unpersist once
+    its outputs are materialized — long-running sessions (streaming
+    micro-batches, repeated report jobs) must not accumulate cached RDDs
+    until eviction pressure.
 
-    ``admit=False`` skips admission control for callers that have already
-    run it corpus-globally (admission is a first-wins window over the
-    *whole* input, so it must not be applied per resume subset).
-
-    With ``persist``, the slim winner set is persisted too: the master
-    log's doc-level meta then reads three slim columns from cache instead
-    of replaying the admission join over the span payload — at round 2
-    that replay made report_master_log 4.4x slower than the pipeline
-    outputs that reused the persisted kernel frames."""
+    The slim winner set is persisted too: the master log's doc-level meta
+    then reads three slim columns from cache instead of replaying the
+    admission join over the span payload — at round 2 that replay made
+    report_master_log 4.4x slower than the pipeline outputs that reused
+    the persisted kernel frames."""
     from .reports import master_log_frame
 
-    winners = None
-    doc_meta = docs.select("doc_id", "vendor", "file_hash")
-    if admit:
-        winners = admission_meta(docs, track=track)
-        if persist:
-            winners = winners.persist()
-            if track is not None:
-                track.append(winners)
-        doc_meta = winners.select("doc_id", F.col("eff_vendor").alias("vendor"), "file_hash")
-    out = incremental_outputs(
-        *kernel_frames(spark, docs, winners, persist=persist, track=track), job_ts
-    )
+    winners = admission_meta(docs, track=track).persist()
+    if track is not None:
+        track.append(winners)
+    doc_meta = winners.select("doc_id", F.col("eff_vendor").alias("vendor"), "file_hash")
+    out = incremental_outputs(*kernel_frames(docs, winners, track=track), job_ts)
     out["master_log"] = master_log_frame(out["extracted"], doc_meta, job_ts, track=track)
     return out

@@ -169,7 +169,7 @@ def run_with_lineage(
         # The entries are cached clustered by bucket as well, so the
         # extracted_spans/extracted writes and the metrics below shuffle no
         # further; doc_stats, grouped by doc_id, pays one bucket exchange.
-        page_entries, entries = kernel_frames(spark, docs, slim, track=cached, cluster_by=bucket)
+        page_entries, entries = kernel_frames(docs, slim, track=cached, cluster_by=bucket)
         for name, df in incremental_outputs(page_entries, entries).items():
             sink.write_partitioned(df.withColumn("bucket", bucket), root, name, "bucket")
             log.debug("%s written", name)

@@ -27,6 +27,7 @@ from __future__ import annotations
 
 import hashlib
 import os
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -80,8 +81,9 @@ def write_partitioned(df: DataFrame, root: str, name: str, partition_col: str) -
     """Dynamic partition overwrite: only the partitions present in ``df``
     are replaced (the exactly-once bucket-rewrite contract). V2
     ``overwritePartitions`` IS dynamic by definition; the parquet path
-    sets partitionOverwriteMode=dynamic on the write itself, leaving the
-    session's conf untouched. Rows are clustered by ``partition_col``
+    sets partitionOverwriteMode=dynamic on the write itself and the
+    session-catalog path in a separate session, leaving the caller's
+    session conf untouched. Rows are clustered by ``partition_col``
     first, so each partition value is written by one task into one file
     (a deployment sizes its buckets to the file size it wants)."""
     df = df.repartition(partition_col)
@@ -94,20 +96,7 @@ def write_partitioned(df: DataFrame, root: str, name: str, partition_col: str) -
 
             df.writeTo(ident).partitionedBy(F.col(partition_col)).create()
         elif _is_session_catalog(ident):
-            # The session catalog exposes V1 tables, which V2
-            # `overwritePartitions` refuses; emulate its dynamic
-            # semantics with INSERT OVERWRITE under
-            # partitionOverwriteMode=dynamic so the test suite can
-            # drive this whole code path without Iceberg jars.
-            prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", None)
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-            try:
-                _aligned_to_table(df, ident).write.insertInto(ident, overwrite=True)
-            finally:
-                if prev is None:
-                    spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-                else:
-                    spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+            _insert_overwrite_dynamic(_aligned_to_table(df, ident), ident)
         else:
             # Iceberg (or any V2) catalog: dynamic by definition.
             df.writeTo(ident).overwritePartitions()
@@ -122,6 +111,31 @@ def write_partitioned(df: DataFrame, root: str, name: str, partition_col: str) -
 
 def _is_session_catalog(ident: str) -> bool:
     return ident.startswith("spark_catalog.")
+
+
+def _insert_overwrite_dynamic(df: DataFrame, ident: str) -> None:
+    """The session catalog exposes V1 tables, which V2
+    ``overwritePartitions`` refuses; emulate its dynamic semantics with
+    INSERT OVERWRITE under partitionOverwriteMode=dynamic, so the test
+    suite can drive this whole code path without Iceberg jars. The mode is
+    set only in a new session over the same context (its conf starts from
+    the context's, not this session's runtime settings), which reads the
+    frame through a uniquely named global temp view: the caller's session
+    conf never changes, so no concurrent query on it sees dynamic mode."""
+    spark = df.sparkSession
+    view = f"sink_{uuid.uuid4().hex}"
+    db = spark.conf.get("spark.sql.globalTempDatabase")
+    df.createGlobalTempView(view)
+    try:
+        writer = spark.newSession()
+        writer.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+        # No PARTITION clause: every partition column of the table is
+        # dynamic, as with insertInto, so an evolved spec still resolves.
+        writer.sql(f"INSERT OVERWRITE TABLE {ident} SELECT * FROM {db}.{view}")
+    finally:
+        spark.catalog.dropGlobalTempView(view)
+    # Each session caches the table's file listing; drop this session's.
+    spark.catalog.refreshTable(ident)
 
 
 def _aligned_to_table(df: DataFrame, ident: str) -> DataFrame:

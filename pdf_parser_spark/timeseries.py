@@ -1690,8 +1690,8 @@ BM_WORD_BITS = 63  # bits per bitmap word (63 keeps 1<<bit positive BIGINT)
 
 def q_bitmap_distinct_window(spark, sf_dir):
     """EXACT daily + trailing-7-day distinct users via mergeable BITMAP
-    words — the ClickHouse/Druid device, and the exact complement of
-    hll_window_distinct: each day's events collapse once into
+    words — the ClickHouse/Druid device, and the exact complement of a
+    merged-HLL window count: each day's events collapse once into
     (word = user div 63, bits = OR of 1<<(user mod 63)) states; every
     overlapping window is then a bitwise-OR RANGE window over the dense
     day x word grid and a popcount rollup — the raw events are scanned

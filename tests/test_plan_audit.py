@@ -26,7 +26,6 @@ import re
 import pytest
 
 from pdf_parser_spark.analytics.queries import ANALYTIC_QUERIES
-from pdf_parser_spark.boilerplate import BOILERPLATE_QUERIES
 from pdf_parser_spark.datapipe import DATAPIPE_QUERIES
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -59,15 +58,12 @@ AUDITED = [
     "decontaminate",
     "exact_substring_dedup",
     "vocab_coverage",
-    "boilerplate_blocks",
-    "boilerplate_main_text",
 ]
 
 
 def _registry():
     reg = dict(ANALYTIC_QUERIES)
     reg.update(DATAPIPE_QUERIES)
-    reg.update(BOILERPLATE_QUERIES)
     return reg
 
 
@@ -110,7 +106,7 @@ def test_scan_paths_codegen(spark):
     itself is AQE-independent."""
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try:
-        for name in ["simhash", "gopher_quality", "boilerplate_blocks"]:
+        for name in ["simhash", "gopher_quality"]:
             assert "codegen id" in _plan(spark, name), name
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", "true")

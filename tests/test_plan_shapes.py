@@ -58,19 +58,6 @@ def test_scan_only_ops_have_single_exchange(spark):
         assert "Join" not in p and "Window" not in p, q.__name__
 
 
-def test_sketches_partial_aggregate(spark):
-    """CMS and HLL are one-aggregate sketches: partial aggregation must
-    appear (the sketch merges map-side) and the CMS probe join must be
-    a broadcast."""
-    from pdf_parser_spark.sketches import q_cms_heavy_hitters, q_hll_distinct
-
-    p = _plan(q_cms_heavy_hitters(spark, SF_DIR))
-    assert "partial_count" in p
-    assert "BroadcastHashJoin" in p
-    p = _plan(q_hll_distinct(spark, SF_DIR))
-    assert "partial_max" in p
-
-
 def test_hierarchical_rank_windows_stay_chunked(spark):
     """domain_cap's windows must be partitioned by the range chunk (the
     skew-safe decomposition) — a plain PARTITION BY source window (one
@@ -91,16 +78,6 @@ def test_fasttext_weights_broadcast(spark):
 
     p = _plan(q_fasttext_quality(spark, SF_DIR))
     assert "BroadcastHashJoin" in p
-    assert "partial_sum" in p
-
-
-def test_pagerank_contribs_combine_mapside(spark, no_checkpoint):
-    """Each PageRank round's contribution aggregate must partially
-    combine before the exchange (a mega-hub must not receive raw
-    per-edge rows)."""
-    from pdf_parser_spark.graph import q_pagerank_hosts
-
-    p = _plan(q_pagerank_hosts(spark, SF_DIR))
     assert "partial_sum" in p
 
 
@@ -171,16 +148,6 @@ def test_pps_sample_uses_chunked_prefix(spark, no_checkpoint):
             raise AssertionError(ln)
 
 
-def test_bpe_encode_wordmap_broadcasts(spark, no_checkpoint):
-    """The (word, n_sym) map must join back by broadcast — the corpus
-    side never shuffles on the word key."""
-    from pdf_parser_spark.bpe import q_bpe_encode
-
-    p = _plan(q_bpe_encode(spark, SF_DIR))
-    assert "BroadcastHashJoin" in p
-    assert "SortMergeJoin" not in p
-
-
 def test_salted_join_sortmerge_on_salted_key(spark):
     """The salted join must take the sort-merge path (the device exists
     for the non-broadcastable dim) and its join key must include the
@@ -232,17 +199,6 @@ def test_pivot_is_single_aggregate_no_discovery_scan(spark):
     assert "partial_sum" in p
 
 
-def test_triangle_no_cartesian(spark):
-    """Triangle enumeration is two equi-joins + one aggregate — a
-    cartesian/nested-loop anywhere means the wedge join degenerated."""
-    from pdf_parser_spark.graph import q_triangle_count
-
-    p = _plan(q_triangle_count(spark, SF_DIR))
-    assert "CartesianProduct" not in p
-    assert "BroadcastNestedLoopJoin" not in p
-    assert "partial_count" in p
-
-
 def test_interval_overlap_no_cartesian(spark):
     """The binned interval-overlap join must stay an equi-join on the
     bin — a CartesianProduct/NestedLoop anywhere means the overlap
@@ -254,17 +210,6 @@ def test_interval_overlap_no_cartesian(spark):
     p = _plan(q_interval_overlap_join(spark, SF_DIR))
     assert "CartesianProduct" not in p
     assert "BroadcastNestedLoopJoin" not in p
-
-
-def test_hll_window_sketch_merges_map_side(spark):
-    """The daily register collapse must partially aggregate map-side
-    (partial_max), and the windowed merge must run on the dense grid,
-    not raw events (the grid cross join is the 16-row broadcast)."""
-    from pdf_parser_spark.sketches import q_hll_window_distinct
-
-    p = _plan(q_hll_window_distinct(spark, SF_DIR))
-    assert "partial_max" in p
-    assert "CartesianProduct" not in p
 
 
 def test_tpch_shapes_semi_broadcast_anti(spark):

@@ -113,7 +113,7 @@ def simple_catalog(spark, monkeypatch, tmp_path):
     root = str(tmp_path / "job")
     monkeypatch.setenv("SPARK_GRAFT_ICEBERG_NS", "spark_catalog.default")
     yield root
-    for name in ("evo_t", "evo_t2", "evo_t3"):
+    for name in ("evo_t", "evo_t2", "evo_t3", "conf_t"):
         spark.sql(f"DROP TABLE IF EXISTS {sink.table_ident(root, name)}")
 
 
@@ -162,6 +162,41 @@ def test_session_catalog_insert_schema_mismatch_raises(spark, simple_catalog):
         sink.append(renamed, root, "evo_t2")
     with pytest.raises(ValueError, match="schema mismatch"):
         sink.write_partitioned(renamed, root, "evo_t2", "bucket")
+
+
+def test_session_catalog_overwrite_leaves_session_conf_untouched(
+    spark, simple_catalog, monkeypatch
+):
+    """No session-global side effects in catalog mode either: the dynamic
+    overwrite of an existing session-catalog table sets and unsets no conf
+    on the caller's session, which stays STATIC throughout, and the bucket
+    the second write does not carry survives it."""
+    root = simple_catalog
+    calls = []
+    real_set, real_unset = spark.conf.set, spark.conf.unset
+
+    def spy_set(key, value):
+        calls.append(("set", key))
+        return real_set(key, value)
+
+    def spy_unset(key):
+        calls.append(("unset", key))
+        return real_unset(key)
+
+    key = "spark.sql.sources.partitionOverwriteMode"
+    spark.conf.set(key, "STATIC")
+    try:
+        monkeypatch.setattr(spark.conf, "set", spy_set)
+        monkeypatch.setattr(spark.conf, "unset", spy_unset)
+        for doc_id, bucket in (("a", 0), ("b", 1)):
+            df = spark.createDataFrame([(doc_id, bucket)], "doc_id string, bucket int")
+            sink.write_partitioned(df, root, "conf_t", "bucket")
+        assert calls == []
+        assert spark.conf.get(key) == "STATIC"
+        rows = sink.read(spark, root, "conf_t").collect()
+        assert sorted((r["doc_id"], r["bucket"]) for r in rows) == [("a", 0), ("b", 1)]
+    finally:
+        real_unset(key)
 
 
 def test_partition_spec_evolution_is_detected(spark, simple_catalog):
