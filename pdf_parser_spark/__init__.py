@@ -10,11 +10,11 @@ Arrow-vectorized UDFs (zero per-row Python at the Spark API level).
 Layout:
   configs         — the five vendor extraction "programs" (declarative regex configs)
   kernel          — pure-Python per-page extraction semantics (single source of
-                    truth, shared by the Arrow UDF and the pytest oracle)
-  vendor_detect   — vendor routing: pure-Python spec, run on Spark as an Arrow UDF
+                    truth, shared by the job's Python stage and the pytest oracle)
+  vendor_detect   — vendor routing: pure-Python spec, run in the job's Python stage
   corpus          — deterministic synthetic corpus generator (seeded)
   oracle          — pure-Python corpus-level reference implementation
-  extraction/     — the Spark pipeline (admission → page agg → kernel UDF →
+  extraction/     — the Spark pipeline (route+pages+kernel in one mapInArrow → admission →
                     fan-out/dedup/unpivot/stats/master-log/reports)
   lineage, sink   — bucketed exactly-once batch job over parquet or catalog tables
   streaming       — per-upload micro-batch ingest, compaction, doc status machine,

@@ -1,16 +1,20 @@
 """The extraction pipeline — idiomatic-Spark restatement of the reference's
 extract_pdf_fields + tasks.py persistence (/root/reference/extractor/).
 
-Shape of the job (the span payload is shuffled once):
+Shape of the job (one Python crossing; the span payload is shuffled once):
 
   documents(doc_id, vendor, file_hash, spans)
-    → routing: vendor_detect.route_doc per doc (Python crossing 1; Arrow)
-    → admission on a slim projection: min_by first-wins per file_hash
-      (H3/J4), joined back to every routed doc
-    → the payload, hash-partitioned by doc_id at one task per core, joined
-      to the winners (the only exchange that moves span bytes)
-    → in-row page assembly (higher-order functions over each doc's spans)
-    → extract_page_udf (Python crossing 2; Arrow batches)
+    → hash-partitioned by doc_id at one task per core (the only exchange
+      that moves span bytes)
+    → route_and_extract (udfs.py; the one Python crossing, mapInArrow): per
+      doc, vendor_detect.route_doc, then for docs routing lets through
+      oracle.doc_pages and kernel.extract_page_entries; one slim row per doc
+      (routing columns + pages of entries, no spans)
+    → first-wins admission over those rows, JVM-only: min_by per file_hash
+      (H3/J4), partially aggregated in the same stage; losing duplicates
+      were extracted speculatively and are dropped here; the winners are
+      persisted
+    → explode(pages) of the winners (doc_id, vendor, page, entries, used_ocr)
     → posexplode(entries) fan-out (R8)
     → groupBy(doc_id): md5 entry hash (H1), first-wins dedup (H2) and
       sequencing in one in-row fold
@@ -25,7 +29,7 @@ from pyspark.sql import functions as F
 from .. import kernel
 from ..configs import FIELD_KEYS, VENDOR_CONFIGS
 from ..oracle import JOB_TS
-from .udfs import extract_page_udf
+from .udfs import extract_page_udf, route_and_extract
 
 
 def _vendor_name_col(vendor_col):
@@ -38,38 +42,41 @@ def _vendor_name_col(vendor_col):
     return expr
 
 
+def _slot_winners(routed: DataFrame) -> DataFrame:
+    """First-wins on content hash: per file_hash, the row of ``routed`` (one
+    row per doc with ``doc_id`` and ``file_hash``) with the smallest doc_id.
+    That doc holds the hash slot whether or not routing lets it through
+    (the reference records ERROR uploads too), so a doc is admitted iff it
+    is its hash's slot winner and its ``pre_reason`` is NULL.
+
+    A min_by AGGREGATE, not a row_number window: a window partition is one
+    task, and the most duplicated content in a real crawl (empty pages,
+    error pages) can share one hash across millions of rows — the
+    aggregate absorbs a hot hash in map-side partial combine."""
+    return (
+        routed.groupBy("file_hash")
+        .agg(F.min_by(F.struct(*routed.columns), "doc_id").alias("_w"))
+        .select("_w.*")
+    )
+
+
 def _routed_ranked(docs: DataFrame, track: list | None = None) -> DataFrame:
-    """Shared admission-router plan: per-doc detection/routing columns
-    (vendor_detect.route_columns — the routing spec through one Arrow UDF)
-    + hash first-wins winner flag (`_rn` 1/2) and the slot winner's
-    effective vendor.
+    """Routing columns of every doc (vendor_detect.route_columns, the
+    routing spec through one Arrow UDF) ranked against its hash's
+    ``_slot_winners`` row: ``_rn`` (1 for the slot winner, else 2) and
+    ``_winner_vendor``, the slot winner's effective vendor, which the
+    quarantine reasons of losing duplicates need. Not on the job path
+    (that is ``admitted_pages``): the quarantine and admission-only frames
+    use it.
 
-    Two skew/scale properties:
-
-    * The decision runs on a SLIM projection (no spans): admission is a
-      pure function of (doc_id, file_hash, routing columns), so the span
-      payloads — the overwhelming majority of the bytes — never enter
-      this shuffle. At sf20 the full-row form was a ~20 s stage that
-      barely sped up from 8 to 32 cores (shuffle-bound); slim it is
-      megabytes.
-    * The winner is a min_by AGGREGATE joined back by hash, not a
-      row_number window: a window partition is one task, and the most
-      duplicated content in a real crawl (empty pages, error pages) can
-      share one hash across millions of rows — the aggregate absorbs a
-      hot hash in map-side partial combine, and the join-back's hot key
-      sits on the big side of an equi-join, which AQE skew-split handles.
-
-    The slim frame is persist()ed before it branches into the aggregate
-    and the join-back: without it, each join side would run the routing
-    UDF over the docs again. With it, routing runs once and both branches
-    read the InMemoryRelation (O(n_docs) routing columns, no span
-    payloads). persist, not localCheckpoint: CacheManager entries are
-    released deterministically via ``track``/clearCache, while a
-    localCheckpoint RDD proved unreclaimable even after full GC
-    (UI/listener references pin it), stranding one slim copy per job in
-    executor memory. ``track`` (a list) receives the persisted handle;
-    lineage.run_with_lineage additionally persists the filtered winner
-    set across its derivations."""
+    The winners are joined back by hash; that join's hot key sits on the
+    big side of an equi-join, which AQE skew-split handles. The slim
+    routed frame (no spans) is read twice, by the aggregate and the
+    join-back, so it is persisted and routing runs once. persist, not
+    localCheckpoint: CacheManager entries are released deterministically
+    via ``track``/clearCache, while a localCheckpoint RDD proved
+    unreclaimable even after full GC (UI/listener references pin it).
+    ``track`` (a list) receives the persisted handle."""
     from ..vendor_detect import route_columns
 
     slim = route_columns(docs).select(
@@ -77,14 +84,10 @@ def _routed_ranked(docs: DataFrame, track: list | None = None) -> DataFrame:
     ).persist()
     if track is not None:
         track.append(slim)
-    winners = (
-        slim.groupBy("file_hash")
-        .agg(F.min_by(F.struct("doc_id", "eff_vendor"), "doc_id").alias("_w"))
-        .select(
-            "file_hash",
-            F.col("_w.doc_id").alias("_winner_id"),
-            F.col("_w.eff_vendor").alias("_winner_vendor"),
-        )
+    winners = _slot_winners(slim.select("file_hash", "doc_id", "eff_vendor")).select(
+        "file_hash",
+        F.col("doc_id").alias("_winner_id"),
+        F.col("eff_vendor").alias("_winner_vendor"),
     )
     return (
         slim.join(winners, "file_hash")
@@ -98,11 +101,32 @@ def _routed_ranked(docs: DataFrame, track: list | None = None) -> DataFrame:
     )
 
 
+def admitted_pages(docs: DataFrame) -> DataFrame:
+    """``(doc_id, eff_vendor, file_hash, pages)`` of every admitted doc: the
+    job's one Python stage (``udfs.route_and_extract``: route, build pages
+    and extract every doc) feeding first-wins admission, JVM-only, in the
+    same stage's map-side aggregate. Its output is read once, so nothing
+    here is persisted; callers persist the result.
+
+    The aggregated rows are slim: admission is a pure function of (doc_id,
+    file_hash, routing columns), so the span payloads — the overwhelming
+    majority of the bytes — never enter its shuffle; the pages carry only
+    extracted entries. Losing duplicates are extracted speculatively (~1%
+    of docs in the generated mix)."""
+    routed = route_and_extract(docs, _kernel_width(docs.sparkSession))
+    return (
+        _slot_winners(routed)
+        .where(F.col("pre_reason").isNull())
+        .select("doc_id", "eff_vendor", "file_hash", "pages")
+    )
+
+
 def admission_meta(docs: DataFrame, track: list | None = None) -> DataFrame:
     """(doc_id, eff_vendor, file_hash) of every admitted doc — the winner
     set PLUS the doc-level metadata the master log needs, so report
     derivations never have to re-join the span payload just to recover
-    three slim columns (the round-2 report_master_log 4.4x regression)."""
+    three slim columns (the round-2 report_master_log 4.4x regression).
+    Not on the job path (``admitted_pages`` admits there)."""
     return (
         _routed_ranked(docs, track=track)
         .where((F.col("_rn") == 1) & F.col("pre_reason").isNull())
@@ -110,28 +134,25 @@ def admission_meta(docs: DataFrame, track: list | None = None) -> DataFrame:
     )
 
 
-def admit_documents(docs: DataFrame, winners: DataFrame | None = None) -> DataFrame:
+def admit_documents(docs: DataFrame) -> DataFrame:
     """Admission control + router (views.py:154-240, views/core.py:622-668
     → SURVEY.md H3/J4/R11/S10): vendor detection routes unlabeled docs and
     blocks high-confidence label contradictions; first-wins dedup on the
     sha256 content hash rejects later duplicate uploads regardless of
     vendor; only configured (effective) vendors proceed. The exact
     per-doc decision order lives in oracle.route_and_admit — this is its
-    DataFrame form; admitted docs carry their effective vendor.
+    DataFrame form; admitted docs carry their effective vendor. Not on the
+    job path: orientation_frame and the benchmark's layer sweep use it.
 
-    ``winners`` is the slim admission decision ``(doc_id, eff_vendor, ...)``
-    (``admission_meta`` when omitted), joined back onto the span rows by
-    doc_id. That join is the only exchange that moves span bytes: the
-    PAYLOAD side is pinned to hash partitioning on doc_id at the kernel's
-    width, so the page explode happens in place and the kernel UDF
-    inherits it. Skew is bounded by pages per doc. The slim winner side is
-    NOT manually repartitioned: the join plans its own exchange to match
-    the payload's partitioning when it sort-merges, and skips it entirely
-    when AQE broadcasts the winner set."""
-    if winners is None:
-        winners = admission_meta(docs)
+    The slim decision (``admission_meta``) is joined back onto the span
+    rows by doc_id. The PAYLOAD side is pinned to hash partitioning on
+    doc_id at the kernel's width, so page_frame's explode happens in place
+    and the kernel UDF inherits it. The slim side is NOT manually
+    repartitioned: the join plans its own exchange to match the payload's
+    partitioning when it sort-merges, and skips it entirely when AQE
+    broadcasts the winner set."""
     payload = docs.repartition(_kernel_width(docs.sparkSession), "doc_id")
-    return payload.join(winners.select("doc_id", "eff_vendor"), "doc_id").select(
+    return payload.join(admission_meta(docs).select("doc_id", "eff_vendor"), "doc_id").select(
         "doc_id", F.col("eff_vendor").alias("vendor"), "file_hash", "spans"
     )
 
@@ -182,6 +203,8 @@ def vendor_routing_frame(docs: DataFrame) -> DataFrame:
 
 def page_frame(admitted: DataFrame) -> DataFrame:
     """Assemble ordered per-page inputs for the kernel UDF — shuffle-free.
+    Not on the job path (udfs.route_and_extract builds pages with
+    oracle.doc_pages there); orientation_frame uses it.
 
     A document's spans are already co-located in its row, so per-page blobs
     are built entirely JVM-side with higher-order functions over the
@@ -253,13 +276,15 @@ def page_frame(admitted: DataFrame) -> DataFrame:
 
 
 def _kernel_width(spark) -> int:
-    """Task count of the kernel UDF stage: one task per core. Each Python
+    """Task count of the job's one Python stage (route, pages and kernel;
+    udfs.route_and_extract): one task per core. Each Python
     task pays a fixed set-up (~0.3 s measured on a 4-core host against
     8-23 ms for a JVM task): PySpark's worker calls
     ``importlib.invalidate_caches()`` per task, which on Python 3.11
     re-reads pyspark.zip's directory once per zipimporter. Per-doc kernel
-    cost is bounded by pages per doc (at most 50 pages of ~0.2 ms), so
-    further waves buy no skew headroom — only more set-ups."""
+    cost is bounded by pages per doc (at most 50 pages of ~0.2 ms) plus
+    one routing call, so further waves buy no skew headroom — only more
+    set-ups."""
     return spark.sparkContext.defaultParallelism
 
 
@@ -322,6 +347,8 @@ def orientation_frame(docs: DataFrame) -> DataFrame:
 
 
 def page_entries_frame(pages: DataFrame) -> DataFrame:
+    """``page_frame`` rows through ``extract_page_udf``. Not on the job path
+    (``kernel_frames`` explodes the fused stage's pages there)."""
     # Select the struct result once, expand in a second projection: selecting
     # r["entries"] and r["used_ocr"] directly would plan the Python UDF twice
     # (one evaluation per referenced sub-field).
@@ -524,25 +551,27 @@ def doc_stats_frame(page_entries: DataFrame) -> DataFrame:
 
 
 def kernel_frames(
-    docs: DataFrame,
     winners: DataFrame,
     track: list | None = None,
     cluster_by=None,
 ) -> tuple[DataFrame, DataFrame]:
-    """``(page_entries, entries)``: the two persisted frames downstream of
-    the Arrow kernel that every per-doc output derives from, over the docs
-    ``winners`` admits (as in ``admit_documents``). ``track`` as in
-    run_pipeline. ``cluster_by``, an expression of ``doc_id``,
+    """``(page_entries, entries)``, the two frames every per-doc output
+    derives from, over ``winners`` (``admitted_pages``, persisted by the
+    caller). ``page_entries`` is the winners' pages exploded, one narrow
+    step over that cache; ``entries`` is persisted and ``track`` receives
+    its handle. ``cluster_by``, an expression of ``doc_id``,
     hash-partitions the entries before they are cached: outputs derived
     from them, and anything grouped by the same expression, then need no
     further shuffle on it."""
-    page_entries = page_entries_frame(page_frame(admit_documents(docs, winners))).persist()
+    page_entries = winners.select(
+        "doc_id", F.col("eff_vendor").alias("vendor"), F.explode("pages").alias("p")
+    ).select("doc_id", "vendor", "p.page", "p.entries", "p.used_ocr")
     entries = entries_frame(page_entries)
     if cluster_by is not None:
         entries = entries.repartition(cluster_by)
     entries = entries.persist()
     if track is not None:
-        track.extend([page_entries, entries])
+        track.append(entries)
     return page_entries, entries
 
 
@@ -564,31 +593,26 @@ def run_pipeline(
     job_ts: str = JOB_TS,
     track: list | None = None,
 ) -> dict[str, DataFrame]:
-    """Full job over ``docs`` (``spark`` is their session): admission →
-    ``kernel_frames`` → ``incremental_outputs`` plus the corpus-global
-    master log.
-    Returns the four output DataFrames; callers persist with
+    """Full job over ``docs`` (``spark`` is their session): ``admitted_pages``
+    → ``kernel_frames`` → ``incremental_outputs`` plus the corpus-global
+    master log — the same assembly ``lineage.run_with_lineage`` runs per
+    bucket. Returns the four output DataFrames; callers persist with
     .write.partitionBy(...).parquet(...) (Iceberg writeTo on a real cluster).
 
-    The two frames downstream of the Arrow kernel are persisted — all four
-    outputs derive from them, and recomputing the kernel per output would
-    quadruple the job's only expensive stage. ``track`` (a caller-owned
-    list) receives the persisted handles so the caller can unpersist once
-    its outputs are materialized — long-running sessions (streaming
-    micro-batches, repeated report jobs) must not accumulate cached RDDs
-    until eviction pressure.
-
-    The slim winner set is persisted too: the master log's doc-level meta
-    then reads three slim columns from cache instead of replaying the
-    admission join over the span payload — at round 2 that replay made
-    report_master_log 4.4x slower than the pipeline outputs that reused
-    the persisted kernel frames."""
+    The admitted winners and the entries are persisted: every output
+    derives from them, and recomputing per output would repeat the job's
+    only Python stage. ``track`` (a
+    caller-owned list) receives the persisted handles so the caller can
+    unpersist once its outputs are materialized — long-running sessions
+    (streaming micro-batches, repeated report jobs) must not accumulate
+    cached RDDs until eviction pressure. The master log's doc-level meta
+    reads three slim columns of the cached winners."""
     from .reports import master_log_frame
 
-    winners = admission_meta(docs, track=track).persist()
+    winners = admitted_pages(docs).persist()
     if track is not None:
         track.append(winners)
     doc_meta = winners.select("doc_id", F.col("eff_vendor").alias("vendor"), "file_hash")
-    out = incremental_outputs(*kernel_frames(docs, winners, track=track), job_ts)
+    out = incremental_outputs(*kernel_frames(winners, track=track), job_ts)
     out["master_log"] = master_log_frame(out["extracted"], doc_meta, job_ts, track=track)
     return out

@@ -3,8 +3,9 @@
 This module is the single source of truth for the reference's per-page
 extraction semantics. It is executed in two places:
 
-  * inside the Arrow-vectorized pandas UDF of the Spark pipeline
-    (pdf_parser_spark.extraction.udfs) — one call per page row of a batch;
+  * inside the Spark job's one Python stage, a ``mapInArrow`` over documents
+    (pdf_parser_spark.extraction.udfs.route_and_extract) — one call per page
+    of each routed document;
   * inside the pure-Python corpus oracle (pdf_parser_spark.oracle) that the
     pytest suite compares the Spark pipeline against.
 
@@ -42,7 +43,8 @@ FIELD_KEYS = ("PLATE_NO", "HEAT_NO", "TEST_CERT_NO")
 # (extractor.py:87-91,101).
 _TABLE_VERBATIM = ("PART_NO", "PRODUCT_NO", "HEAT_NO", "CERTIFICATE_NO", "REPORT_NO")
 
-# Separators used to ship per-page span groups into the Arrow UDF as flat
+# Separators used to ship per-page span groups into the page-kernel UDF
+# (extraction.pipeline.page_frame, off the job path) as flat
 # strings (chosen outside any payload alphabet).
 TABLE_SEP = "\x1d"
 MEDIA_SEP = "\x1e"

@@ -6,13 +6,17 @@ done as a table instead of per-row ORM writes).
 
 Model
 -----
-1. **Global admission first.** Admission control (first-wins dedup on
-   file_hash + vendor routing) is a corpus-global window. A fresh run
-   computes it ONCE per job over a slim projection (no span payloads),
-   persists the winner set, and reuses it for the pipeline join, the
-   bucket listing and ``doc_meta``; a resume anti-joins the input against
-   completed buckets' persisted winners first, so its admission cost is
-   proportional to the remaining work, not the whole input.
+1. **One Python pass, then global admission.** Each doc crosses into
+   Python once, in one stage that routes it, builds its pages and runs the
+   kernel (extraction.udfs.route_and_extract) and emits a slim row
+   (routing columns and extracted pages, no span payloads). Admission
+   control (first-wins dedup on file_hash + vendor routing) is
+   corpus-global: it aggregates those rows JVM-only, ONCE per job, and the
+   persisted winner set feeds the outputs, the bucket listing and
+   ``doc_meta``. Losing duplicates are extracted speculatively and dropped.
+   A resume anti-joins the input against completed buckets' persisted
+   winners first, so its cost is proportional to the remaining work, not
+   the whole input.
 2. **Bucketed incremental processing.** Admitted documents are assigned to
    ``n_buckets`` stable work partitions by ``pmod(xxhash64(doc_id), B)``.
    One run processes every bucket not yet COMPLETED in the lineage table,
@@ -55,7 +59,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import sink
-from .extraction.pipeline import _routed_ranked, incremental_outputs, kernel_frames
+from .extraction.pipeline import admitted_pages, incremental_outputs, kernel_frames
 
 INCREMENTAL_TABLES = ("extracted_spans", "extracted", "doc_stats", "doc_meta")
 OUTPUT_TABLES = INCREMENTAL_TABLES + ("master_log",)
@@ -128,28 +132,21 @@ def run_with_lineage(
         )
         docs = docs.join(known_hashes, "file_hash", "left_anti")
 
-    # Slim admission, computed ONCE: routing columns + first-wins window
-    # over (doc_id, eff_vendor, file_hash) only — no span payloads. The
-    # persisted handle feeds the bucket listing, doc_meta, and the pipeline
-    # join, so routing runs a single time per job. It is O(n_docs) slim
-    # rows — tiny next to span bytes. It is cached clustered by bucket, so
-    # neither the bucket listings nor the doc_meta write shuffle again.
-    # Every persisted frame is released on the way out, whether the job
-    # finished or raised.
+    # Route, pages and kernel in one Python stage, then first-wins
+    # admission over its slim output, computed ONCE. The winners (routing
+    # decision and extracted pages, no span payloads) are cached clustered
+    # by bucket, so neither the bucket listings, the doc_meta write nor the
+    # outputs' explode shuffle them again. Every persisted frame is
+    # released on the way out, whether the job finished or raised.
     cached: list = []
     bucket = _bucket(F.col("doc_id"), n_buckets)
-    slim = (
-        _routed_ranked(docs, track=cached)
-        .where((F.col("_rn") == 1) & F.col("pre_reason").isNull())
-        .select("doc_id", "eff_vendor", "file_hash")
-        .withColumn("bucket", bucket)
-    )
+    winners = admitted_pages(docs).withColumn("bucket", bucket)
     if done:
-        slim = slim.where(~F.col("bucket").isin(list(done)))
-    slim = slim.repartition("bucket").persist()
-    cached.append(slim)
+        winners = winners.where(~F.col("bucket").isin(list(done)))
+    winners = winners.repartition("bucket").persist()
+    cached.append(winners)
     try:
-        ran = sorted(r["bucket"] for r in slim.select("bucket").distinct().collect())
+        ran = sorted(r["bucket"] for r in winners.select("bucket").distinct().collect())
         log.debug("job %s: %d buckets to run, %d done", job_id, len(ran), len(done))
         if not ran:
             return {"job_id": job_id, "buckets_run": 0, "buckets_skipped": len(done)}
@@ -160,7 +157,7 @@ def run_with_lineage(
         # known-hash anti-set filters to COMPLETED buckets only) and the
         # dynamic overwrite rewrites them.
         sink.write_partitioned(
-            slim.select("doc_id", F.col("eff_vendor").alias("vendor"), "file_hash", "bucket"),
+            winners.select("doc_id", F.col("eff_vendor").alias("vendor"), "file_hash", "bucket"),
             root,
             "doc_meta",
             "bucket",
@@ -169,7 +166,7 @@ def run_with_lineage(
         # The entries are cached clustered by bucket as well, so the
         # extracted_spans/extracted writes and the metrics below shuffle no
         # further; doc_stats, grouped by doc_id, pays one bucket exchange.
-        page_entries, entries = kernel_frames(docs, slim, track=cached, cluster_by=bucket)
+        page_entries, entries = kernel_frames(winners, track=cached, cluster_by=bucket)
         for name, df in incremental_outputs(page_entries, entries).items():
             sink.write_partitioned(df.withColumn("bucket", bucket), root, name, "bucket")
             log.debug("%s written", name)
@@ -177,7 +174,7 @@ def run_with_lineage(
         # Metrics per bucket from the persisted entries the outputs were
         # written from: each entry is 4 extracted_spans rows and one
         # extracted row per non-empty field, and each doc with entries has
-        # exactly one entry ranked 1. Listing the buckets from slim
+        # exactly one entry ranked 1. Listing the buckets from winners
         # completes buckets whose admitted docs yielded no entries. One
         # task writes the few rows.
         metrics = entries.groupBy(bucket.alias("bucket")).agg(
@@ -189,7 +186,7 @@ def run_with_lineage(
         )
         now = time.time()
         sink.append(
-            slim.select("bucket").distinct().join(metrics, "bucket", "left").select(
+            winners.select("bucket").distinct().join(metrics, "bucket", "left").select(
                 F.lit(job_id).alias("job_id"),
                 "bucket",
                 F.coalesce("n_docs", F.lit(0)).cast("long").alias("n_docs"),

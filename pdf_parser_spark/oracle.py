@@ -8,10 +8,14 @@ Spark involvement. The pytest suite asserts span-sequence equality
 DataFrame pipeline, and the driver's DuckDB check reads this oracle's
 materialized outputs as the expected side.
 
-Only the per-page kernel (pdf_parser_spark.kernel) is shared with the Spark
-pipeline; everything relational here — admission, first-wins dedup, span
+The per-document half is shared with the Spark pipeline: its one Python
+stage (extraction.udfs.route_and_extract) calls vendor_detect.route_doc,
+``doc_pages`` and the per-page kernel (pdf_parser_spark.kernel) as the oracle
+does. Everything relational here — admission, first-wins dedup, span
 sequencing, unpivot, stats, master-log zip-align — is implemented
-independently (Python loops here, windows/aggregations there).
+independently (Python loops here, windows/aggregations there). The JVM page
+assembly (extraction.pipeline.page_frame) stays checked against ``doc_pages``
+through the orientation differential.
 
 Determinism deviations from the reference, pinned on purpose (SURVEY.md §7):
 wall-clock ``Created`` timestamps become a single ``job_ts`` parameter, and

@@ -14,11 +14,12 @@ Transcribes the reference's vendor-detection scoring
     (:21-52 — the OCR fallback for short text layers is not consulted
     here: media spans are OCR *candidates* in the span model).
 
-One implementation: ``route_doc`` (pure Python) is the spec, the oracle
-calls it directly, and ``route_columns`` runs it on Spark through one Arrow
-``pandas_udf`` over each doc's label and text spans — the same shape as the
-kernel UDF (extraction/udfs.py). Python ``re`` is the only regex dialect
-routing is written in.
+One implementation: ``route_doc`` (pure Python) is the spec. The oracle
+calls it directly, and so does the job's one Python stage
+(extraction/udfs.py ``route_and_extract``), per doc before extracting it.
+``route_columns`` runs it on Spark through one Arrow ``pandas_udf`` over
+each doc's label and text spans, for the quarantine and routing-evidence
+frames. Python ``re`` is the only regex dialect routing is written in.
 
 Routing semantics (the reference's upload flow, views.py:154-240 +
 views/core.py:622-668, re-expressed for an unattended table-scale run):
@@ -225,7 +226,7 @@ def _route_udf(vendor: pd.Series, text_spans: pd.Series) -> pd.DataFrame:
 
 def route_columns(docs: DataFrame) -> DataFrame:
     """Adds eff_vendor / detected / confidence / pre_reason — ``route_doc``
-    per row. Only the text spans cross into Python (detection reads
+    per row. Not on the job path (udfs.route_and_extract routes there). Only the text spans cross into Python (detection reads
     nothing else); the struct result is selected once and expanded in a
     second projection so the UDF is planned once, not once per field."""
     cols = docs.columns

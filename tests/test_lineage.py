@@ -16,7 +16,8 @@ from pathlib import Path
 import pytest
 from pyspark.sql import functions as F
 
-from pdf_parser_spark import corpus, lineage
+from pdf_parser_spark import corpus, lineage, oracle, vendor_detect
+from pdf_parser_spark.configs import VENDOR_CONFIGS
 
 N_DOCS = 120
 N_BUCKETS = 8
@@ -144,13 +145,13 @@ def test_resume_admission_skips_completed_docs(spark, docs_df, tmp_path, monkeyp
     spark.createDataFrame(kept, schema=lineage._LINEAGE_SCHEMA).write.parquet(lin_path)
 
     seen = {}
-    real_ranked = lineage._routed_ranked
+    real_admitted = lineage.admitted_pages
 
     def spy(docs, **kwargs):
         seen["n_input"] = docs.count()
-        return real_ranked(docs, **kwargs)
+        return real_admitted(docs, **kwargs)
 
-    monkeypatch.setattr(lineage, "_routed_ranked", spy)
+    monkeypatch.setattr(lineage, "admitted_pages", spy)
     expected = {n: _rows(spark, root, n) for n in lineage.OUTPUT_TABLES}
     s = lineage.run_with_lineage(spark, docs_df, root, "resume", N_BUCKETS)
     assert s["buckets_skipped"] == N_BUCKETS // 2
@@ -277,3 +278,129 @@ def test_lineage_metrics_match_written_outputs(spark, docs_df, tmp_path):
             n_entries.get(r["bucket"], 0),
             n_spans,
         ), r
+
+
+def _dup_heavy_corpus() -> list[dict]:
+    """``gen_corpus(N_DOCS)`` plus a re-upload of every other doc under a new
+    doc_id (same file_hash and spans), and three copies that exercise the
+    router: an unlabeled copy of a detection_mismatch doc (the ERROR record
+    holds the hash slot, so no copy is admitted), a relabeled copy of an
+    admitted doc (vendor_mismatch) and an unlabeled copy, sorting before its
+    original, that wins the slot by detection."""
+    base = corpus.gen_corpus(N_DOCS)
+    docs = base + [{**d, "doc_id": d["doc_id"] + "r"} for d in base[::2]]
+    route = vendor_detect.route_doc
+    mis = next(d for d in base if route(d)["pre_reason"] == "detection_mismatch")
+    docs.append({**mis, "doc_id": mis["doc_id"] + "u", "vendor": ""})
+    admitted = oracle.admit(base)
+    relabeled = next(
+        {**d, "doc_id": d["doc_id"] + "v", "vendor": v}
+        for d in admitted
+        for v in VENDOR_CONFIGS
+        if v != d["vendor"] and route({**d, "vendor": v})["pre_reason"] is None
+    )
+    by_detection = next(
+        {**d, "doc_id": d["doc_id"][:-1] + str(int(d["doc_id"][-1]) - 1) + "u", "vendor": ""}
+        for d in admitted
+        if d["vendor"] != "" and d["doc_id"][-1] != "0"
+        and route({**d, "vendor": ""})["eff_vendor"] == d["vendor"]
+    )
+    docs += [relabeled, by_detection]
+    _admitted, quarantine = oracle.route_and_admit(docs)
+    reasons = {q["doc_id"]: q["reason"] for q in quarantine}
+    assert reasons[mis["doc_id"] + "u"] == "vendor_mismatch"
+    assert reasons[relabeled["doc_id"]] == "vendor_mismatch"
+    assert by_detection["doc_id"] in {d["doc_id"] for d in _admitted}
+    return docs
+
+
+def _sorted_rows(rows, cols):
+    return sorted(tuple(r[c] for c in cols) for r in rows)
+
+
+def test_lineage_equals_oracle_duplicate_heavy(spark, tmp_path):
+    """The shipped path (run_with_lineage + read_output) equals the oracle
+    on a corpus where a third of the docs are re-uploads, also after a
+    crash that lost half the lineage rows and a resume."""
+    docs = _dup_heavy_corpus()
+    df = spark.createDataFrame(docs, schema=corpus.spark_schema())
+    exp = oracle.corpus_outputs(docs)
+    exp["doc_meta"] = [
+        {"doc_id": d["doc_id"], "vendor": d["vendor"], "file_hash": d["file_hash"]}
+        for d in oracle.admit(docs)
+    ]
+    root = str(tmp_path / "dup")
+
+    def check():
+        for name in ("extracted_spans", "extracted", "doc_stats", "doc_meta"):
+            got = lineage.read_output(spark, root, name)
+            cols = sorted(got.columns)
+            assert _sorted_rows(got.collect(), cols) == _sorted_rows(exp[name], cols), name
+
+    lineage.run_with_lineage(spark, df, root, "dup1", N_BUCKETS)
+    check()
+
+    lin_path = lineage.lineage_path(root)
+    kept = spark.read.parquet(lin_path).where(F.col("bucket") < N_BUCKETS // 2).collect()
+    shutil.rmtree(lin_path)
+    spark.createDataFrame(kept, schema=lineage._LINEAGE_SCHEMA).write.parquet(lin_path)
+    s = lineage.run_with_lineage(spark, df, root, "dup2", N_BUCKETS)
+    assert s["buckets_skipped"] == N_BUCKETS // 2 and s["buckets_run"] > 0
+    check()
+
+
+def _python_nodes(plan) -> list[str]:
+    """Python-evaluation node names of a physical plan, not descending into
+    cached relations (an InMemoryTableScan is a leaf): what running the
+    plan itself evaluates in Python."""
+    out, stack = [], [plan]
+    while stack:
+        node = stack.pop()
+        name = node.nodeName()
+        if "Python" in name or "Arrow" in name:
+            out.append(name)
+        if name == "AdaptiveSparkPlan":
+            stack.append(node.executedPlan())
+        children = node.children()
+        stack.extend(children.apply(i) for i in range(children.size()))
+    return out
+
+
+def test_job_has_one_python_stage(spark, docs_df, tmp_path, monkeypatch):
+    """A job crosses into Python once: one mapInArrow stage routes, builds
+    pages and extracts; neither the routing UDF nor the page-kernel UDF is
+    planned. Counted over the plans of every frame the job persists and
+    every frame it writes."""
+    from pdf_parser_spark.extraction import pipeline
+
+    def refuse(*args, **kwargs):
+        raise AssertionError("not on the job path")
+
+    monkeypatch.setattr(vendor_detect, "route_columns", refuse)
+    monkeypatch.setattr(pipeline, "page_entries_frame", refuse)
+
+    plans = []
+    frame_cls = type(docs_df)  # the session's concrete DataFrame class
+    real_persist = frame_cls.persist
+
+    def persist_spy(self, *args, **kwargs):
+        # The plan the cache will run: a fresh frame over this one, planned
+        # before this one is cached (upstream caches are leaves in it).
+        plans.append(self.select("*")._jdf.queryExecution().executedPlan())
+        return real_persist(self, *args, **kwargs)
+
+    def write_spy(real):
+        def spy(df, *args, **kwargs):
+            plans.append(df._jdf.queryExecution().executedPlan())
+            return real(df, *args, **kwargs)
+
+        return spy
+
+    monkeypatch.setattr(frame_cls, "persist", persist_spy)
+    monkeypatch.setattr(lineage.sink, "write_partitioned", write_spy(lineage.sink.write_partitioned))
+    monkeypatch.setattr(lineage.sink, "append", write_spy(lineage.sink.append))
+    s = lineage.run_with_lineage(spark, docs_df, str(tmp_path / "out"), "job_py", N_BUCKETS)
+    monkeypatch.undo()
+    assert s["buckets_run"] > 0
+    nodes = [n for p in plans for n in _python_nodes(p)]
+    assert len(nodes) == 1 and nodes[0] in ("MapInArrow", "PythonMapInArrow"), nodes
