@@ -22,7 +22,6 @@ from pdf_parser_spark.curation import CURATION_QUERIES
 from pdf_parser_spark.datapipe import DATAPIPE_QUERIES
 from pdf_parser_spark.lm_filter import LM_QUERIES
 from pdf_parser_spark.selection import SELECTION_QUERIES
-from pdf_parser_spark.snapshot import SNAPSHOT_QUERIES
 from pdf_parser_spark.timeseries import TIMESERIES_QUERIES
 
 
@@ -61,11 +60,6 @@ _FRONT = [
     "corpus_length_stats",
     "mojibake_repair",
     "line_dedup_in_doc",
-    # --- never driver-verified: round-4 kmeans addition ---
-    "kmeans_embeddings_float",
-    # --- round-5 additions ---
-    "kmeans_float_agreement",
-    "corpus_funnel_delta",
     # --- refresh the oldest driver rows (last seen r02): flagship
     # pipeline span-equality family ---
     "extract_quarantine",
@@ -95,9 +89,7 @@ _OVERFLOW_TAIL = [
     "returned_top_customers",
     "referential_integrity",
     "tfidf_top_terms",
-    "bloom_dedup",
     "bitmap_distinct_window",
-    "snapshot_diff",
     "bpe_token_count",
     "asof_join_events",
     "rollup_revenue",
@@ -119,13 +111,11 @@ _OVERFLOW_TAIL = [
     "pii_redact",
     "session_window_builtin",
     "salted_join",
-    "kmeans_embeddings",
     "media_phash_dedup",
     "pivot_revenue_years",
     "large_volume_orders",
     "dormant_customers",
     "priority_return_rate",
-    "semdedup_keep",
 ]
 
 
@@ -135,7 +125,6 @@ _REGISTRIES = (
     driver_contract.PIPELINE_QUERIES,
     DATAPIPE_QUERIES,
     LM_QUERIES,
-    SNAPSHOT_QUERIES,
     SELECTION_QUERIES,
     CURATION_QUERIES,
     TIMESERIES_QUERIES,
@@ -163,5 +152,4 @@ def oracle_sql() -> dict[str, str]:
         name: sql if isinstance(sql, str) else sql(correctness_sf)
         for reg in _REGISTRIES
         for name, (_fn, sql) in reg.items()
-        if sql is not None
     }

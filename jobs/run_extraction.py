@@ -38,14 +38,11 @@ def main() -> None:
     else:
         from pyspark.sql import SparkSession
 
+        from pdf_parser_spark.session import ENGINE_CONF
+
         spark = (
             SparkSession.builder.appName(f"extract_{args.job_id}")
-            .config("spark.sql.adaptive.enabled", "true")
-            .config("spark.sql.adaptive.skewJoin.enabled", "true")
-            .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-            .config("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
-            # As in session.get_spark: errors lose their Python call site.
-            .config("spark.python.sql.dataFrameDebugging.enabled", "false")
+            .config(map=ENGINE_CONF)
             .getOrCreate()
         )
 

@@ -17,14 +17,13 @@ Layout:
   extraction/     — the Spark pipeline (route+pages+kernel in one mapInArrow → admission →
                     fan-out/dedup/unpivot/stats/master-log/reports)
   lineage, sink   — bucketed exactly-once batch job over parquet or catalog tables
-  streaming       — per-upload micro-batch ingest, compaction, doc status machine,
-                    streaming twins of some timeseries operators
+  streaming       — per-upload micro-batch ingest, compaction, doc status machine
   session         — local SparkSession factory
   multilingual, posco_strategy, multimodal, xlsx
                   — reference side paths: multilingual scan, POSCO alignment,
                     binary media stages, spreadsheet export
   analytics/      — analytic queries with DuckDB-checkable SQL oracles
-  datapipe, lm_filter, curation, selection, snapshot, timeseries
+  datapipe, lm_filter, curation, selection, timeseries
                   — corpus-curation and OLAP operators registered for the
                     driver's cross-check (not called by either shipped job)
   driver_contract — the query registry behind __spark_entry__.py

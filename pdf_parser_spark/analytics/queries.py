@@ -3,9 +3,8 @@
 Each registry entry is ``name -> (spark_fn, oracle_sql)`` where ``spark_fn``
 takes (spark, sf_dir) and returns a DataFrame, and ``oracle_sql`` is ANSI-ish
 SQL DuckDB runs against the same parquet tables (pre-registered views:
-region nation customer supplier part orders lineitem events documents
-embeddings). The driver compares row count + schema + order-insensitive
-value hash, so:
+region nation customer supplier part orders lineitem events documents).
+The cross-check compares row count + schema + order-insensitive value hash, so:
 
   * every computed column is aliased identically on both sides;
   * integer outputs are BIGINT/long on both sides;
@@ -542,8 +541,9 @@ def minhash_sigs(docs: DataFrame) -> DataFrame:
     """Per-(doc, band) MinHash signature over the distinct-token set:
     band b's hash = the b-th disjoint 8-hex-char slice of md5(token)
     (4 independent 32-bit minhashes for the price of one digest, and no
-    4x row explode before the aggregate). Shared by the LSH candidate
-    counter and the near-dup component clustering (datapipe.py)."""
+    4x row explode before the aggregate). Shared by the incremental LSH
+    candidates (curation.py) and the near-dup component clustering
+    (datapipe.py)."""
     toks = docs.select(
         "doc_id", F.explode(F.array_distinct(F.split("text", " "))).alias("token")
     ).select("doc_id", F.md5("token").alias("h"))
@@ -561,55 +561,6 @@ def minhash_sigs(docs: DataFrame) -> DataFrame:
             )
         ).alias("bs"),
     ).select("doc_id", F.col("bs.band").alias("band"), F.col("bs.sig").alias("sig"))
-
-
-def minhash_band_pairs(docs: DataFrame, cap: int = MINHASH_BUCKET_CAP) -> DataFrame:
-    """MinHash+LSH near-dup candidates over ``docs(doc_id, text)``: docs
-    sharing a (band, sig) bucket are candidates. Count-first hot-bucket
-    guard: bucket sizes are aggregated before the self-join, and only
-    buckets with size <= cap join (pair output is bounded by cap²/2 per
-    bucket); hot buckets surface in the n_hot_buckets / n_hot_docs
-    columns."""
-    sigs = minhash_sigs(docs)
-    # Count-first: one extra aggregation on the same (band, sig) key the
-    # self-join shuffles on, so no additional exchange of the sigs table.
-    counts = sigs.groupBy("band", "sig").agg(F.count(F.lit(1)).alias("c"))
-    cold = counts.where(F.col("c") <= cap).select("band", "sig")
-    a = sigs.join(cold, ["band", "sig"]).select(F.col("doc_id").alias("da"), "band", "sig")
-    b = sigs.select(F.col("doc_id").alias("db"), F.col("band").alias("band_b"), F.col("sig").alias("sig_b"))
-    pairs = a.join(b, (a.band == b.band_b) & (a.sig == b.sig_b) & (a.da < b.db))
-    per_band_pairs = pairs.groupBy(F.col("band").cast("long").alias("band")).agg(
-        F.count(F.lit(1)).alias("n_pairs")
-    )
-    hot = counts.groupBy(F.col("band").cast("long").alias("band")).agg(
-        F.sum(F.when(F.col("c") > cap, 1).otherwise(0)).cast("long").alias("n_hot_buckets"),
-        F.sum(F.when(F.col("c") > cap, F.col("c")).otherwise(0)).cast("long").alias("n_hot_docs"),
-    )
-    return per_band_pairs.join(hot, "band").select(
-        "band", "n_pairs", "n_hot_buckets", "n_hot_docs"
-    )
-
-
-def q_minhash_band_candidates(spark, sf_dir):
-    """Near-dup candidate counts per band with the hot-bucket guard; the
-    oracle counts pairs per sub-cap bucket arithmetically — identical
-    results since each doc appears once per bucket."""
-    return minhash_band_pairs(_t(spark, sf_dir, "documents"))
-
-
-SQL_MINHASH_BAND_CANDIDATES = f"""
-WITH toks AS (SELECT DISTINCT doc_id, unnest(string_split(text, ' ')) AS token FROM documents),
-     sigs AS (SELECT doc_id, band, min(substr(md5(token), band * 8 + 1, 8)) AS sig
-              FROM toks, (SELECT unnest(range(4)) AS band)
-              GROUP BY doc_id, band),
-     buckets AS (SELECT band, sig, count(*) AS c FROM sigs GROUP BY band, sig)
-SELECT band::BIGINT AS band,
-       sum(CASE WHEN c <= {MINHASH_BUCKET_CAP} THEN (c * (c - 1)) // 2 ELSE 0 END)::BIGINT AS n_pairs,
-       sum(CASE WHEN c > {MINHASH_BUCKET_CAP} THEN 1 ELSE 0 END)::BIGINT AS n_hot_buckets,
-       sum(CASE WHEN c > {MINHASH_BUCKET_CAP} THEN c ELSE 0 END)::BIGINT AS n_hot_docs
-FROM buckets GROUP BY 1
-HAVING sum(CASE WHEN c <= {MINHASH_BUCKET_CAP} THEN (c * (c - 1)) // 2 ELSE 0 END) > 0
-"""
 
 
 def q_simhash(spark, sf_dir):
@@ -869,7 +820,7 @@ FROM documents, UNNEST(range(0, 8)) AS t(k)
 """
 
 
-MEDIA_BAND_CAP = 200  # same count-first hot-bucket guard as MinHash-LSH
+MEDIA_BAND_CAP = 200  # same count-first hot-bucket guard as MINHASH_BUCKET_CAP
 MEDIA_HAM_MAX = 8  # verified-pair Hamming acceptance
 
 
@@ -881,7 +832,7 @@ def q_media_phash_dedup(spark, sf_dir):
     cannot see media; this is its multimodal twin, and together they
     cover both halves of an interleaved text+media corpus.
 
-    Scale shape, same discipline as minhash_band_candidates: bucket
+    Scale shape, same discipline as ``MINHASH_BUCKET_CAP``: bucket
     sizes are counted FIRST and buckets above ``MEDIA_BAND_CAP`` emit no
     pairs (a black-image mega-bucket would otherwise go quadratic);
     candidate pairs carry only two BIGINT keys; the verify is four JVM
@@ -962,604 +913,6 @@ WITH bits AS (
   GROUP BY c.da, c.db
 )
 SELECT da, db, hamming FROM ham WHERE hamming <= {MEDIA_HAM_MAX}
-"""
-
-
-def q_embedding_near_dup(spark, sf_dir):
-    """Embedding-cosine near-dup: candidate pairs form only inside a sign-LSH
-    bucket (the scale path — no all-pairs cross join), then exact cosine on
-    candidates; pairs with rounded cosine >= 0.3 survive.
-
-    The cosine is computed IN-ROW on the joined pair (zip_with product +
-    left-to-right aggregate fold — the same device semdedup_keep uses, and
-    the same measured win as near_dup_components' array_intersect verify):
-    each side of the bucket equi-join carries its array once (m·D values
-    per side), instead of the previous per-dimension posexplode join whose
-    intermediate was m²·D skinny rows per bucket plus a wide pair-keyed
-    aggregate whose summation order differed from the oracle's in-row
-    list_sum. The fold order is deterministic and identical in both
-    engines, so 3dp-borderline pairs cannot flip.
-
-    Scale knob: bucket population is corpus_size / 2^bits, so at 100 TB
-    you raise the sign-bit count (8 here → 24-32 there, optionally
-    multi-table for recall) until buckets bound the quadratic term — the
-    knob is bits, not a size cap, because with 2^8 buckets EVERY bucket
-    is hot at that scale and a cap would just silence the query."""
-    emb = _t(spark, sf_dir, "embeddings")
-    bucket = F.concat_ws(
-        "",
-        *[
-            F.when(F.element_at("embedding", i + 1) >= 0, F.lit("1")).otherwise(F.lit("0"))
-            for i in range(8)
-        ],
-    )
-    norm = F.sqrt(
-        F.aggregate(
-            "embedding", F.lit(0.0), lambda acc, x: acc + x.cast("double") * x.cast("double")
-        )
-    )
-    e = emb.select("vec_id", bucket.alias("bucket"), "embedding", norm.alias("norm"))
-    a = e.select(
-        "bucket",
-        F.col("vec_id").alias("id_a"),
-        F.col("embedding").alias("ea"),
-        F.col("norm").alias("na"),
-    )
-    b = e.select(
-        F.col("bucket").alias("bucket_b"),
-        F.col("vec_id").alias("id_b"),
-        F.col("embedding").alias("eb"),
-        F.col("norm").alias("nb"),
-    )
-    cos = F.round(
-        F.aggregate(
-            F.zip_with("ea", "eb", lambda x, y: x.cast("double") * y.cast("double")),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        / (F.col("na") * F.col("nb")),
-        3,
-    )
-    return (
-        a.join(b, (F.col("bucket") == F.col("bucket_b")) & (F.col("id_a") < F.col("id_b")))
-        .select("id_a", "id_b", cos.alias("cos"))
-        .where(F.col("cos") >= 0.3)
-    )
-
-
-SQL_EMBEDDING_NEAR_DUP = """
-WITH e AS (
-  SELECT vec_id, embedding,
-         concat(CASE WHEN embedding[1] >= 0 THEN '1' ELSE '0' END,
-                CASE WHEN embedding[2] >= 0 THEN '1' ELSE '0' END,
-                CASE WHEN embedding[3] >= 0 THEN '1' ELSE '0' END,
-                CASE WHEN embedding[4] >= 0 THEN '1' ELSE '0' END,
-                CASE WHEN embedding[5] >= 0 THEN '1' ELSE '0' END,
-                CASE WHEN embedding[6] >= 0 THEN '1' ELSE '0' END,
-                CASE WHEN embedding[7] >= 0 THEN '1' ELSE '0' END,
-                CASE WHEN embedding[8] >= 0 THEN '1' ELSE '0' END) AS bucket,
-         sqrt(list_sum([CAST(x AS DOUBLE) * CAST(x AS DOUBLE) for x in embedding])) AS norm
-  FROM embeddings
-)
-SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-       round(list_sum([CAST(a.embedding[i + 1] AS DOUBLE) * CAST(b.embedding[i + 1] AS DOUBLE)
-                       for i in range(0, len(a.embedding))]) / (a.norm * b.norm), 3) AS cos
-FROM e a JOIN e b ON a.bucket = b.bucket AND a.vec_id < b.vec_id
-WHERE round(list_sum([CAST(a.embedding[i + 1] AS DOUBLE) * CAST(b.embedding[i + 1] AS DOUBLE)
-                      for i in range(0, len(a.embedding))]) / (a.norm * b.norm), 3) >= 0.3
-"""
-
-
-def q_embedding_ivf_knn(spark, sf_dir):
-    """IVF-style ANN: coarse-quantize every vector to its nearest of K=8
-    centroids (deterministically sampled: vec_id < 8), queries probe the
-    nprobe=2 closest clusters and run exact top-5 only inside them — the
-    inverted-file search pattern (train→assign→probe) with the k-means step
-    replaced by deterministic sampling so the oracle can replay it. All
-    similarity = dot product rounded to 3dp before ranking, id tiebreaks."""
-    emb = _t(spark, sf_dir, "embeddings")
-    e = emb.select("vec_id", F.posexplode("embedding").alias("i", "v"))
-    cent = (
-        emb.where("vec_id < 8")
-        .select(F.col("vec_id").alias("cid"), F.posexplode("embedding").alias("ci", "cv"))
-    )
-    # dot(vector, centroid) for every pair — centroid side is tiny (K=8)
-    pair_dots = (
-        e.join(F.broadcast(cent), e.i == cent.ci)
-        .groupBy("vec_id", "cid")
-        .agg(F.round(F.sum(F.col("v").cast("double") * F.col("cv").cast("double")), 3).alias("dot"))
-    )
-    w_assign = Window.partitionBy("vec_id").orderBy(F.desc("dot"), "cid")
-    assign = (
-        pair_dots.withColumn("rn", F.row_number().over(w_assign))
-        .where("rn = 1")
-        .select("vec_id", F.col("cid").alias("cluster"))
-    )
-    probes = (
-        pair_dots.where("vec_id < 3")
-        .withColumn("rn", F.row_number().over(w_assign))
-        .where("rn <= 2")
-        .select(F.col("vec_id").alias("qid"), F.col("cid").alias("cluster"))
-    )
-    # candidates: corpus vectors (vec_id >= 3) in a probed cluster
-    cand = assign.where("vec_id >= 3").join(probes, "cluster").select(
-        "qid", F.col("vec_id").alias("cid_vec")
-    )
-    q = emb.where("vec_id < 3").select(
-        F.col("vec_id").alias("qid"), F.posexplode("embedding").alias("qi", "qv")
-    )
-    c = emb.where("vec_id >= 3").select(
-        F.col("vec_id").alias("cid_vec"), F.posexplode("embedding").alias("ci2", "cv2")
-    )
-    dots = (
-        cand.join(q, "qid")
-        .join(c, (F.col("qi") == F.col("ci2")) & (cand.cid_vec == c.cid_vec))
-        .groupBy("qid", cand.cid_vec.alias("cand_id"))
-        .agg(F.round(F.sum(F.col("qv").cast("double") * F.col("cv2").cast("double")), 3).alias("dot"))
-    )
-    w_rank = Window.partitionBy("qid").orderBy(F.desc("dot"), "cand_id")
-    return (
-        dots.withColumn("rank", F.row_number().over(w_rank))
-        .where("rank <= 5")
-        .select("qid", "cand_id", "dot", F.col("rank").cast("long").alias("rank"))
-    )
-
-
-SQL_EMBEDDING_IVF_KNN = """
-WITH e AS (SELECT vec_id, embedding FROM embeddings),
-     dots_c AS (
-       SELECT a.vec_id, b.vec_id AS cid,
-              round(list_sum([CAST(a.embedding[i + 1] AS DOUBLE) * CAST(b.embedding[i + 1] AS DOUBLE)
-                              for i in range(0, len(a.embedding))]), 3) AS dot
-       FROM e a JOIN e b ON b.vec_id < 8
-     ),
-     assign AS (
-       SELECT vec_id, cid AS cluster FROM (
-         SELECT vec_id, cid, row_number() OVER (PARTITION BY vec_id ORDER BY dot DESC, cid) AS rn
-         FROM dots_c) WHERE rn = 1
-     ),
-     probes AS (
-       SELECT vec_id AS qid, cid AS cluster FROM (
-         SELECT vec_id, cid, row_number() OVER (PARTITION BY vec_id ORDER BY dot DESC, cid) AS rn
-         FROM dots_c WHERE vec_id < 3) WHERE rn <= 2
-     ),
-     cand AS (
-       SELECT p.qid, a.vec_id AS cand_id
-       FROM assign a JOIN probes p ON a.cluster = p.cluster
-       WHERE a.vec_id >= 3
-     ),
-     scored AS (
-       SELECT c.qid, c.cand_id,
-              round(list_sum([CAST(q.embedding[i + 1] AS DOUBLE) * CAST(v.embedding[i + 1] AS DOUBLE)
-                              for i in range(0, len(q.embedding))]), 3) AS dot
-       FROM cand c JOIN e q ON q.vec_id = c.qid JOIN e v ON v.vec_id = c.cand_id
-     )
-SELECT qid, cand_id, dot, rank::BIGINT AS rank FROM (
-  SELECT qid, cand_id, dot,
-         row_number() OVER (PARTITION BY qid ORDER BY dot DESC, cand_id) AS rank
-  FROM scored) WHERE rank <= 5
-"""
-
-
-# SemDedup prune threshold. Abbas et al. 2023 use ~0.95+ on real encoder
-# embeddings; the synthetic fixture's within-cluster cosines top out at
-# ~0.47, so 0.3 keeps the decision non-vacuous (both kept and dropped
-# rows exist — asserted in tests).
-SEMDEDUP_K = 8
-SEMDEDUP_TAU = 0.3
-# Hot-cluster guard, same policy as MINHASH_BUCKET_CAP: a cluster larger
-# than this is excluded from the quadratic pair join and its members are
-# flagged overflow (kept, deferred to a re-clustering pass) instead of
-# letting one mega-cluster go O(n^2) in a single task. Sized to BIND on
-# the fixture (cluster sizes straddle 64 at both sf) — the guard is a
-# tested decision, not a dead branch.
-SEMDEDUP_CLUSTER_CAP = 64
-
-
-def q_semdedup_keep(spark, sf_dir):
-    """SemDedup (Abbas et al. 2023): semantic dedup that never compares
-    across clusters. Every vector is assigned to its nearest of K
-    deterministic centroids by cosine (k-means replaced by deterministic
-    seeding — ``vec_id < K`` — so the DuckDB oracle can replay the
-    assignment bit-for-bit, same device as embedding_ivf_knn); within each
-    cluster a vector is DROPPED when its cosine to any lower-id cluster
-    member reaches tau (first-wins keep, the same winner rule as
-    near_dup_keep and the reference's upload dedup).
-
-    Scale shape: the only all-pairs work is per-cluster — exactly the
-    point of SemDedup's clustering (the paper runs 50k clusters over 5B
-    LAION vectors for this reason). The centroid scoring join broadcasts
-    K exploded centroid rows against the vector stream (equi-join on the
-    component index, partial-sum map-side); the pair join is an equi-join
-    on cluster with an id inequality residual, so a hot cluster is the
-    skew unit — clusters above ``SEMDEDUP_CLUSTER_CAP`` are excluded from
-    the pair join entirely and their members flagged ``overflow`` (kept,
-    deferred to a re-clustering pass), the exact policy of
-    MINHASH_BUCKET_CAP: a boilerplate mega-cluster cannot go quadratic in
-    one task. Pair dot products fold left-to-right over the two arrays
-    (zip_with + aggregate, deterministic summation order) and round to
-    3dp before the threshold, so both engines agree on every borderline
-    pair."""
-    emb = _t(spark, sf_dir, "embeddings")
-    norm_of = lambda col: F.sqrt(
-        F.aggregate(
-            col, F.lit(0.0), lambda acc, x: acc + x.cast("double") * x.cast("double")
-        )
-    )
-    e = emb.select("vec_id", "embedding", norm_of(F.col("embedding")).alias("norm"))
-    e_ex = emb.select("vec_id", F.posexplode("embedding").alias("i", "v"))
-    cent_ex = emb.where(f"vec_id < {SEMDEDUP_K}").select(
-        F.col("vec_id").alias("cid"), F.posexplode("embedding").alias("ci", "cv")
-    )
-    cnorms = e.where(f"vec_id < {SEMDEDUP_K}").select(
-        F.col("vec_id").alias("cid"), F.col("norm").alias("cnorm")
-    )
-    cent_cos = (
-        e_ex.join(F.broadcast(cent_ex), e_ex.i == cent_ex.ci)
-        .groupBy("vec_id", "cid")
-        .agg(F.sum(F.col("v").cast("double") * F.col("cv").cast("double")).alias("dot"))
-        .join(F.broadcast(cnorms), "cid")
-        .join(e.select("vec_id", "norm"), "vec_id")
-        .select(
-            "vec_id",
-            "cid",
-            F.round(F.col("dot") / (F.col("norm") * F.col("cnorm")), 3).alias("cos"),
-        )
-    )
-    w_assign = Window.partitionBy("vec_id").orderBy(F.desc("cos"), "cid")
-    assign = (
-        cent_cos.withColumn("rn", F.row_number().over(w_assign))
-        .where("rn = 1")
-        .select("vec_id", F.col("cid").alias("cluster"))
-    )
-    sizes = assign.groupBy("cluster").agg(F.count(F.lit(1)).alias("csize"))
-    assign = assign.join(F.broadcast(sizes), "cluster").select(
-        "vec_id",
-        "cluster",
-        (F.col("csize") > SEMDEDUP_CLUSTER_CAP).alias("overflow"),
-    )
-    m = assign.where(~F.col("overflow")).join(e, "vec_id")
-    a = m.select(
-        F.col("cluster"),
-        F.col("vec_id").alias("ida"),
-        F.col("embedding").alias("ea"),
-        F.col("norm").alias("na"),
-    )
-    b = m.select(
-        F.col("cluster"),
-        F.col("vec_id").alias("idb"),
-        F.col("embedding").alias("eb"),
-        F.col("norm").alias("nb"),
-    )
-    pair_cos = F.round(
-        F.aggregate(
-            F.zip_with(
-                "ea", "eb", lambda x, y: x.cast("double") * y.cast("double")
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        / (F.col("na") * F.col("nb")),
-        3,
-    )
-    prior = (
-        a.join(b, ["cluster"])
-        .where(F.col("ida") < F.col("idb"))
-        .select("idb", pair_cos.alias("cos"))
-        .groupBy("idb")
-        .agg(F.max("cos").alias("max_prior_cos"))
-    )
-    return (
-        assign.join(prior, assign.vec_id == prior.idb, "left")
-        .select(
-            "vec_id",
-            F.col("cluster").cast("long").alias("cluster"),
-            F.round(F.coalesce("max_prior_cos", F.lit(-1.0)), 3).alias(
-                "max_prior_cos"
-            ),
-            (
-                F.coalesce("max_prior_cos", F.lit(-1.0)) < SEMDEDUP_TAU
-            ).alias("keep"),
-            "overflow",
-        )
-    )
-
-
-SQL_SEMDEDUP_KEEP = f"""
-WITH e AS (
-  SELECT vec_id, embedding,
-         sqrt(list_sum([CAST(x AS DOUBLE) * CAST(x AS DOUBLE) for x in embedding])) AS norm
-  FROM embeddings
-), c AS (
-  SELECT vec_id AS cid, embedding AS cemb, norm AS cnorm FROM e
-  WHERE vec_id < {SEMDEDUP_K}
-), d AS (
-  SELECT e.vec_id, c.cid,
-         round(list_sum([CAST(e.embedding[i + 1] AS DOUBLE) * CAST(c.cemb[i + 1] AS DOUBLE)
-                         for i in range(0, len(e.embedding))]) / (e.norm * c.cnorm), 3) AS cos
-  FROM e, c
-), assign0 AS (
-  SELECT vec_id, cid AS cluster FROM (
-    SELECT vec_id, cid,
-           row_number() OVER (PARTITION BY vec_id ORDER BY cos DESC, cid) AS rn
-    FROM d) t WHERE rn = 1
-), sizes AS (
-  SELECT cluster, count(*)::BIGINT AS csize FROM assign0 GROUP BY cluster
-), assign AS (
-  SELECT a.vec_id, a.cluster, s.csize > {SEMDEDUP_CLUSTER_CAP} AS overflow
-  FROM assign0 a JOIN sizes s ON s.cluster = a.cluster
-), m AS (
-  SELECT a.vec_id, a.cluster, e.embedding, e.norm
-  FROM assign a JOIN e ON e.vec_id = a.vec_id
-  WHERE NOT a.overflow
-), prior AS (
-  SELECT y.vec_id AS idb,
-         max(round(list_sum([CAST(x.embedding[i + 1] AS DOUBLE) * CAST(y.embedding[i + 1] AS DOUBLE)
-                             for i in range(0, len(x.embedding))]) / (x.norm * y.norm), 3))
-           AS max_prior_cos
-  FROM m x JOIN m y ON x.cluster = y.cluster AND x.vec_id < y.vec_id
-  GROUP BY y.vec_id
-)
-SELECT a.vec_id, a.cluster::BIGINT AS cluster,
-       round(COALESCE(p.max_prior_cos, -1.0), 3) AS max_prior_cos,
-       COALESCE(p.max_prior_cos, -1.0) < {SEMDEDUP_TAU} AS keep,
-       a.overflow
-FROM assign a LEFT JOIN prior p ON p.idb = a.vec_id
-"""
-
-
-# Spherical Lloyd's k-means over the embedding corpus — the "train" stage
-# of the IVF/SemDedup train→assign→probe family, which q_embedding_ivf_knn
-# and q_semdedup_keep replace with deterministic seeding so their oracles
-# can replay the assignment. Here the seeding is the INIT (vec_id < K) and
-# the Lloyd iterations themselves are replayed exactly: a fixed, unrolled
-# iteration count with every cross-engine float hazard removed (see
-# q_kmeans_embeddings).
-KMEANS_K = 8
-KMEANS_ITERS = 2
-
-
-def q_kmeans_embeddings(spark, sf_dir):
-    """Distributed spherical k-means (Dhillon & Modha 2001 shape): K=8
-    centroids, deterministic init (the vectors with ``vec_id < K``),
-    KMEANS_ITERS=2 full Lloyd rounds (cosine argmax assignment →
-    element-wise-mean update), output = the final assignment of every
-    vector with its cosine to the post-update centroid.
-
-    Cross-engine exactness (the reason this ITERATIVE algorithm can carry
-    a full value-hash oracle, not a rows-only check): every sum whose
-    float result would depend on accumulation order — vector norms,
-    centroid norms, dot products, and the per-dimension member sums
-    behind each centroid mean — is made order-independent by casting the
-    per-term value into DECIMAL before SUM (exact decimal aggregation in
-    both Spark and DuckDB), casting back to DOUBLE only after the sum.
-    Centroid means round to 6dp and assignment cosines to 3dp before any
-    comparison, so both engines enter every iteration from bit-identical
-    centroids and rank candidates on bit-identical keys; ties break on
-    cid. An emptied cluster carries its previous centroid (left join +
-    coalesce) in both engines.
-
-    Scale shape (10^9+ vectors): per iteration, ONE broadcast equi-join
-    of the exploded vector stream against K·D centroid component rows
-    (map-side partial aggregation into per-(vec,cid) dots — no shuffle of
-    vector payloads) and ONE (cid, dim)-keyed aggregate for the update
-    whose combine is map-side, shuffling only K·D·n_partitions partial
-    sums. Centroid frames are K·D rows end-to-end; the iteration count is
-    a constant. This is exactly how the IVF coarse quantizer and the
-    SemDedup cluster map get trained at 100 TB before those operators'
-    assign/probe stages run."""
-    return _kmeans_assignments(spark, sf_dir, exact=True)
-
-
-def q_kmeans_embeddings_float(spark, sf_dir):
-    """Production-path twin of ``q_kmeans_embeddings``: identical plan
-    shape (broadcast K·D centroid joins, map-side partial dots, vector
-    payloads never shuffle) with PLAIN DOUBLE aggregation instead of the
-    DECIMAL(38,18)-cast sums. The decimal casts exist only to make the
-    iterative algorithm's float accumulation order-independent so a
-    cross-engine value-hash oracle can replay it — a correctness-harness
-    tax, not an algorithmic need. At 100 TB this is the variant to run.
-
-    Evidence (driver: rows-only; the float path is genuinely not
-    DuckDB-replayable bit-exactly): ``test_kmeans.py`` pins ≥99% row
-    agreement of (vec_id → cluster) against the oracle-exact path, the
-    exact path itself stays hash-green, and ``kmeans_float_agreement``
-    emits the integer agree/total record as a hash-checkable driver row;
-    BENCH records both."""
-    return _kmeans_assignments(spark, sf_dir, exact=False)
-
-
-def _kmeans_assignments(spark, sf_dir, exact: bool):
-    emb = _t(spark, sf_dir, "embeddings")
-    ex = emb.select("vec_id", F.posexplode("embedding").alias("i", "v")).select(
-        "vec_id", "i", F.col("v").cast("double").alias("v")
-    )
-    if exact:
-        # order-independent exact sum: per-term product → DECIMAL(38,18) → SUM
-        dsum = lambda prod: F.sum(prod.cast("decimal(38,18)")).cast("double")
-        msum = lambda col: F.sum(col.cast("decimal(27,9)")).cast("double")
-    else:
-        dsum = F.sum
-        msum = F.sum
-    vnorm = ex.groupBy("vec_id").agg(
-        F.sqrt(dsum(F.col("v") * F.col("v"))).alias("norm")
-    )
-
-    def assign(cent, with_cos: bool):
-        cnorm = cent.groupBy("cid").agg(
-            F.sqrt(dsum(F.col("cv") * F.col("cv"))).alias("cnorm")
-        )
-        dots = (
-            ex.join(F.broadcast(cent), F.col("i") == F.col("ci"))
-            .groupBy("vec_id", "cid")
-            .agg(dsum(F.col("v") * F.col("cv")).alias("dot"))
-        )
-        scored = (
-            dots.join(vnorm, "vec_id")
-            .join(F.broadcast(cnorm), "cid")
-            .select(
-                "vec_id",
-                "cid",
-                F.round(F.col("dot") / (F.col("norm") * F.col("cnorm")), 3).alias(
-                    "cos"
-                ),
-            )
-        )
-        w = Window.partitionBy("vec_id").orderBy(F.desc("cos"), "cid")
-        cols = ["vec_id", F.col("cid").alias("cluster")] + (
-            ["cos"] if with_cos else []
-        )
-        return (
-            scored.withColumn("rn", F.row_number().over(w))
-            .where("rn = 1")
-            .select(*cols)
-        )
-
-    cent = ex.where(f"vec_id < {KMEANS_K}").select(
-        F.col("vec_id").alias("cid"), F.col("i").alias("ci"), F.col("v").alias("cv")
-    )
-    for _ in range(KMEANS_ITERS):
-        a = assign(cent, with_cos=False)
-        means = (
-            a.join(ex, "vec_id")
-            .groupBy(F.col("cluster").alias("cid"), F.col("i").alias("ci"))
-            .agg(
-                F.round(msum(F.col("v")) / F.count(F.lit(1)), 6).alias("mv")
-            )
-        )
-        cent = cent.join(means, ["cid", "ci"], "left").select(
-            "cid", "ci", F.coalesce("mv", "cv").alias("cv")
-        )
-    return assign(cent, with_cos=True).select(
-        "vec_id", F.col("cluster").cast("long").alias("cluster"), "cos"
-    )
-
-
-def _kmeans_sql(iters: int = KMEANS_ITERS, exact: bool = True) -> str:
-    """The oracle replays the Lloyd rounds as unrolled CTE blocks — one
-    assign block per iteration boundary, one update block per iteration —
-    with the identical DECIMAL-sum / round-6dp / round-3dp discipline.
-    ``iters`` is parametrized so tests can compare iteration depths (e.g.
-    prove assignments move between rounds); the registered oracle uses
-    KMEANS_ITERS. ``exact=False`` replays the FLOAT production twin
-    (plain-double sums) — DuckDB's own independent float replay, used by
-    the kmeans_float_agreement oracle."""
-
-    def _dsum(expr: str, prec: str) -> str:
-        if exact:
-            return f"CAST(sum(CAST({expr} AS DECIMAL({prec}))) AS DOUBLE)"
-        return f"sum({expr})"
-
-    def assign_cte(tag: int, cent: str, centn: str, final: bool) -> str:
-        return f"""
-d{tag} AS (
-  SELECT e.vec_id, c.cid,
-         {_dsum('e.v * c.cv', '38,18')} AS dot
-  FROM ex e JOIN {cent} c ON e.i = c.ci
-  GROUP BY e.vec_id, c.cid
-),
-s{tag} AS (
-  SELECT d.vec_id, d.cid, round(d.dot / (n.norm * cn.cnorm), 3) AS cos
-  FROM d{tag} d JOIN vnorm n ON d.vec_id = n.vec_id
-       JOIN {centn} cn ON d.cid = cn.cid
-),
-a{tag} AS (
-  SELECT vec_id, cid AS cluster{', cos' if final else ''} FROM (
-    SELECT vec_id, cid, cos,
-           row_number() OVER (PARTITION BY vec_id ORDER BY cos DESC, cid) AS rn
-    FROM s{tag}) WHERE rn = 1
-)"""
-
-    def update_cte(tag: int) -> str:
-        return f"""
-m{tag} AS (
-  SELECT a.cluster AS cid, e.i AS ci,
-         round({_dsum('e.v', '27,9')} / count(*), 6) AS cv
-  FROM a{tag} a JOIN ex e ON a.vec_id = e.vec_id
-  GROUP BY a.cluster, e.i
-),
-c{tag} AS (
-  SELECT p.cid, p.ci, coalesce(m.cv, p.cv) AS cv
-  FROM c{tag - 1} p LEFT JOIN m{tag} m ON p.cid = m.cid AND p.ci = m.ci
-),
-cn{tag} AS (
-  SELECT cid, sqrt({_dsum('cv * cv', '38,18')}) AS cnorm
-  FROM c{tag} GROUP BY cid
-)"""
-
-    blocks = []
-    for it in range(1, iters + 1):
-        blocks.append(assign_cte(it, f"c{it - 1}", f"cn{it - 1}", final=False))
-        blocks.append(update_cte(it))
-    last = iters + 1
-    blocks.append(assign_cte(last, f"c{iters}", f"cn{iters}", final=True))
-    return f"""
-WITH ex AS (
-  SELECT vec_id, generate_subscripts(embedding, 1) - 1 AS i,
-         CAST(unnest(embedding) AS DOUBLE) AS v
-  FROM embeddings
-),
-vnorm AS (
-  SELECT vec_id, sqrt({_dsum('v * v', '38,18')}) AS norm
-  FROM ex GROUP BY vec_id
-),
-c0 AS (SELECT vec_id AS cid, i AS ci, v AS cv FROM ex WHERE vec_id < {KMEANS_K}),
-cn0 AS (
-  SELECT cid, sqrt({_dsum('cv * cv', '38,18')}) AS cnorm
-  FROM c0 GROUP BY cid
-),{",".join(blocks)}
-SELECT vec_id, cluster::BIGINT AS cluster, cos FROM a{last}
-"""
-
-
-SQL_KMEANS_EMBEDDINGS = _kmeans_sql()
-
-
-def q_kmeans_float_agreement(spark, sf_dir):
-    """Hash-checkable quality record for the FLOAT production twin
-    (VERDICT r04 task 3): integer (n_total, n_agree) of the float path's
-    cluster assignments vs the DECIMAL-exact hash-green path, plus the
-    ≥99%-agreement verdict the deployment relies on, all computed
-    engine-side. The DuckDB oracle composes its OWN independent pair —
-    exact replay vs plain-double float replay (``_kmeans_sql(exact=False)``)
-    — so a hash-green row certifies that in BOTH engines the float
-    production arithmetic lands ≥99% of vectors in the same cluster as
-    the cross-engine-verified exact path. The count columns hash-match
-    because disagreement requires a top-2 cosine tie within the 3dp
-    rounding quantum, which the rounding discipline makes a measure-zero
-    event on real embedding data (measured: 500/500 in both engines at
-    sf0.01); if a knife-edge ever appears, ``agreement_ok`` still carries
-    the bound.
-
-    Scale shape: two K·D-broadcast kmeans passes + one vec_id equi-join
-    + a single global aggregate — no vector payload shuffles beyond the
-    twins themselves."""
-    exact = q_kmeans_embeddings(spark, sf_dir).select(
-        "vec_id", F.col("cluster").alias("c_exact")
-    )
-    prod = q_kmeans_embeddings_float(spark, sf_dir).select(
-        "vec_id", F.col("cluster").alias("c_float")
-    )
-    joined = exact.join(prod, "vec_id")
-    return joined.agg(
-        F.count(F.lit(1)).cast("long").alias("n_total"),
-        F.sum((F.col("c_exact") == F.col("c_float")).cast("long"))
-        .cast("long")
-        .alias("n_agree"),
-    ).select(
-        "n_total",
-        "n_agree",
-        (F.col("n_agree") * 100 >= F.col("n_total") * 99).alias("agreement_ok"),
-    )
-
-
-SQL_KMEANS_FLOAT_AGREEMENT = f"""
-SELECT count(*)::BIGINT AS n_total,
-       sum(CASE WHEN e.cluster = p.cluster THEN 1 ELSE 0 END)::BIGINT AS n_agree,
-       sum(CASE WHEN e.cluster = p.cluster THEN 1 ELSE 0 END) * 100
-         >= count(*) * 99 AS agreement_ok
-FROM ({_kmeans_sql()}) e JOIN ({_kmeans_sql(exact=False)}) p
-  ON e.vec_id = p.vec_id
 """
 
 
@@ -2200,7 +1553,6 @@ ANALYTIC_QUERIES: dict[str, tuple] = {
     "positional_zip_join": (q_positional_zip_join, SQL_POSITIONAL_ZIP_JOIN),
     "anti_join_new_docs": (q_anti_join_new_docs, SQL_ANTI_JOIN_NEW_DOCS),
     "unpivot_measures": (q_unpivot_measures, SQL_UNPIVOT_MEASURES),
-    "minhash_band_candidates": (q_minhash_band_candidates, SQL_MINHASH_BAND_CANDIDATES),
     "simhash": (q_simhash, SQL_SIMHASH),
     "ngram_jaccard": (q_ngram_jaccard, SQL_NGRAM_JACCARD),
     "tfidf_top_terms": (q_tfidf_top_terms, SQL_TFIDF_TOP_TERMS),
@@ -2208,18 +1560,6 @@ ANALYTIC_QUERIES: dict[str, tuple] = {
     "media_frame_sample": (q_media_frame_sample, SQL_MEDIA_FRAME_SAMPLE),
     "media_features": (q_media_features, SQL_MEDIA_FEATURES),
     "media_phash_dedup": (q_media_phash_dedup, SQL_MEDIA_PHASH_DEDUP),
-    "embedding_near_dup": (q_embedding_near_dup, SQL_EMBEDDING_NEAR_DUP),
-    "embedding_ivf_knn": (q_embedding_ivf_knn, SQL_EMBEDDING_IVF_KNN),
-    "semdedup_keep": (q_semdedup_keep, SQL_SEMDEDUP_KEEP),
-    "kmeans_embeddings": (q_kmeans_embeddings, SQL_KMEANS_EMBEDDINGS),
-    # Production float path: rows-only driver check (float accumulation is
-    # not cross-engine hash-replayable by design); agreement bound vs the
-    # exact path pinned in test_kmeans.py.
-    "kmeans_embeddings_float": (q_kmeans_embeddings_float, None),
-    # Driver-visible quality record for the float twin: integer
-    # agree/total counts + the >=99% verdict, oracle = DuckDB's own
-    # exact-vs-float-replay pair (VERDICT r04 task 3).
-    "kmeans_float_agreement": (q_kmeans_float_agreement, SQL_KMEANS_FLOAT_AGREEMENT),
     # Lazy (callable) oracle: building the SQL materializes the span corpus
     # + expected outputs, which must NOT happen at import time. The driver
     # contract resolves callables with the harness's correctness sf.

@@ -16,7 +16,8 @@ the rest of the suite doesn't cover:
     previous runs. The LSH bucket join therefore puts ONLY the new
     batch on the probe side, so the join cost scales with the batch,
     not the corpus: the core economics of incremental dedup at 100 TB.
-    Same count-first hot-bucket cap as ``minhash_band_candidates``.
+    Count-first hot-bucket cap: buckets above ``MINHASH_BUCKET_CAP``
+    members are excluded and reported per band.
   * ``score_calibration`` — reliability diagram for a model-based
     filter score: fixed-width buckets over the observed score range,
     per-bucket mean score vs empirical positive rate. The companion to
@@ -135,8 +136,8 @@ def q_incremental_minhash_pairs(spark, sf_dir):
     probe side against cold buckets, so pair work is O(batch · bucket),
     never O(corpus²). new-new pairs ordered da < db; new-old pairs keep
     (new, old) orientation — each undecided pair appears exactly once.
-    Hot buckets (> cap members) are excluded and reported per band, the
-    ``minhash_band_candidates`` policy.
+    Hot buckets (> ``MINHASH_BUCKET_CAP`` members) are excluded and
+    reported per band.
     """
     docs = _t(spark, sf_dir, "documents")
     # sigs feeds three plan subtrees (bucket counts, probe side, build

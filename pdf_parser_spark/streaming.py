@@ -298,423 +298,3 @@ def doc_status_stream(events: DataFrame) -> DataFrame:
         "update",
         GroupStateTimeout.ProcessingTimeTimeout,
     )
-
-
-def windowed_event_counts(
-    events: DataFrame, window_len: str = "10 minutes", late: str = "1 hour"
-) -> DataFrame:
-    """Event-time tumbling-window rollup with a late-data watermark over a
-    stream of (ts timestamp, event_type, value): per (window, type) event
-    count + value sum.
-
-    Streaming semantics (append mode): a window emits exactly once, when
-    the watermark — max observed event time minus ``late`` — passes its
-    end; events arriving more than ``late`` behind the stream's frontier
-    are dropped rather than mutating an already-emitted window. State per
-    key is one partial aggregate, evicted at emission, so state size is
-    bounded by (windows in the lateness horizon × types), independent of
-    stream length. The same plan runs unchanged on a batch DataFrame
-    (watermark is a no-op there), which is how the pytest pins expected
-    values.
-
-    Event-time tracking requires an instant (TIMESTAMP), so a
-    TIMESTAMP_NTZ column — what parquet-from-pandas produces — is coerced
-    via the session timezone first."""
-    events = events.withColumn("ts", F.col("ts").cast("timestamp"))
-    return (
-        events.withWatermark("ts", late)
-        .groupBy(F.window("ts", window_len).alias("w"), "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum("value"), 2).alias("total_value"),
-        )
-        .select(
-            F.col("w.start").alias("w_start"),
-            F.col("w.end").alias("w_end"),
-            "event_type",
-            "n_events",
-            "total_value",
-        )
-    )
-
-
-def sessionized_event_counts(
-    events: DataFrame, gap_s: int = 1800, late: str = "1 hour"
-) -> DataFrame:
-    """Streaming twin of the batch 30-min-gap sessionization
-    (analytics.queries.q_event_sessions): per (user, session) the event
-    count, first/last event time, and duration, over a stream of
-    (user_id, ts).
-
-    ``F.session_window`` keeps one mergeable [start, last+gap) interval
-    per open session; in append mode a session emits exactly once, when
-    the watermark — max event time minus ``late`` — passes its end, and
-    an event arriving behind the watermark is dropped rather than
-    reopening an emitted session. State per user is the open session's
-    interval, evicted on emission: bounded by concurrently-open sessions,
-    independent of stream length — the same one-timestamp-per-user state
-    the batch lag-flag formulation implies.
-
-    Boundary parity with the batch query: both merge two events when
-    ``t - prev <= gap_s`` — session_window's merge interval is closed at
-    ``last + gap`` (verified empirically on an exactly-1800 s gap in the
-    driver events table; the lag-flag form splits strictly-greater gaps).
-    The same plan runs unchanged on a batch DataFrame (watermark is a
-    no-op there), which is how the pytest pins batch equivalence."""
-    ev = events.withColumn("ts", F.col("ts").cast("timestamp"))
-    start = F.unix_timestamp("first_ts")
-    end = F.unix_timestamp("last_ts")
-    return (
-        ev.withWatermark("ts", late)
-        .groupBy(F.session_window("ts", f"{gap_s} seconds").alias("w"), "user_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.min("ts").alias("first_ts"),
-            F.max("ts").alias("last_ts"),
-        )
-        .select(
-            "user_id",
-            start.alias("start_et"),
-            end.alias("end_et"),
-            (end - start).alias("duration_s"),
-            "n_events",
-        )
-    )
-
-
-# --------------------------------------------------------------------------
-# Streaming as-of join (stateful per-user last-view attach)
-# --------------------------------------------------------------------------
-
-_ASOF_OUT_SCHEMA = (
-    "user_id long, event_id long, purchase_et long, view_et long, "
-    "view_value double, gap_us long"
-)
-_ASOF_STATE_SCHEMA = (
-    "view_ets array<long>, view_ids array<long>, view_vals array<double>"
-)
-
-
-def _asof_update(key, pdfs, state):
-    """applyInPandasWithState update fn for the streaming as-of join —
-    module-level so the merge/tie-break logic is unit-testable without a
-    streaming query.
-
-    State per user: the sorted (et, event_id, value) view list. Each
-    micro-batch is sorted by (et, views-first, event_id) — the exact
-    ordering of the batch device (timeseries._asof_core) — then views
-    merge into state and each purchase binds to the rightmost state view
-    with et <= purchase_et (max et, then max event_id: the oracle's
-    max_by tie-break). Within a batch, arbitrary disorder is absorbed by
-    the sort; ACROSS batches the stream must be et-ordered per user (a
-    purchase cannot see a view that arrives in a later batch) — the
-    standard streaming-asof contract. A production run bounds the state
-    list by watermark: every view older than the event-time watermark
-    except the newest collapses to one entry (any future purchase is
-    newer than the watermark); kept whole here since the fixture lists
-    are small and eviction would be untestable noise."""
-    import bisect
-
-    import pandas as pd
-
-    (user_id,) = key
-    if state.exists:
-        ets, ids, vals = (list(x) for x in state.get)
-        views = sorted(zip(ets, ids, vals))
-    else:
-        views = []
-    out = []
-    for pdf in pdfs:
-        pdf = pdf.copy()
-        pdf["_side"] = (pdf["event_type"] == "purchase").astype(int)
-        pdf = pdf.sort_values(["et", "_side", "event_id"])
-        for r in pdf.itertuples():
-            if r.event_type == "view":
-                bisect.insort(views, (int(r.et), int(r.event_id), r.value))
-            elif r.event_type == "purchase":
-                pos = bisect.bisect_right(
-                    views, (int(r.et), float("inf"), 0.0)
-                )
-                if pos:
-                    v_et, _v_id, v_val = views[pos - 1]
-                    out.append(
-                        (user_id, int(r.event_id), int(r.et), v_et,
-                         round(v_val, 2), int(r.et) - v_et)
-                    )
-                else:
-                    out.append(
-                        (user_id, int(r.event_id), int(r.et), None, None, None)
-                    )
-    state.update((
-        [v[0] for v in views],
-        [v[1] for v in views],
-        [v[2] for v in views],
-    ))
-    if out:
-        yield pd.DataFrame(
-            out,
-            columns=[
-                "user_id", "event_id", "purchase_et", "view_et",
-                "view_value", "gap_us",
-            ],
-        )
-
-
-def asof_event_stream(events: DataFrame) -> DataFrame:
-    """Streaming twin of the batch as-of join (timeseries._asof_core):
-    over a stream of (user_id, event_id, et, event_type, value), emit
-    each purchase with the most recent view at-or-before it. Keyed state
-    per user (the view list — see _asof_update for the watermark
-    eviction story), output mode append; non-view/purchase events pass
-    through the state fn and are ignored, exactly as the batch filters
-    do."""
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    return events.groupBy("user_id").applyInPandasWithState(
-        _asof_update,
-        _ASOF_OUT_SCHEMA,
-        _ASOF_STATE_SCHEMA,
-        "append",
-        GroupStateTimeout.NoTimeout,
-    )
-
-
-# --------------------------------------------------------------------------
-# Stream-stream interval join (purchase <- trailing views within a horizon)
-# --------------------------------------------------------------------------
-
-
-def view_purchase_interval_join(
-    events: DataFrame, horizon_s: int = 3600, late: str = "1 hour"
-) -> DataFrame:
-    """Native stream-stream INNER join: each purchase paired with EVERY
-    view by the same user in the trailing ``horizon_s`` window
-    (purchase_ts - horizon <= view_ts <= purchase_ts) — the attribution
-    fan-out the as-of join collapses to one row.
-
-    Both sides carry event-time watermarks and the join condition has an
-    explicit time range, which is what lets Spark bound state on BOTH
-    sides: a buffered view is evicted once the purchase-side watermark
-    passes view_ts + horizon, a buffered purchase once the view-side
-    watermark passes purchase_ts — so state is (events within the
-    lateness+horizon window), independent of stream length. Without the
-    range condition the planner rejects the join (unbounded state) —
-    the 100 TB failure mode is unplannable by construction, not merely
-    slow. Self-join of one source stream (filtered twice) is the
-    supported stream-stream self-join shape.
-
-    The same plan runs unchanged on a batch frame (watermarks are
-    no-ops), which is how the pytest pins equivalence; gap_s is computed
-    from the raw instants so batch and stream agree bit-exactly."""
-    ev = events.withColumn("ts", F.col("ts").cast("timestamp"))
-    views = (
-        ev.where(F.col("event_type") == "view")
-        .select(
-            F.col("user_id").alias("v_user"),
-            F.col("event_id").alias("view_id"),
-            F.col("ts").alias("view_ts"),
-            F.col("value").alias("view_value"),
-        )
-        .withWatermark("view_ts", late)
-    )
-    purch = (
-        ev.where(F.col("event_type") == "purchase")
-        .select(
-            F.col("user_id").alias("p_user"),
-            F.col("event_id").alias("purchase_id"),
-            F.col("ts").alias("purchase_ts"),
-        )
-        .withWatermark("purchase_ts", late)
-    )
-    joined = purch.join(
-        views,
-        F.expr(
-            f"""p_user = v_user
-            AND view_ts BETWEEN purchase_ts - INTERVAL {horizon_s} SECONDS
-                            AND purchase_ts"""
-        ),
-    )
-    return joined.select(
-        F.col("p_user").alias("user_id"),
-        "purchase_id",
-        "view_id",
-        F.unix_micros("purchase_ts").alias("purchase_et"),
-        F.unix_micros("view_ts").alias("view_et"),
-        F.round("view_value", 2).alias("view_value"),
-        (F.unix_micros("purchase_ts") - F.unix_micros("view_ts")).alias("gap_us"),
-    )
-
-
-# --------------------------------------------------------------------------
-# Watermarked streaming exact dedup
-# --------------------------------------------------------------------------
-
-
-def dedup_events_within_watermark(events: DataFrame, late: str = "1 hour") -> DataFrame:
-    """Streaming exact dedup on event_id with BOUNDED state:
-    ``dropDuplicatesWithinWatermark`` keeps a seen-key entry only until
-    the event-time watermark passes its timestamp + lateness, so state
-    is (keys in the lateness horizon) rather than every key ever seen —
-    the engine-native form of the Bloom/anti-join cross-batch dedup
-    devices above, correct whenever a duplicate can only trail its
-    first occurrence by less than the lateness bound (a crawl refetch
-    burst, an at-least-once source replay). On a batch frame it
-    degrades to plain dropDuplicates, which is how the pytest pins
-    equivalence."""
-    ev = events.withColumn("ts", F.col("ts").cast("timestamp"))
-    return ev.withWatermark("ts", late).dropDuplicatesWithinWatermark(["event_id"])
-
-
-# --------------------------------------------------------------------------
-# Exactly-once aggregate sink (idempotent foreachBatch commit protocol)
-# --------------------------------------------------------------------------
-
-
-def exactly_once_counts_writer(out_root: str):
-    """foreachBatch writer implementing the idempotent-commit protocol
-    that turns Structured Streaming's at-least-once batch replay into an
-    exactly-once aggregate sink: each micro-batch's partial per-type
-    aggregate lands at ``batch=<batchId>/`` and a REPLAYED batchId
-    (post-crash re-delivery with the same id, the documented
-    foreachBatch contract) is a NO-OP if the commit marker exists —
-    re-running a batch can never double-count. This is the same
-    batchId-keyed transactionality an Iceberg/Delta sink gets from
-    recording batchId in the snapshot summary; plain parquet + the
-    _SUCCESS marker expresses it engine-agnostically. Partial
-    aggregates (not raw rows) are what lands, so the reader's merge is
-    a sum over n_batches x n_types rows, never a rescan."""
-
-    def write(df: DataFrame, batch_id: int) -> None:
-        path = os.path.join(out_root, f"batch={batch_id}")
-        if os.path.exists(os.path.join(path, "_SUCCESS")):
-            return  # replayed batch: already committed, exactly-once no-op
-        (
-            df.groupBy("event_type")
-            .agg(
-                F.count(F.lit(1)).alias("n_events"),
-                F.sum("value").alias("sum_value"),
-            )
-            .write.mode("overwrite")
-            .parquet(path)
-        )
-
-    return write
-
-
-def read_exactly_once_counts(spark: SparkSession, out_root: str) -> DataFrame:
-    """Merge the per-batch partial aggregates into the final per-type
-    totals (count-sum partials are mergeable by construction)."""
-    return (
-        spark.read.parquet(f"{out_root}/batch=*")
-        .groupBy("event_type")
-        .agg(
-            F.sum("n_events").alias("n_events"),
-            F.round(F.sum("sum_value"), 2).alias("sum_value"),
-        )
-    )
-
-
-# --------------------------------------------------------------------------
-# Complete-mode streaming top-k
-# --------------------------------------------------------------------------
-
-
-def top_users_stream(events: DataFrame, k: int = 5) -> DataFrame:
-    """Streaming leaderboard: the top-k users by event count (value sum
-    as tie-audit), maintained in COMPLETE output mode — the one mode
-    where a global sort+limit is a legal streaming plan, because the
-    sink rewrites the whole (k-row) result each trigger. State is the
-    per-user running aggregate (users, not events); the sort runs over
-    that aggregate's output, so the per-trigger cost is state-size
-    log k, never stream-length. The same plan on a batch frame is the
-    plain grouped top-k, which is how the pytest pins equivalence.
-    Deterministic tie-break on user_id keeps the k-row result stable
-    across engines and triggers."""
-    counts = events.groupBy("user_id").agg(
-        F.count(F.lit(1)).alias("n_events"),
-        F.round(F.sum("value"), 2).alias("sum_value"),
-    )
-    return counts.orderBy(
-        F.col("n_events").desc(), F.col("user_id")
-    ).limit(k)
-
-
-# --------------------------------------------------------------------------
-# Streaming funnel (stateful per-user stage machine)
-# --------------------------------------------------------------------------
-
-_FUNNEL_OUT_SCHEMA = (
-    "user_id long, t_view long, t_click long, t_purchase long, "
-    "reached int, seq int"
-)
-_FUNNEL_STATE_SCHEMA = (
-    "t_view long, t_click long, t_purchase long, seq int"
-)
-
-
-def _funnel_update(key, pdfs, state):
-    """applyInPandasWithState update fn for the streaming funnel —
-    module-level so the stage logic is unit-testable. State per user is
-    the three first-stage timestamps; each micro-batch is sorted by
-    (et, event_id) — the batch device's exact window order — and folded
-    through the view -> qualified click -> qualified purchase machine.
-    A row is emitted only when the state ADVANCES (monotone `seq`), so
-    the max-seq emission per user is the user's final funnel row.
-    Across batches the stream must be et-ordered per user, the same
-    contract as the as-of twin; state is three longs however long the
-    stream runs."""
-    import pandas as pd
-
-    (user_id,) = key
-    t_view, t_click, t_purch, seq = (
-        state.get if state.exists else (None, None, None, 0)
-    )
-    out = []
-    for pdf in pdfs:
-        changed = False
-        pdf = pdf.sort_values(["et", "event_id"])
-        for r in pdf.itertuples():
-            if r.event_type == "view" and t_view is None:
-                t_view, changed = int(r.et), True
-            elif (
-                r.event_type == "click"
-                and t_click is None
-                and t_view is not None
-                and r.et >= t_view
-            ):
-                t_click, changed = int(r.et), True
-            elif (
-                r.event_type == "purchase"
-                and t_purch is None
-                and t_click is not None
-                and r.et >= t_click
-            ):
-                t_purch, changed = int(r.et), True
-        if changed:
-            seq += 1
-            reached = sum(t is not None for t in (t_view, t_click, t_purch))
-            out.append((user_id, t_view, t_click, t_purch, reached, seq))
-    state.update((t_view, t_click, t_purch, seq))
-    if out:
-        yield pd.DataFrame(
-            out,
-            columns=["user_id", "t_view", "t_click", "t_purchase", "reached", "seq"],
-        )
-
-
-def funnel_event_stream(events: DataFrame) -> DataFrame:
-    """Streaming twin of the batch ordered funnel
-    (timeseries._funnel_core): per user the first view, first click
-    at-or-after it, first purchase at-or-after that, maintained in
-    keyed state and re-emitted (with a monotone seq) whenever a stage
-    completes. The max-seq row per user equals the batch device's row —
-    the pytest pins that over an et-ordered micro-batch split."""
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    return events.groupBy("user_id").applyInPandasWithState(
-        _funnel_update,
-        _FUNNEL_OUT_SCHEMA,
-        _FUNNEL_STATE_SCHEMA,
-        "append",
-        GroupStateTimeout.NoTimeout,
-    )

@@ -15,22 +15,14 @@ import os
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-# Queries whose driver check is rows-only BY DESIGN: each must carry a
-# dedicated pytest pinning a stronger in-repo bound instead of a hash.
-# kmeans_embeddings_float: float accumulation is not cross-engine
-# hash-replayable; test_kmeans.py pins ≥99% assignment agreement vs the
-# DECIMAL-exact hash-checked path.
-ROWS_ONLY = {"kmeans_embeddings_float"}
-
-
 def test_every_query_has_oracle_and_green_supplement_row():
     import __spark_entry__ as entry
 
     qs = entry.queries()
     oracles = entry.oracle_sql()
-    assert set(qs) - ROWS_ONLY == set(oracles), (
-        "every queries() entry outside ROWS_ONLY needs an oracle_sql() "
-        f"entry; diff: {sorted((set(qs) - ROWS_ONLY) ^ set(oracles))}"
+    assert set(qs) == set(oracles), (
+        "every queries() entry needs an oracle_sql() entry; "
+        f"diff: {sorted(set(qs) ^ set(oracles))}"
     )
 
     import glob
@@ -44,18 +36,8 @@ def test_every_query_has_oracle_and_green_supplement_row():
         name
         for name, row in sup.items()
         if name in qs
-        and name not in ROWS_ONLY
         and not (
             row.get("rows_match") and row.get("schema_match") and row.get("hash_match")
         )
     )
     assert not bad, f"queries whose supplement row is not green: {bad}"
-    bad_rows_only = sorted(
-        name
-        for name in ROWS_ONLY
-        if name in sup
-        and (sup[name].get("err") is not None or sup[name].get("spark_rows") is None)
-    )
-    assert not bad_rows_only, (
-        f"rows-only queries whose supplement row errored: {bad_rows_only}"
-    )

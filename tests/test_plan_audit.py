@@ -42,12 +42,8 @@ AUDITED = [
     "range_join_nearest",
     "layout_nearest_heat",
     "positional_zip_join",
-    "minhash_band_candidates",
     "simhash",
     "ngram_jaccard",
-    "embedding_near_dup",
-    "embedding_ivf_knn",
-    "semdedup_keep",
     "event_sessions",
     "stratified_sample",
     "pack_sequences",

@@ -33,16 +33,6 @@ def no_checkpoint(monkeypatch):
     )
 
 
-def test_host_gate_and_bloom_broadcast(spark, no_checkpoint):
-    """The bloom word-frame must ship as a broadcast — bounded shuffle for
-    the bloom."""
-    from pdf_parser_spark.snapshot import q_bloom_dedup
-
-    p = _plan(q_bloom_dedup(spark, SF_DIR))
-    assert "BroadcastHashJoin" in p
-    assert "partial_bit_or" in p  # sketch partials combine map-side
-
-
 def test_scan_only_ops_have_single_exchange(spark):
     """mojibake_repair and line_dedup_in_doc are embarrassingly parallel
     scans: exactly one Exchange (the explicit round-robin spread), no

@@ -225,497 +225,3 @@ def test_doc_status_stream_over_micro_batches(spark, tmp_path):
     # state carried across batches: both batch-1 events plus batch-0's
     assert final_a["n_events"] == 3 and final_a["first_ts"] == 1 and final_a["last_ts"] == 4
     assert ("b", "PENDING") in rows  # non-terminal doc reported, state kept
-
-
-def test_windowed_counts_watermark_drops_late(spark, tmp_path):
-    """Watermark + windowed agg (append): windows emit once when the
-    watermark passes their end; an event arriving behind the watermark is
-    dropped, never mutating an emitted window."""
-    import datetime as dt
-
-    import pandas as pd
-
-    def ts(h, m):
-        return int(dt.datetime(2024, 1, 1, h, m, tzinfo=dt.timezone.utc).timestamp())
-
-    inp = tmp_path / "ev_in"
-    inp.mkdir()
-    # batch 1: window 10:00-10:10 gets 2 clicks; frontier advances to 12:05
-    pd.DataFrame(
-        {
-            "ts_epoch": [ts(10, 0), ts(10, 9), ts(12, 5)],
-            "event_type": ["click", "click", "click"],
-            "value": [1.0, 2.0, 4.0],
-        }
-    ).to_parquet(inp / "f1.parquet", index=False)
-    # batch 2: frontier push to 13:30 (watermark 12:30 after it -> the
-    # 12:00-12:10 window emits)
-    pd.DataFrame(
-        {"ts_epoch": [ts(13, 30)], "event_type": ["click"], "value": [8.0]}
-    ).to_parquet(inp / "f2.parquet", index=False)
-    # batch 3: a LATE click at 10:03 — the input filter runs with the
-    # watermark established before this batch (>= 11:05, an hour past the
-    # 10:00-10:10 window), so the row is dropped and the already-emitted
-    # window is never mutated. (Spark applies the filter with the PREVIOUS
-    # batch's watermark — a late row landing in the same batch that first
-    # advances the frontier past it would still merge; one batch later it
-    # cannot.)
-    pd.DataFrame(
-        {"ts_epoch": [ts(10, 3)], "event_type": ["click"], "value": [100.0]}
-    ).to_parquet(inp / "f3.parquet", index=False)
-
-    from pyspark.sql import functions as F
-
-    stream = (
-        spark.readStream.schema("ts_epoch long, event_type string, value double")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(inp))
-        .withColumn("ts", F.timestamp_seconds("ts_epoch"))
-    )
-    q = (
-        streaming.windowed_event_counts(stream)
-        .writeStream.format("memory")
-        .queryName("wincounts")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt_win"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = {
-        (r["w_start"].hour, r["w_start"].minute, r["event_type"]): (
-            r["n_events"],
-            r["total_value"],
-        )
-        for r in spark.sql("SELECT * FROM wincounts").collect()
-    }
-    # 10:00 window: the two on-time clicks only — the late 100.0 is dropped
-    assert got[(10, 0, "click")] == (2, 3.0)
-    # 12:00 window emitted once its end passed the watermark
-    assert got[(12, 0, "click")] == (1, 4.0)
-    # 13:30 window never emitted (watermark still behind its end)
-    assert not any(k[0] == 13 for k in got)
-    assert len(got) == 2
-
-
-def test_sessionized_counts_match_batch(spark):
-    """The session_window plan, run as a batch DataFrame over the driver
-    events table, must reproduce q_event_sessions' (user, start, end,
-    duration, count) rows exactly — same 30-min-gap semantics, two
-    formulations (lag-flag running sum vs mergeable session windows)."""
-    from pdf_parser_spark.analytics.queries import q_event_sessions
-
-    sf_dir = "/root/testdata/sf0.01"
-    batch = {
-        (r["user_id"], r["start_et"], r["end_et"], r["duration_s"], r["n_events"])
-        for r in q_event_sessions(spark, sf_dir).collect()
-    }
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").select("user_id", "ts")
-    stream_plan = {
-        (r["user_id"], r["start_et"], r["end_et"], r["duration_s"], r["n_events"])
-        for r in streaming.sessionized_event_counts(ev).collect()
-    }
-    assert len(batch) > 100  # non-vacuous: many sessions at sf0.01
-    assert stream_plan == batch
-
-
-def test_sessionized_counts_streaming_late_event(spark, tmp_path):
-    """Append-mode session emission: a session emits once when the
-    watermark passes its end; a late event behind the watermark is
-    dropped, never reopening the emitted session."""
-    import datetime as dt
-
-    import pandas as pd
-
-    def ts(h, m):
-        return int(dt.datetime(2024, 1, 1, h, m, tzinfo=dt.timezone.utc).timestamp())
-
-    inp = tmp_path / "sess_in"
-    inp.mkdir()
-    # batch 0: user 1 has two events 10 min apart (one session); user 2's
-    # 14:00 event pushes the frontier. Watermark during this batch is
-    # still epoch-0, so nothing emits yet.
-    pd.DataFrame(
-        {"user_id": [1, 1, 2], "ts_epoch": [ts(10, 0), ts(10, 10), ts(14, 0)]}
-    ).to_parquet(inp / "f1.parquet", index=False)
-    # batch 1 runs with watermark 13:00 (14:00 - 1 h lateness) — past user
-    # 1's session end (10:10 + gap), so that session EMITS here; user 2's
-    # 15:00 event keeps the frontier moving.
-    pd.DataFrame({"user_id": [2], "ts_epoch": [ts(15, 0)]}).to_parquet(
-        inp / "f2.parquet", index=False
-    )
-    # batch 2: a LATE event for user 1 at 10:20 — within the gap of the
-    # already-EMITTED session but behind the 14:00 watermark: dropped
-    # entirely (neither mutates the emitted row nor opens a new session).
-    # NB the emission must come first: a late row whose session is still
-    # open in state DOES merge (verified — Spark filters late input
-    # against finalized sessions, not open state), which is why this test
-    # pushes the frontier a second time before sending the late row.
-    pd.DataFrame({"user_id": [1], "ts_epoch": [ts(10, 20)]}).to_parquet(
-        inp / "f3.parquet", index=False
-    )
-
-    from pyspark.sql import functions as F
-
-    stream = (
-        spark.readStream.schema("user_id long, ts_epoch long")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(inp))
-        .withColumn("ts", F.timestamp_seconds("ts_epoch"))
-        .select("user_id", "ts")
-    )
-    q = (
-        streaming.sessionized_event_counts(stream)
-        .writeStream.format("memory")
-        .queryName("sesscounts")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt_sess"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = {
-        (r["user_id"], r["start_et"]): (r["n_events"], r["duration_s"])
-        for r in spark.sql("SELECT * FROM sesscounts").collect()
-    }
-    # user 1's session emitted with exactly the two on-time events; the
-    # late 10:20 event did not extend it (duration stays 600 s).
-    assert got[(1, ts(10, 0))] == (2, 600)
-    # user 2's session never emitted (watermark still behind its end).
-    assert not any(u == 2 for (u, _s) in got)
-    assert len(got) == 1
-
-
-def test_asof_stream_matches_batch(spark, tmp_path):
-    """Streaming as-of join == batch as-of join on the same events: the
-    sf0.001 events split into 3 et-ordered micro-batch files (the
-    streaming-asof ordering contract), drained with availableNow, must
-    emit exactly the batch device's rows — including null-view purchases
-    and every view carried across batch boundaries in state."""
-    import pandas as pd
-
-    from pdf_parser_spark.timeseries import _asof_core
-
-    ev = pd.read_parquet("/root/testdata/sf0.001/events.parquet")
-    ev["et"] = (ev["ts"] - pd.Timestamp(0)) // pd.Timedelta(microseconds=1)
-    ev = ev[["user_id", "event_id", "et", "event_type", "value"]].sort_values(
-        ["et", "event_id"]
-    )
-    inp = tmp_path / "asof_in"
-    inp.mkdir()
-    n = len(ev)
-    for i, lo in enumerate(range(0, n, -(-n // 3))):
-        ev.iloc[lo : lo + -(-n // 3)].to_parquet(
-            inp / f"b{i}.parquet", index=False
-        )
-
-    stream = (
-        spark.readStream.schema(
-            "user_id long, event_id long, et long, event_type string, value double"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(inp))
-    )
-    q = (
-        streaming.asof_event_stream(stream)
-        .writeStream.format("memory")
-        .queryName("asof_stream")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "asof_ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    got = spark.sql("select * from asof_stream").toPandas()
-
-    sdf = spark.createDataFrame(
-        ev, "user_id long, event_id long, et long, event_type string, value double"
-    )
-    want = _asof_core(sdf).toPandas()
-    cols = sorted(want.columns)
-    got = got[cols].astype(str).sort_values(cols).reset_index(drop=True)
-    want = want[cols].astype(str).sort_values(cols).reset_index(drop=True)
-    pd.testing.assert_frame_equal(got, want)
-    assert len(got) > 0
-
-
-def test_interval_join_stream_matches_batch(spark, tmp_path):
-    """Stream-stream interval join == the identical plan on the batch
-    frame: sf0.001 events split into 3 ts-ordered micro-batches, drained
-    availableNow — every (purchase, trailing-horizon view) pair emits
-    exactly once, including pairs whose two sides arrive in different
-    micro-batches — and equals an independent pandas replay."""
-    import pandas as pd
-
-    ev = pd.read_parquet("/root/testdata/sf0.001/events.parquet")[
-        ["user_id", "event_id", "ts", "event_type", "value"]
-    ].sort_values(["ts", "event_id"])
-    inp = tmp_path / "ssj_in"
-    inp.mkdir()
-    n = len(ev)
-    step = -(-n // 3)
-    for i, lo in enumerate(range(0, n, step)):
-        ev.iloc[lo : lo + step].to_parquet(inp / f"b{i}.parquet", index=False)
-
-    schema = (
-        "user_id long, event_id long, ts timestamp_ntz, "
-        "event_type string, value double"
-    )
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(inp))
-    )
-    q = (
-        streaming.view_purchase_interval_join(stream)
-        .writeStream.format("memory")
-        .queryName("ssj_stream")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ssj_ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    got = {tuple(r) for r in spark.sql("select * from ssj_stream").collect()}
-
-    batch = spark.createDataFrame(ev, schema)
-    want = {tuple(r) for r in streaming.view_purchase_interval_join(batch).collect()}
-    assert got == want and len(got) > 0
-
-    # independent replay: every pair satisfies the interval, and the pair
-    # count per purchase equals the brute-force count.
-    ev["et"] = (ev["ts"] - pd.Timestamp(0)) // pd.Timedelta(microseconds=1)
-    views = ev[ev.event_type == "view"]
-    by_user = {u: list(g["et"]) for u, g in views.groupby("user_id")}
-    brute = 0
-    for r in ev[ev.event_type == "purchase"].itertuples():
-        brute += sum(
-            1
-            for vet in by_user.get(r.user_id, [])
-            if r.et - 3_600_000_000 <= vet <= r.et
-        )
-    assert len(got) == brute
-
-
-def test_dedup_within_watermark_stream(spark, tmp_path):
-    """dropDuplicatesWithinWatermark drops an exact re-send arriving in a
-    LATER micro-batch (within the lateness horizon) and the drained
-    stream equals batch dropDuplicates on event_id."""
-    import datetime as dt
-
-    import pandas as pd
-
-    base = dt.datetime(2024, 1, 1)
-    rows = pd.DataFrame(
-        {
-            "event_id": [1, 2, 3],
-            "ts": [base, base + dt.timedelta(minutes=5), base + dt.timedelta(minutes=10)],
-            "event_type": ["view", "click", "view"],
-        }
-    )
-    rows["ts"] = rows["ts"].astype("datetime64[us]")
-    inp = tmp_path / "ddw_in"
-    inp.mkdir()
-    rows.to_parquet(inp / "b0.parquet", index=False)
-    # batch 1: event 2 re-sent byte-identically 10 min later (within the
-    # 1 h lateness) plus a fresh event 4.
-    pd.DataFrame(
-        {
-            "event_id": [2, 4],
-            "ts": [base + dt.timedelta(minutes=5), base + dt.timedelta(minutes=20)],
-            "event_type": ["click", "purchase"],
-        }
-    ).astype({"ts": "datetime64[us]"}).to_parquet(inp / "b1.parquet", index=False)
-
-    schema = "event_id long, ts timestamp_ntz, event_type string"
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(inp))
-    )
-    q = (
-        streaming.dedup_events_within_watermark(stream)
-        .writeStream.format("memory")
-        .queryName("ddw_stream")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ddw_ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = sorted(r.event_id for r in spark.sql("select * from ddw_stream").collect())
-    assert got == [1, 2, 3, 4]
-
-
-def test_exactly_once_sink_replay_and_restart(spark, tmp_path):
-    """The idempotent foreachBatch sink: (1) a drained stream's merged
-    totals equal the batch aggregate; (2) REPLAYING a committed batchId
-    (the post-crash at-least-once contract) is a no-op — totals
-    unchanged; (3) a restart with new input appends exactly the new
-    batch and converges to the batch aggregate over the union."""
-    import pandas as pd
-    from pyspark.sql import functions as F
-
-    ev = pd.read_parquet("/root/testdata/sf0.001/events.parquet")[
-        ["event_id", "ts", "event_type", "value"]
-    ]
-    inp = tmp_path / "eo_in"
-    inp.mkdir()
-    n = len(ev)
-    step = -(-n // 3)
-    for i, lo in enumerate(range(0, n, step)):
-        ev.iloc[lo : lo + step].to_parquet(inp / f"b{i}.parquet", index=False)
-    out_root = str(tmp_path / "eo_out")
-    ckpt = str(tmp_path / "eo_ckpt")
-    schema = "event_id long, ts timestamp_ntz, event_type string, value double"
-
-    def drain():
-        q = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(str(inp))
-            .writeStream.foreachBatch(streaming.exactly_once_counts_writer(out_root))
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-
-    def totals():
-        return {
-            r.event_type: (r.n_events, r.sum_value)
-            for r in streaming.read_exactly_once_counts(spark, out_root).collect()
-        }
-
-    def batch_truth(pdf):
-        sdf = spark.createDataFrame(pdf, schema)
-        return {
-            r.event_type: (r.n_events, r.sum_value)
-            for r in sdf.groupBy("event_type")
-            .agg(
-                F.count(F.lit(1)).alias("n_events"),
-                F.round(F.sum("value"), 2).alias("sum_value"),
-            )
-            .collect()
-        }
-
-    drain()
-    got1 = totals()
-    assert got1 == batch_truth(ev)
-
-    # replay batch 0 with the SAME id (simulated crash re-delivery):
-    # the commit marker makes it a no-op even with different data.
-    writer = streaming.exactly_once_counts_writer(out_root)
-    writer(spark.createDataFrame(ev, schema), 0)
-    assert totals() == got1
-
-    # restart with a NEW file: only the new batch lands.
-    extra = ev.copy()
-    extra["event_id"] = extra["event_id"] + 1_000_000
-    extra.to_parquet(inp / "b9.parquet", index=False)
-    drain()
-    want = batch_truth(pd.concat([ev, extra], ignore_index=True))
-    assert totals() == want
-
-
-def test_top_users_stream_complete_mode(spark, tmp_path):
-    """Complete-mode leaderboard: after an availableNow drain over 3
-    micro-batches, the memory sink holds exactly the batch top-k (the
-    final rewrite), including the deterministic tie-break."""
-    import pandas as pd
-
-    ev = pd.read_parquet("/root/testdata/sf0.001/events.parquet")[
-        ["event_id", "ts", "user_id", "event_type", "value"]
-    ]
-    inp = tmp_path / "topk_in"
-    inp.mkdir()
-    n = len(ev)
-    step = -(-n // 3)
-    for i, lo in enumerate(range(0, n, step)):
-        ev.iloc[lo : lo + step].to_parquet(inp / f"b{i}.parquet", index=False)
-    schema = (
-        "event_id long, ts timestamp_ntz, user_id long, "
-        "event_type string, value double"
-    )
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(inp))
-    )
-    q = (
-        streaming.top_users_stream(stream)
-        .writeStream.format("memory")
-        .queryName("topk_stream")
-        .outputMode("complete")
-        .option("checkpointLocation", str(tmp_path / "topk_ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    got = [tuple(r) for r in spark.sql("select * from topk_stream").collect()]
-    want = [
-        tuple(r)
-        for r in streaming.top_users_stream(
-            spark.createDataFrame(ev, schema)
-        ).collect()
-    ]
-    assert got == want and len(got) == 5
-
-
-def test_funnel_stream_matches_batch(spark, tmp_path):
-    """Streaming funnel == batch funnel: per user, the max-seq emission
-    from the drained 3-batch stream carries exactly the batch device's
-    stage times — including stages completed in DIFFERENT micro-batches
-    (state carry) and users who never emit (reached 0)."""
-    import pandas as pd
-
-    from pdf_parser_spark.timeseries import _funnel_core
-
-    ev = pd.read_parquet("/root/testdata/sf0.001/events.parquet")
-    ev["et"] = (ev["ts"] - pd.Timestamp(0)) // pd.Timedelta(microseconds=1)
-    ev = ev[["user_id", "event_id", "et", "event_type"]].sort_values(
-        ["et", "event_id"]
-    )
-    inp = tmp_path / "fun_in"
-    inp.mkdir()
-    n = len(ev)
-    step = -(-n // 3)
-    for i, lo in enumerate(range(0, n, step)):
-        ev.iloc[lo : lo + step].to_parquet(inp / f"b{i}.parquet", index=False)
-
-    stream = (
-        spark.readStream.schema(
-            "user_id long, event_id long, et long, event_type string"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(inp))
-    )
-    q = (
-        streaming.funnel_event_stream(stream)
-        .writeStream.format("memory")
-        .queryName("funnel_stream")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "fun_ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    got = spark.sql("select * from funnel_stream").toPandas()
-    last = got.loc[got.groupby("user_id")["seq"].idxmax()].set_index("user_id")
-
-    sdf = spark.createDataFrame(
-        ev, "user_id long, event_id long, et long, event_type string"
-    )
-    want = _funnel_core(sdf).toPandas().set_index("user_id")
-    # users with reached 0 never emit in the stream
-    for uid, w in want.iterrows():
-        if w["reached"] == 0:
-            assert uid not in last.index
-            continue
-        g = last.loc[uid]
-        for col in ("t_view", "t_click", "t_purchase"):
-            assert (pd.isna(g[col]) and pd.isna(w[col])) or g[col] == w[col], (uid, col)
-        assert g["reached"] == w["reached"]
-    assert len(last) > 0 and (want["reached"] > 0).any()
-    # multi-batch advance actually exercised: some user emitted >= twice
-    assert (got.groupby("user_id")["seq"].max() >= 2).any()
