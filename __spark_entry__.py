@@ -18,9 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from pdf_parser_spark import driver_contract
 from pdf_parser_spark.analytics import ANALYTIC_QUERIES
-from pdf_parser_spark.curation import CURATION_QUERIES
 from pdf_parser_spark.datapipe import DATAPIPE_QUERIES
-from pdf_parser_spark.lm_filter import LM_QUERIES
 from pdf_parser_spark.selection import SELECTION_QUERIES
 from pdf_parser_spark.timeseries import TIMESERIES_QUERIES
 
@@ -124,9 +122,7 @@ _OVERFLOW_TAIL = [
 _REGISTRIES = (
     driver_contract.PIPELINE_QUERIES,
     DATAPIPE_QUERIES,
-    LM_QUERIES,
     SELECTION_QUERIES,
-    CURATION_QUERIES,
     TIMESERIES_QUERIES,
     ANALYTIC_QUERIES,
 )

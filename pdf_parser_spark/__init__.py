@@ -23,7 +23,7 @@ Layout:
                   — reference side paths: multilingual scan, POSCO alignment,
                     binary media stages, spreadsheet export
   analytics/      — analytic queries with DuckDB-checkable SQL oracles
-  datapipe, lm_filter, curation, selection, timeseries
+  datapipe, selection, timeseries
                   — corpus-curation and OLAP operators registered for the
                     driver's cross-check (not called by either shipped job)
   driver_contract — the query registry behind __spark_entry__.py

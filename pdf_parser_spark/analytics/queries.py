@@ -530,10 +530,9 @@ GROUP BY field_key
 # A (band, sig) bucket with c members emits c·(c−1)/2 candidate pairs in the
 # self-join. A boilerplate-heavy near-dup cluster in 100 TB of web data puts
 # millions of docs in one bucket → a quadratic single-task blowup. Buckets
-# above this cap are excluded from pairing and REPORTED per band (hot-bucket
-# count + member count) instead of silently truncated: at web scale such a
-# bucket is by definition one near-dup cluster, so the downstream dedup
-# decision ("keep one of these") doesn't need its pairwise expansion.
+# above this cap are excluded from pairing: at web scale such a bucket is by
+# definition one near-dup cluster, so the downstream dedup decision ("keep
+# one of these") doesn't need its pairwise expansion.
 MINHASH_BUCKET_CAP = 1000
 
 
@@ -541,9 +540,8 @@ def minhash_sigs(docs: DataFrame) -> DataFrame:
     """Per-(doc, band) MinHash signature over the distinct-token set:
     band b's hash = the b-th disjoint 8-hex-char slice of md5(token)
     (4 independent 32-bit minhashes for the price of one digest, and no
-    4x row explode before the aggregate). Shared by the incremental LSH
-    candidates (curation.py) and the near-dup component clustering
-    (datapipe.py)."""
+    4x row explode before the aggregate). Used by the near-dup component
+    clustering (datapipe.py)."""
     toks = docs.select(
         "doc_id", F.explode(F.array_distinct(F.split("text", " "))).alias("token")
     ).select("doc_id", F.md5("token").alias("h"))

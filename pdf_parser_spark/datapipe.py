@@ -2792,9 +2792,9 @@ def q_token_entropy(spark, sf_dir):
     gibberish sit near log2(n) (every token distinct), template/boiler
     spam sits near 0 (one token dominates). Uses the aggregate identity
     H = log2(n) - (1/n) * sum(c * log2 c) so the corpus collapses in ONE
-    (doc_id, token)-keyed count + one doc-keyed rollup — the lm_filter
-    discipline: hash aggregates with map-side combine, transcendental
-    terms rounded at 4 so summation order cannot flip the hash. A
+    (doc_id, token)-keyed count + one doc-keyed rollup: hash aggregates
+    with map-side combine, transcendental terms rounded at 4 so
+    summation order cannot flip the hash. A
     normalized variant (H / log2(n_tokens)) is included for
     length-independent thresholding."""
     docs = _docs(spark, sf_dir)

@@ -42,7 +42,6 @@ MEDIA_SCHEMA = (
 )
 
 DECODED_SCHEMA = "media_ref string, width int, height int, n_frames int, ok boolean"
-FRAMES_SCHEMA = "media_ref string, frame_idx int, frame_ref string"
 FEATURES_SCHEMA = "media_ref string, feature array<float>"
 
 

@@ -117,40 +117,6 @@ def test_datapipe_differential_random(spark, tmp_path_factory, pdf):
     )
     want = want[cols].astype(str).sort_values(cols).reset_index(drop=True)
     pd.testing.assert_frame_equal(got, want, obj="exact_substring_dedup")
-    # lm_filter family over the same random table: the trigram LM (train
-    # split = doc_id % 10 == 0, pruned model, add-one smoothing), the
-    # exact-BIGINT mixture plan (incl. the 15-digit source suffix), and
-    # its hash-sampled realization, and the tercile split (avg_nll is
-    # defined even for the degenerate empty model — pinned separately in
-    # test_lm_empty_model_degenerate_corpus_agrees — so the ntile order
-    # is total and the split fuzzes cleanly).
-    from pdf_parser_spark import lm_filter as lf
-
-    # dsir_select fuzz notes: with n <= 24 docs the K=200 LIMIT keeps
-    # every row (both engines agree on that too), all-en and zero-en
-    # corpora exercise the t_mass degenerate smoothing, and duplicate
-    # texts produce identical log_w broken by the doc_id-keyed Gumbel.
-    for name in [
-        "lm_perplexity_filter",
-        "source_mixture_plan",
-        "mixture_realize",
-        "ccnet_terciles",
-        "dsir_select",
-    ]:
-        fn, sql = lf.LM_QUERIES[name]
-        if callable(sql):
-            sql = sql("prop")
-        want = con.execute(sql).fetchdf()
-        cols = sorted(want.columns)
-        got = (
-            fn(spark, str(tmp))
-            .toPandas()[cols]
-            .astype(str)
-            .sort_values(cols)
-            .reset_index(drop=True)
-        )
-        want = want[cols].astype(str).sort_values(cols).reset_index(drop=True)
-        pd.testing.assert_frame_equal(got, want, obj=name)
     # tfidf_top_terms over the same random table: the 8-word shared VOCAB
     # makes document frequencies collide hard (df near n for most tokens),
     # so the ranking rides the token tiebreak — exactly the boundary the

@@ -134,9 +134,8 @@ def test_tfidf_joins_hash_with_single_row_broadcast_only(spark):
     """tfidf_top_terms: the token-keyed df join must be a hash equi-join
     (vocabulary frames, never nested-loop over them); the ONE permitted
     nested-loop is the 1-row corpus-total broadcast (a per-task 1-row
-    concat — the same shape as lm_perplexity's stats cross join), which
-    is why this query gets a dedicated audit rather than the blanket
-    no-BNLJ list."""
+    concat), which is why this query gets a dedicated audit rather than
+    the blanket no-BNLJ list."""
     plan = _plan(spark, "tfidf_top_terms")
     assert "CartesianProduct" not in plan
     assert "BroadcastHashJoin" in plan or "SortMergeJoin" in plan

@@ -61,16 +61,6 @@ def test_hierarchical_rank_windows_stay_chunked(spark):
             assert "_chunk" in ln, ln
 
 
-def test_fasttext_weights_broadcast(spark):
-    """The classifier's weight table must broadcast; scoring must
-    partially aggregate map-side."""
-    from pdf_parser_spark.lm_filter import q_fasttext_quality
-
-    p = _plan(q_fasttext_quality(spark, SF_DIR))
-    assert "BroadcastHashJoin" in p
-    assert "partial_sum" in p
-
-
 def test_asof_join_single_exchange_no_rangejoin(spark):
     """The as-of join must stay the union+window device: exactly one
     data exchange (on user_id), no join operator at all — a range/theta
