@@ -1,259 +1,49 @@
-"""curation.py operators: Spark-vs-DuckDB differential on the sf0.001
-tables plus independent recomputation of each operator's defining
-property (repartition-invariant shuffle order, incremental-only pair
-emission, bin-packing contiguity, exact Q17/Q15 replays in pandas)."""
+"""Sequential bin-packing compaction of a per-source file listing (one
+"file" per source, sized by its total chars), driven by
+``datapipe._global_prefix`` ordered on a string column: bin =
+floor(exclusive prefix / target). The prefix must equal the pandas
+cumulative sum in source order, and the bins it yields must be
+contiguous and bounded."""
 
 from __future__ import annotations
 
-import duckdb
 import pandas as pd
-import pytest
+from pyspark.sql import functions as F
 
-from pdf_parser_spark import curation as cur
+from pdf_parser_spark.datapipe import _global_prefix
 
 SF_DIR = "/root/testdata/sf0.001"
-TABLES = (
-    "documents",
-    "lineitem",
-    "part",
-    "supplier",
-    "events",
-    "orders",
-    "customer",
-    "nation",
-    "region",
-)
-
-
-def _duck(sql: str) -> pd.DataFrame:
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'")
-    return con.execute(sql).fetchdf()
-
-
-def _assert_equal(spark_df, duck_df):
-    cols = sorted(duck_df.columns)
-    got = (
-        spark_df.toPandas()[cols].astype(str).sort_values(cols).reset_index(drop=True)
-    )
-    want = duck_df[cols].astype(str).sort_values(cols).reset_index(drop=True)
-    pd.testing.assert_frame_equal(got, want)
-
-
-@pytest.mark.parametrize("name", sorted(cur.CURATION_QUERIES))
-def test_differential(spark, name):
-    fn, sql = cur.CURATION_QUERIES[name]
-    _assert_equal(fn(spark, SF_DIR), _duck(sql))
-
-
-def test_global_shuffle_repartition_invariant(spark):
-    """The training order is a pure function of doc_id: shuffling the
-    input's partitioning (the thing rand()-based orders are NOT stable
-    under) leaves every (doc_id, shard, pos) identical, each doc appears
-    exactly once, and positions within a shard are 1..n_shard dense."""
-    base = cur.q_global_shuffle(spark, SF_DIR).toPandas()
-    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-
-    reshuffled = docs.repartition(13, "source")
-    import pdf_parser_spark.curation as c
-
-    # same operator body over the reshuffled frame
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    shard = ((F.col("doc_id") % c._PRE) * c._MULT_SHARD % c._MOD % c.N_SHARDS).cast(
-        "long"
-    )
-    okey = ((F.col("doc_id") % c._PRE) * c._MULT_ORDER % c._MOD).cast("long")
-    w = Window.partitionBy("shard").orderBy("okey", "doc_id")
-    again = (
-        reshuffled.select("doc_id", shard.alias("shard"), okey.alias("okey"))
-        .withColumn("pos", F.row_number().over(w).cast("long"))
-        .select("doc_id", "shard", "pos")
-        .toPandas()
-    )
-    a = base.sort_values("doc_id").reset_index(drop=True)
-    b = again.sort_values("doc_id").reset_index(drop=True)
-    pd.testing.assert_frame_equal(a, b)
-
-    n_docs = len(pd.read_parquet(f"{SF_DIR}/documents.parquet"))
-    assert len(base) == n_docs
-    assert base["doc_id"].is_unique
-    for _, grp in base.groupby("shard"):
-        assert sorted(grp["pos"]) == list(range(1, len(grp) + 1))
-
-
-def test_incremental_emits_only_new_involving_pairs(spark):
-    """Independent replay: recompute the signature buckets in pandas and
-    count (a) new-new and (b) new-old pairs per band; the operator's
-    counts must match, and in particular buckets made ONLY of old docs
-    contribute nothing — the incremental contract."""
-    import hashlib
-
-    docs = pd.read_parquet(f"{SF_DIR}/documents.parquet")
-    rows = []
-    for doc_id, text in zip(docs["doc_id"], docs["text"]):
-        toks = set(str(text).split(" "))
-        digs = [hashlib.md5(t.encode()).hexdigest() for t in toks]
-        for b in range(4):
-            sig = min(d[b * 8 : b * 8 + 8] for d in digs)
-            rows.append((doc_id, b, sig, doc_id % 10 >= 8))
-    sigs = pd.DataFrame(rows, columns=["doc_id", "band", "sig", "is_new"])
-    expect = {}
-    for (band, _sig), grp in sigs.groupby(["band", "sig"]):
-        c = len(grp)
-        if c > cur.MINHASH_BUCKET_CAP:
-            continue
-        n_new = int(grp["is_new"].sum())
-        nn, no = n_new * (n_new - 1) // 2, n_new * (c - n_new)
-        if nn or no:
-            e = expect.setdefault(band, [0, 0])
-            e[0] += nn
-            e[1] += no
-    out = cur.q_incremental_minhash_pairs(spark, SF_DIR).toPandas()
-    got = {
-        int(r.band): [int(r.n_new_new), int(r.n_new_old)]
-        for r in out.itertuples()
-    }
-    assert got == expect
+COMPACT_TARGET = 20_000  # chars per compacted output file: ~8 bins at sf0.001
 
 
 def test_compaction_bins_contiguous_and_bounded(spark):
     """Bins follow source order contiguously (a bin is an interval of the
     ordered listing) and no bin except possibly the last exceeds
     target + its own largest file — the sequential-packing guarantee."""
+    files = (
+        spark.read.parquet(f"{SF_DIR}/documents.parquet")
+        .groupBy("source")
+        .agg(F.sum("n_chars").cast("long").alias("size_chars"))
+    )
     out = (
-        cur.q_compact_small_files(spark, SF_DIR)
+        _global_prefix(spark, files, "size_chars", order_col="source")
+        .select(
+            "source",
+            "size_chars",
+            "_pre",
+            "_grand",
+            F.floor(F.col("_pre") / COMPACT_TARGET).cast("long").alias("file_bin"),
+        )
         .toPandas()
         .sort_values("source")
         .reset_index(drop=True)
     )
+    docs = pd.read_parquet(f"{SF_DIR}/documents.parquet")
+    want = docs.groupby("source")["n_chars"].sum().sort_index()
+    assert list(out["source"]) == list(want.index)
+    assert list(out["_pre"]) == list(want.cumsum() - want)
+    assert (out["_grand"] == want.sum()).all()
+    assert out["file_bin"].nunique() > 1  # non-vacuous at this scale
     assert (out["file_bin"].diff().fillna(0) >= 0).all()  # monotone in order
     for _, grp in out.groupby("file_bin"):
-        assert grp["size_chars"].sum() <= cur.COMPACT_TARGET + grp["size_chars"].max()
-
-
-def test_small_lot_revenue_pandas_replay(spark):
-    """Exact pandas replay of the decorrelated Q17: per-part integral
-    stats, cross-multiplied threshold, cent-exact revenue."""
-    li = pd.read_parquet(f"{SF_DIR}/lineitem.parquet")
-    part = pd.read_parquet(f"{SF_DIR}/part.parquet")
-    keys = set(part.loc[part["p_brand"] == cur._Q17_BRAND, "p_partkey"])
-    li = li[li["l_partkey"].isin(keys)].copy()
-    li["qty"] = li["l_quantity"].astype("int64")
-    li["price_c"] = (li["l_extendedprice"] * 100).round().astype("int64")
-    st = li.groupby("l_partkey")["qty"].agg(["count", "sum"])
-    li = li.join(st, on="l_partkey")
-    small = li[li["qty"] * 5 * li["count"] < li["sum"]]
-    out = cur.q_small_lot_revenue(spark, SF_DIR).toPandas().iloc[0]
-    assert int(out["n_small_lots"]) == len(small)
-    assert float(out["avg_yearly"]) == round(small["price_c"].sum() / 700.0, 2)
-
-
-def test_stream_minhash_candidates_matches_batch(spark, tmp_path):
-    """The streaming incremental-dedup twin over file micro-batches must
-    emit, across all batches, exactly the rows of the identical plan run
-    on a static frame; its in-row signatures must agree with the
-    aggregate-form minhash_sigs (cross-form pin); and on this corpus the
-    match set is non-vacuous."""
-    import pathlib
-
-    docs = pd.read_parquet(f"{SF_DIR}/documents.parquet")
-    new = docs[docs["doc_id"] % 10 >= 8].reset_index(drop=True)
-    (pathlib.Path(tmp_path) / "in").mkdir()
-    half = len(new) // 2
-    new.iloc[:half].to_parquet(f"{tmp_path}/in/b0.parquet")
-    new.iloc[half:].to_parquet(f"{tmp_path}/in/b1.parquet")
-
-    buckets = cur.corpus_sig_buckets(spark, SF_DIR).cache()
-    stream = (
-        spark.readStream.schema(
-            "doc_id long, text string, lang string, source string, n_chars long"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{tmp_path}/in")
-    )
-    collected = []
-    q = (
-        cur.stream_minhash_candidates(stream, buckets)
-        .writeStream.outputMode("append")
-        .foreachBatch(lambda df, _id: collected.extend(df.collect()))
-        .option("checkpointLocation", f"{tmp_path}/ck")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = (
-        pd.DataFrame([r.asDict() for r in collected])
-        .sort_values(["doc_id", "corpus_doc_id", "band"])
-        .reset_index(drop=True)
-    )
-    new_static = spark.read.parquet(f"{tmp_path}/in")
-    want = (
-        cur.stream_minhash_candidates(new_static, buckets)
-        .toPandas()
-        .sort_values(["doc_id", "corpus_doc_id", "band"])
-        .reset_index(drop=True)
-    )
-    pd.testing.assert_frame_equal(got, want)
-    assert len(got) > 0
-
-    # Cross-form pin: every (band, sig) the stream derived in-row exists
-    # identically in the aggregate-form signature table for that doc.
-    from pdf_parser_spark.analytics.queries import minhash_sigs
-    from pyspark.sql import functions as F
-
-    all_docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    agg = minhash_sigs(all_docs.select("doc_id", "text"))
-
-    toks = F.array_distinct(F.split("text", " "))
-
-    def band_sig(b):
-        start = b * 8 + 1
-        return F.array_min(
-            F.transform(toks, lambda t: F.substring(F.md5(t), start, 8))
-        )
-
-    inrow = all_docs.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(F.lit(b).alias("band"), band_sig(b).alias("sig"))
-                    for b in range(4)
-                ]
-            )
-        ).alias("bs"),
-    ).select("doc_id", "bs.band", "bs.sig")
-    assert inrow.exceptAll(agg).count() == 0
-    assert agg.exceptAll(inrow).count() == 0
-    buckets.unpersist()
-
-
-def test_market_share_plan_one_shuffle_join(spark):
-    """Q8's seven-table tree must resolve to six BroadcastHashJoins plus
-    exactly ONE shuffle join (lineitem→orders on o_orderkey) — the
-    100 TB shape: dims prune before the fact side moves."""
-    plan = (
-        cur.q_market_share(spark, SF_DIR)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert plan.count("BroadcastHashJoin") == 6
-    assert plan.count("SortMergeJoin") + plan.count("ShuffledHashJoin") == 1
-
-
-def test_top_supplier_plan_all_broadcast(spark):
-    """Q15's plan must broadcast both the 1-row max and the supplier dim:
-    no SortMergeJoin anywhere — the aggregate's exchange is the only
-    corpus-keyed shuffle."""
-    plan = (
-        cur.q_top_supplier_revenue(spark, SF_DIR)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "SortMergeJoin" not in plan
-    assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan
+        assert grp["size_chars"].sum() <= COMPACT_TARGET + grp["size_chars"].max()
