@@ -8,17 +8,17 @@ Shape of the job (one Python crossing; the span payload is shuffled once):
       that moves span bytes)
     → route_and_extract (udfs.py; the one Python crossing, mapInArrow): per
       doc, vendor_detect.route_doc, then for docs routing lets through
-      oracle.doc_pages and kernel.extract_page_entries; one slim row per doc
-      (routing columns + pages of entries, no spans)
+      oracle.process_document and oracle.doc_stats_row, which assemble the
+      pages, run the kernel, hash (H1), dedup (H2) and name (H4) the
+      entries and compute the doc stats (A1); one slim row per doc
+      (routing columns, ordered entries and stats, no spans)
     → first-wins admission over those rows, JVM-only: min_by per file_hash
       (H3/J4), partially aggregated in the same stage; losing duplicates
       were extracted speculatively and are dropped here; the winners are
       persisted
-    → explode(pages) of the winners (doc_id, vendor, page, entries, used_ocr)
-    → posexplode(entries) fan-out (R8)
-    → groupBy(doc_id): md5 entry hash (H1), first-wins dedup (H2) and
-      sequencing in one in-row fold
-    → ordered output spans / unpivot / stats
+    → doc_outputs: narrow projections of the winners, no regrouping —
+      posexplode(entries) into ordered spans (R8) and the unpivot (A2),
+      and stats.* for doc_stats
 """
 
 from __future__ import annotations
@@ -102,22 +102,22 @@ def _routed_ranked(docs: DataFrame, track: list | None = None) -> DataFrame:
 
 
 def admitted_pages(docs: DataFrame) -> DataFrame:
-    """``(doc_id, eff_vendor, file_hash, pages)`` of every admitted doc: the
-    job's one Python stage (``udfs.route_and_extract``: route, build pages
-    and extract every doc) feeding first-wins admission, JVM-only, in the
-    same stage's map-side aggregate. Its output is read once, so nothing
+    """``(doc_id, eff_vendor, file_hash, entries, stats)`` of every admitted
+    doc: the job's one Python stage (``udfs.route_and_extract``: route and
+    finish every doc) feeding first-wins admission, JVM-only, in the same
+    stage's map-side aggregate. Its output is read once, so nothing
     here is persisted; callers persist the result.
 
     The aggregated rows are slim: admission is a pure function of (doc_id,
     file_hash, routing columns), so the span payloads — the overwhelming
-    majority of the bytes — never enter its shuffle; the pages carry only
-    extracted entries. Losing duplicates are extracted speculatively (~1%
-    of docs in the generated mix)."""
+    majority of the bytes — never enter its shuffle; a doc's result is its
+    deduplicated entries and its stats. Losing duplicates are extracted
+    speculatively (~1% of docs in the generated mix)."""
     routed = route_and_extract(docs, _kernel_width(docs.sparkSession))
     return (
         _slot_winners(routed)
         .where(F.col("pre_reason").isNull())
-        .select("doc_id", "eff_vendor", "file_hash", "pages")
+        .select("doc_id", "eff_vendor", "file_hash", "entries", "stats")
     )
 
 
@@ -204,7 +204,8 @@ def vendor_routing_frame(docs: DataFrame) -> DataFrame:
 def page_frame(admitted: DataFrame) -> DataFrame:
     """Assemble ordered per-page inputs for the kernel UDF — shuffle-free.
     Not on the job path (udfs.route_and_extract builds pages with
-    oracle.doc_pages there); orientation_frame uses it.
+    oracle.doc_pages there); orientation_frame and the benchmark's layer
+    sweep use it.
 
     A document's spans are already co-located in its row, so per-page blobs
     are built entirely JVM-side with higher-order functions over the
@@ -348,7 +349,8 @@ def orientation_frame(docs: DataFrame) -> DataFrame:
 
 def page_entries_frame(pages: DataFrame) -> DataFrame:
     """``page_frame`` rows through ``extract_page_udf``. Not on the job path
-    (``kernel_frames`` explodes the fused stage's pages there)."""
+    (the fused stage runs the kernel there); the benchmark's layer sweep
+    uses it."""
     # Select the struct result once, expand in a second projection: selecting
     # r["entries"] and r["used_ocr"] directly would plan the Python UDF twice
     # (one evaluation per referenced sub-field).
@@ -368,7 +370,10 @@ def page_entries_frame(pages: DataFrame) -> DataFrame:
 
 def entries_frame(page_entries: DataFrame) -> DataFrame:
     """Fan-out (R8), entry hash (H1), first-wins intra-doc dedup (H2), doc
-    sequencing, and the sanitized per-entry artifact name (H4).
+    sequencing, and the sanitized per-entry artifact name (H4), as
+    DataFrame algebra over ``page_entries_frame`` rows. Not on the job path
+    (the fused stage finishes each doc with oracle.process_document there);
+    the benchmark's layer sweep times it.
 
     Dedup + rank need deterministic (page, entry_idx) order within each doc.
     Instead of two window shuffles (partitionBy (doc_id, hash) then doc_id),
@@ -455,135 +460,67 @@ def entries_frame(page_entries: DataFrame) -> DataFrame:
     )
 
 
-def extracted_spans_frame(entries: DataFrame) -> DataFrame:
-    """Ordered output span sequence (FIXTURES.md §5): 4 spans per entry,
-    seq contiguous per doc, offset = source page base offset."""
+def doc_outputs(
+    winners: DataFrame, job_ts: str = JOB_TS, bucket: str | None = None
+) -> dict[str, DataFrame]:
+    """The three per-doc outputs (extracted_spans, extracted, doc_stats) —
+    everything a bucketed lineage job writes — as narrow projections of
+    ``winners`` (``admitted_pages``): the fused stage already finished every
+    doc, so nothing here regroups. ``bucket`` names a column of
+    ``winners`` to carry through as each output's last column: over winners
+    clustered by it, a write partitioned on it needs no further shuffle.
+
+    extracted_spans (FIXTURES.md §5): 4 spans per entry, seq contiguous per
+    doc, offset = the source page's base offset. extracted (A2,
+    tasks.py:158-169): one row per truthy field value. doc_stats (A1): the
+    stats the stage computed, one row per admitted doc."""
+    keep = [bucket] if bucket else []
+    fan = winners.select(
+        "doc_id", "eff_vendor", *keep, F.posexplode("entries").alias("i", "e")
+    ).select("doc_id", "eff_vendor", "i", "e.*", *keep)
+    fields = list(zip(FIELD_KEYS, ("plate", "heat", "cert")))
+    spans = [(f"field:{fk}", F.col(c), F.lit("")) for fk, c in fields]
+    spans.append(("entry_ref", F.lit(""), F.col("filename")))
     span_structs = F.array(
-        F.struct(
-            F.lit("field:PLATE_NO").alias("kind"),
-            F.col("plate").alias("text"),
-            F.lit("").alias("media_ref"),
-            F.lit(0).alias("fi"),
-        ),
-        F.struct(
-            F.lit("field:HEAT_NO").alias("kind"),
-            F.col("heat").alias("text"),
-            F.lit("").alias("media_ref"),
-            F.lit(1).alias("fi"),
-        ),
-        F.struct(
-            F.lit("field:TEST_CERT_NO").alias("kind"),
-            F.col("cert").alias("text"),
-            F.lit("").alias("media_ref"),
-            F.lit(2).alias("fi"),
-        ),
-        F.struct(
-            F.lit("entry_ref").alias("kind"),
-            F.lit("").alias("text"),
-            F.col("filename").alias("media_ref"),
-            F.lit(3).alias("fi"),
-        ),
-    )
-    return (
-        entries.withColumn("sp", F.explode(span_structs))
-        .select(
-            "doc_id",
-            ((F.col("entry_rank") - 1) * 4 + F.col("sp.fi")).cast("long").alias("seq"),
-            F.col("sp.kind").alias("kind"),
-            F.col("sp.text").alias("text"),
-            F.col("sp.media_ref").alias("media_ref"),
-            (F.col("page") * 1000).cast("int").alias("offset"),
-        )
-    )
-
-
-def extracted_frame(entries: DataFrame, job_ts: str = JOB_TS) -> DataFrame:
-    """Unpivot (A2, tasks.py:158-169): one row per truthy field value."""
-    field_structs = F.array(
         *[
-            F.struct(
-                F.lit(fk).alias("field_key"),
-                F.col(c).alias("field_value"),
-                F.lit(fi).alias("fi"),
-            )
-            for fi, (fk, c) in enumerate(zip(FIELD_KEYS, ("plate", "heat", "cert")))
+            F.struct(F.lit(k).alias("kind"), t.alias("text"), m.alias("media_ref"))
+            for k, t, m in spans
         ]
     )
-    return (
-        entries.withColumn("f", F.explode(field_structs))
+    field_structs = F.array(
+        *[F.struct(F.lit(fk).alias("field_key"), F.col(c).alias("field_value")) for fk, c in fields]
+    )
+    extracted_spans = fan.select(
+        "doc_id", "i", "page", F.posexplode(span_structs).alias("fi", "s"), *keep
+    ).select(
+        "doc_id",
+        (F.col("i") * 4 + F.col("fi")).cast("long").alias("seq"),
+        "s.kind",
+        "s.text",
+        "s.media_ref",
+        ((F.col("page") - 1) * 1000).alias("offset"),
+        *keep,
+    )
+    extracted = (
+        fan.select(
+            "doc_id", "eff_vendor", "i", "page", F.posexplode(field_structs).alias("fi", "f"), *keep
+        )
         .where(F.col("f.field_value") != "")
         .select(
             "doc_id",
-            F.col("vendor_name").alias("vendor"),
-            F.col("f.field_key").alias("field_key"),
-            F.col("f.field_value").alias("field_value"),
-            (F.col("page") + 1).cast("int").alias("page_number"),
-            ((F.col("entry_rank") - 1) * 3 + F.col("f.fi")).cast("long").alias("row_seq"),
+            _vendor_name_col(F.col("eff_vendor")).alias("vendor"),
+            "f.field_key",
+            "f.field_value",
+            F.col("page").alias("page_number"),
+            (F.col("i") * 3 + F.col("fi")).cast("long").alias("row_seq"),
             F.lit(job_ts).alias("created"),
+            *keep,
         )
     )
-
-
-def doc_stats_frame(page_entries: DataFrame) -> DataFrame:
-    """Per-doc stats (A1, extractor.py:128-136,180-195,257-259). List-valued
-    stats are comma-joined sorted page numbers (stable scalar columns for the
-    DuckDB cross-check)."""
-    page_level = page_entries.select(
-        "doc_id",
-        "page",
-        F.size("entries").alias("n_entries"),
-        "used_ocr",
-    )
-    return page_level.groupBy("doc_id").agg(
-        (F.max("page") + 1).cast("int").alias("total_pages"),
-        F.sum(F.when(F.col("n_entries") > 0, 1).otherwise(0)).cast("int").alias("successful_pages"),
-        F.concat_ws(
-            ",", F.sort_array(F.collect_list(F.when(F.col("used_ocr"), F.col("page") + 1)))
-        ).alias("ocr_fallback_pages"),
-        F.concat_ws(
-            ",", F.sort_array(F.collect_list(F.when(F.col("n_entries") == 0, F.col("page") + 1)))
-        ).alias("failed_pages"),
-        F.max(F.col("n_entries") > 0).alias("extraction_success"),
-        (F.max(F.col("n_entries") > 0) & F.max(F.col("n_entries") == 0)).alias(
-            "partial_extraction"
-        ),
-    )
-
-
-def kernel_frames(
-    winners: DataFrame,
-    track: list | None = None,
-    cluster_by=None,
-) -> tuple[DataFrame, DataFrame]:
-    """``(page_entries, entries)``, the two frames every per-doc output
-    derives from, over ``winners`` (``admitted_pages``, persisted by the
-    caller). ``page_entries`` is the winners' pages exploded, one narrow
-    step over that cache; ``entries`` is persisted and ``track`` receives
-    its handle. ``cluster_by``, an expression of ``doc_id``,
-    hash-partitions the entries before they are cached: outputs derived
-    from them, and anything grouped by the same expression, then need no
-    further shuffle on it."""
-    page_entries = winners.select(
-        "doc_id", F.col("eff_vendor").alias("vendor"), F.explode("pages").alias("p")
-    ).select("doc_id", "vendor", "p.page", "p.entries", "p.used_ocr")
-    entries = entries_frame(page_entries)
-    if cluster_by is not None:
-        entries = entries.repartition(cluster_by)
-    entries = entries.persist()
-    if track is not None:
-        track.append(entries)
-    return page_entries, entries
-
-
-def incremental_outputs(
-    page_entries: DataFrame, entries: DataFrame, job_ts: str = JOB_TS
-) -> dict[str, DataFrame]:
-    """The three per-doc outputs (extracted_spans, extracted, doc_stats) —
-    everything a bucketed lineage job writes."""
     return {
-        "extracted_spans": extracted_spans_frame(entries),
-        "extracted": extracted_frame(entries, job_ts),
-        "doc_stats": doc_stats_frame(page_entries),
+        "extracted_spans": extracted_spans,
+        "extracted": extracted,
+        "doc_stats": winners.select("doc_id", "stats.*", *keep),
     }
 
 
@@ -594,25 +531,24 @@ def run_pipeline(
     track: list | None = None,
 ) -> dict[str, DataFrame]:
     """Full job over ``docs`` (``spark`` is their session): ``admitted_pages``
-    → ``kernel_frames`` → ``incremental_outputs`` plus the corpus-global
-    master log — the same assembly ``lineage.run_with_lineage`` runs per
-    bucket. Returns the four output DataFrames; callers persist with
-    .write.partitionBy(...).parquet(...) (Iceberg writeTo on a real cluster).
+    → ``doc_outputs`` plus the corpus-global master log — the same assembly
+    ``lineage.run_with_lineage`` runs per bucket. Returns the four output
+    DataFrames; callers persist with .write.partitionBy(...).parquet(...)
+    (Iceberg writeTo on a real cluster).
 
-    The admitted winners and the entries are persisted: every output
-    derives from them, and recomputing per output would repeat the job's
-    only Python stage. ``track`` (a
-    caller-owned list) receives the persisted handles so the caller can
-    unpersist once its outputs are materialized — long-running sessions
-    (streaming micro-batches, repeated report jobs) must not accumulate
-    cached RDDs until eviction pressure. The master log's doc-level meta
-    reads three slim columns of the cached winners."""
+    The admitted winners are persisted: every output derives from them,
+    and recomputing per output would repeat the job's only Python stage.
+    ``track`` (a caller-owned list) receives the persisted handles so the
+    caller can unpersist once its outputs are materialized — long-running
+    sessions (streaming micro-batches, repeated report jobs) must not
+    accumulate cached RDDs until eviction pressure. The master log's
+    doc-level meta reads three slim columns of the cached winners."""
     from .reports import master_log_frame
 
     winners = admitted_pages(docs).persist()
     if track is not None:
         track.append(winners)
     doc_meta = winners.select("doc_id", F.col("eff_vendor").alias("vendor"), "file_hash")
-    out = incremental_outputs(*kernel_frames(winners, track=track), job_ts)
+    out = doc_outputs(winners, job_ts)
     out["master_log"] = master_log_frame(out["extracted"], doc_meta, job_ts, track=track)
     return out

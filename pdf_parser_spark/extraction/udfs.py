@@ -1,13 +1,15 @@
 """The pipeline's Python crossing.
 
 A job crosses into Python once: ``route_and_extract`` is one ``mapInArrow``
-stage that, per document, routes it (vendor_detect.route_doc), assembles its
-pages (oracle.doc_pages) and runs the per-page kernel
-(pdf_parser_spark.kernel) with its effective vendor's config. These are the
-spec functions the oracle itself calls, so routing, page assembly and
-extraction each live once. Everything downstream (first-wins admission,
-fan-out, hashing, dedup, sequencing, unpivot, aggregation) is JVM-side
-DataFrame algebra over the stage's slim output.
+stage that, per document, routes it (vendor_detect.route_doc) and, when
+routing lets it through, finishes it with oracle.process_document and
+oracle.doc_stats_row under its effective vendor's config: page assembly,
+the per-page kernel (pdf_parser_spark.kernel), the entry hash, first-wins
+intra-doc dedup, the artifact filename and the doc stats. These are the
+spec functions the oracle itself calls, so each per-document semantic lives
+once. What stays JVM-side is relational: first-wins admission across docs,
+span sequencing, the unpivot and the bucketed writes, all over the stage's
+slim output.
 
 ``extract_page_udf`` is the kernel alone as a scalar pandas UDF over page
 rows; it is not on the job path (orientation and the benchmark's layer
@@ -41,7 +43,7 @@ from pyspark.sql.types import (
 
 from .. import kernel
 from ..configs import VENDOR_CONFIGS
-from ..oracle import doc_pages
+from ..oracle import doc_stats_row, process_document
 from ..vendor_detect import route_doc
 
 ENTRY_TYPE = StructType(
@@ -61,8 +63,10 @@ PAGE_RESULT_TYPE = StructType(
 )
 
 # One row per document: its routing decision plus, when routing lets it
-# through (pre_reason NULL), its extracted pages. No span payload.
-ROUTED_PAGES_TYPE = StructType(
+# through (pre_reason NULL), its finished per-document result: the entries
+# deduplicated on the entry hash in output order (page 1-based) and the doc
+# stats. No span payload.
+ROUTED_DOC_TYPE = StructType(
     [
         StructField("doc_id", StringType()),
         StructField("vendor", StringType()),
@@ -72,15 +76,30 @@ ROUTED_PAGES_TYPE = StructType(
         StructField("confidence", DoubleType()),
         StructField("pre_reason", StringType()),
         StructField(
-            "pages",
+            "entries",
             ArrayType(
                 StructType(
                     [
                         StructField("page", IntegerType()),
-                        StructField("entries", ArrayType(ENTRY_TYPE)),
-                        StructField("used_ocr", BooleanType()),
+                        StructField("plate", StringType()),
+                        StructField("heat", StringType()),
+                        StructField("cert", StringType()),
+                        StructField("filename", StringType()),
                     ]
                 )
+            ),
+        ),
+        StructField(
+            "stats",
+            StructType(
+                [
+                    StructField("total_pages", IntegerType()),
+                    StructField("successful_pages", IntegerType()),
+                    StructField("ocr_fallback_pages", StringType()),
+                    StructField("failed_pages", StringType()),
+                    StructField("extraction_success", BooleanType()),
+                    StructField("partial_extraction", BooleanType()),
+                ]
             ),
         ),
     ]
@@ -92,40 +111,43 @@ def _entry_tuples(entries: list[dict]) -> list[tuple]:
 
 
 def _route_and_extract_doc(doc: dict) -> dict:
-    """One ``ROUTED_PAGES_TYPE`` row for one document row."""
+    """One ``ROUTED_DOC_TYPE`` row for one document row."""
     doc = {**doc, "spans": doc["spans"] or []}
     r = route_doc(doc)
-    pages = None
+    entries = stats = None
     if r["pre_reason"] is None:
-        cfg = VENDOR_CONFIGS[r["eff_vendor"]]
-        pages = []
-        for p, tables, text_raw, media, geom in doc_pages(doc):
-            entries, used = kernel.extract_page_entries(cfg, tables, text_raw, media, geom)
-            pages.append({"page": p, "entries": _entry_tuples(entries), "used_ocr": used})
+        admitted = {**doc, "vendor": r["eff_vendor"]}
+        results, doc_stats = process_document(admitted)
+        entries = [
+            (e["Page"], e["PLATE_NO"], e["HEAT_NO"], e["TEST_CERT_NO"], e["Filename"])
+            for e in results
+        ]
+        stats = doc_stats_row(admitted, doc_stats)
     return {
         "doc_id": doc["doc_id"],
         "vendor": doc["vendor"],
         "file_hash": doc["file_hash"],
         **r,
-        "pages": pages,
+        "entries": entries,
+        "stats": stats,
     }
 
 
 def _route_and_extract_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-    schema = to_arrow_schema(ROUTED_PAGES_TYPE)
+    schema = to_arrow_schema(ROUTED_DOC_TYPE)
     for batch in batches:
         rows = [_route_and_extract_doc(d) for d in batch.to_pylist()]
         yield pa.RecordBatch.from_pylist(rows, schema=schema)
 
 
 def route_and_extract(docs: DataFrame, width: int) -> DataFrame:
-    """``ROUTED_PAGES_TYPE`` for every row of ``docs``: one ``mapInArrow``
+    """``ROUTED_DOC_TYPE`` for every row of ``docs``: one ``mapInArrow``
     stage of ``width`` tasks over the docs hash-partitioned by doc_id. That
     repartition is the one exchange that moves span bytes."""
     return (
         docs.select("doc_id", "vendor", "file_hash", "spans")
         .repartition(width, "doc_id")
-        .mapInArrow(_route_and_extract_batches, ROUTED_PAGES_TYPE)
+        .mapInArrow(_route_and_extract_batches, ROUTED_DOC_TYPE)
     )
 
 

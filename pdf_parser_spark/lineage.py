@@ -7,16 +7,18 @@ done as a table instead of per-row ORM writes).
 Model
 -----
 1. **One Python pass, then global admission.** Each doc crosses into
-   Python once, in one stage that routes it, builds its pages and runs the
-   kernel (extraction.udfs.route_and_extract) and emits a slim row
-   (routing columns and extracted pages, no span payloads). Admission
-   control (first-wins dedup on file_hash + vendor routing) is
-   corpus-global: it aggregates those rows JVM-only, ONCE per job, and the
-   persisted winner set feeds the outputs, the bucket listing and
-   ``doc_meta``. Losing duplicates are extracted speculatively and dropped.
-   A resume anti-joins the input against completed buckets' persisted
-   winners first, so its cost is proportional to the remaining work, not
-   the whole input.
+   Python once, in one stage that routes it and finishes it
+   (extraction.udfs.route_and_extract: pages, kernel, entry dedup and doc
+   stats, through the oracle's own per-document functions) and emits a
+   slim row (routing columns, ordered entries and stats, no span
+   payloads). Admission control (first-wins dedup on file_hash + vendor
+   routing) is corpus-global: it aggregates those rows JVM-only, ONCE per
+   job, and the winner set, the job's one persisted frame, feeds the
+   outputs, the bucket listing, ``doc_meta`` and the lineage metrics as
+   narrow projections. Losing duplicates are extracted speculatively and
+   dropped. A resume anti-joins the input against completed buckets'
+   persisted winners first, so its cost is proportional to the remaining
+   work, not the whole input.
 2. **Bucketed incremental processing.** Admitted documents are assigned to
    ``n_buckets`` stable work partitions by ``pmod(xxhash64(doc_id), B)``.
    One run processes every bucket not yet COMPLETED in the lineage table,
@@ -24,8 +26,8 @@ Model
    dynamic partition overwrite (a re-run of a bucket replaces, never
    duplicates, its output; one file per bucket per table), and only then
    appends one COMPLETED lineage row per bucket with metrics. The metrics
-   come from the frames the job already persisted, not from a read-back of
-   what it wrote, so the bookkeeping is one small JVM-only write. Crash
+   come from the winners the job already persisted, not from a read-back
+   of what it wrote, so the bookkeeping is one small JVM-only write. Crash
    anywhere ⇒ un-lineaged buckets are rewritten wholesale on resume;
    lineaged buckets are skipped. Exactly-once per bucket, no transaction
    coordinator.
@@ -59,7 +61,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import sink
-from .extraction.pipeline import admitted_pages, incremental_outputs, kernel_frames
+from .extraction.pipeline import admitted_pages, doc_outputs
 
 INCREMENTAL_TABLES = ("extracted_spans", "extracted", "doc_stats", "doc_meta")
 OUTPUT_TABLES = INCREMENTAL_TABLES + ("master_log",)
@@ -132,19 +134,18 @@ def run_with_lineage(
         )
         docs = docs.join(known_hashes, "file_hash", "left_anti")
 
-    # Route, pages and kernel in one Python stage, then first-wins
+    # Route and finish every doc in one Python stage, then first-wins
     # admission over its slim output, computed ONCE. The winners (routing
-    # decision and extracted pages, no span payloads) are cached clustered
-    # by bucket, so neither the bucket listings, the doc_meta write nor the
-    # outputs' explode shuffle them again. Every persisted frame is
-    # released on the way out, whether the job finished or raised.
-    cached: list = []
+    # decision, ordered entries and stats, no span payloads) are the one
+    # persisted frame, cached clustered by bucket, so the bucket listing,
+    # every write and the metrics below are projections or per-bucket
+    # aggregates of it that shuffle no further. It is released on the way
+    # out, whether the job finished or raised.
     bucket = _bucket(F.col("doc_id"), n_buckets)
     winners = admitted_pages(docs).withColumn("bucket", bucket)
     if done:
         winners = winners.where(~F.col("bucket").isin(list(done)))
     winners = winners.repartition("bucket").persist()
-    cached.append(winners)
     try:
         ran = sorted(r["bucket"] for r in winners.select("bucket").distinct().collect())
         log.debug("job %s: %d buckets to run, %d done", job_id, len(ran), len(done))
@@ -163,47 +164,42 @@ def run_with_lineage(
             "bucket",
         )
         log.debug("doc_meta written")
-        # The entries are cached clustered by bucket as well, so the
-        # extracted_spans/extracted writes and the metrics below shuffle no
-        # further; doc_stats, grouped by doc_id, pays one bucket exchange.
-        page_entries, entries = kernel_frames(winners, track=cached, cluster_by=bucket)
-        for name, df in incremental_outputs(page_entries, entries).items():
-            sink.write_partitioned(df.withColumn("bucket", bucket), root, name, "bucket")
+        for name, df in doc_outputs(winners, bucket="bucket").items():
+            sink.write_partitioned(df, root, name, "bucket")
             log.debug("%s written", name)
 
-        # Metrics per bucket from the persisted entries the outputs were
-        # written from: each entry is 4 extracted_spans rows and one
-        # extracted row per non-empty field, and each doc with entries has
-        # exactly one entry ranked 1. Listing the buckets from winners
-        # completes buckets whose admitted docs yielded no entries. One
-        # task writes the few rows.
-        metrics = entries.groupBy(bucket.alias("bucket")).agg(
-            F.count(F.when(F.col("entry_rank") == 1, 1)).alias("n_docs"),
-            sum(F.count(F.when(F.col(c) != "", 1)) for c in ("plate", "heat", "cert")).alias(
-                "n_entries"
-            ),
-            (F.count(F.lit(1)) * 4).alias("n_spans"),
-        )
+        # Metrics per bucket from the winners the outputs were written
+        # from: each entry is 4 extracted_spans rows and one extracted row
+        # per non-empty field, and a doc appears in extracted_spans iff it
+        # has an entry. Every bucket with winners gets its row, also when
+        # its docs yielded no entries. One task writes the few rows.
+        def filled(e):
+            return sum(F.when(e[c] != "", 1).otherwise(0) for c in ("plate", "heat", "cert"))
+
         now = time.time()
         sink.append(
-            winners.select("bucket").distinct().join(metrics, "bucket", "left").select(
+            winners.groupBy("bucket")
+            .agg(
+                F.count(F.when(F.size("entries") > 0, 1)).alias("n_docs"),
+                F.sum(F.aggregate("entries", F.lit(0), lambda n, e: n + filled(e))).alias(
+                    "n_entries"
+                ),
+                (F.sum(F.size("entries")) * 4).alias("n_spans"),
+            )
+            .select(
                 F.lit(job_id).alias("job_id"),
-                "bucket",
-                F.coalesce("n_docs", F.lit(0)).cast("long").alias("n_docs"),
-                F.coalesce("n_entries", F.lit(0)).cast("long").alias("n_entries"),
-                F.coalesce("n_spans", F.lit(0)).cast("long").alias("n_spans"),
+                "*",
                 F.lit("COMPLETED").alias("status"),
                 F.lit(now).alias("completed_ts"),
-            ).coalesce(1),
+            )
+            .coalesce(1),
             root,
             "lineage",
         )
         log.debug("lineage appended")
         return {"job_id": job_id, "buckets_run": len(ran), "buckets_skipped": len(done)}
     finally:
-        # Most-derived first, so no unpersist re-caches a dependent.
-        for f in reversed(cached):
-            f.unpersist()
+        winners.unpersist()
 
 
 def read_output(

@@ -9,13 +9,15 @@ DataFrame pipeline, and the driver's DuckDB check reads this oracle's
 materialized outputs as the expected side.
 
 The per-document half is shared with the Spark pipeline: its one Python
-stage (extraction.udfs.route_and_extract) calls vendor_detect.route_doc,
-``doc_pages`` and the per-page kernel (pdf_parser_spark.kernel) as the oracle
-does. Everything relational here — admission, first-wins dedup, span
-sequencing, unpivot, stats, master-log zip-align — is implemented
-independently (Python loops here, windows/aggregations there). The JVM page
-assembly (extraction.pipeline.page_frame) stays checked against ``doc_pages``
-through the orientation differential.
+stage (extraction.udfs.route_and_extract) calls vendor_detect.route_doc, then
+``process_document`` and ``doc_stats_row`` as the oracle does, so page
+assembly, the per-page kernel (pdf_parser_spark.kernel), the entry hash (H1),
+intra-doc first-wins dedup (H2), the artifact filename (H4) and the doc stats
+(A1) each live once. Everything across documents or rows here — cross-doc
+admission, span sequencing, the unpivot and the master-log zip-align — is
+implemented independently (Python loops here, aggregates and generators
+there). The JVM page assembly (extraction.pipeline.page_frame) stays checked
+against ``doc_pages`` through the orientation differential.
 
 Determinism deviations from the reference, pinned on purpose (SURVEY.md §7):
 wall-clock ``Created`` timestamps become a single ``job_ts`` parameter, and

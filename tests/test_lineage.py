@@ -181,8 +181,8 @@ def test_partial_write_without_lineage_is_rewritten(spark, docs_df, tmp_path):
 
 
 def test_no_stranded_persists_after_run_and_report_read(spark, docs_df, tmp_path):
-    """Unpersist discipline: a lineage run cleans up every frame it
-    persists (the slim winner set + the kernel frames), and a master_log
+    """Unpersist discipline: a lineage run cleans up the one frame it
+    persists (the slim winner set), and a master_log
     read hands its one load-bearing persisted handle (reports.global_seq)
     to the caller via ``track`` for release — so a long-lived session
     (streaming reader, repeated reports) strands nothing in the cache.
@@ -366,6 +366,36 @@ def _python_nodes(plan) -> list[str]:
     return out
 
 
+def _job_plans(spark, docs_df, root, monkeypatch) -> tuple[list, list]:
+    """Run one lineage job with ``persist`` (on the session's DataFrame
+    class), ``sink.write_partitioned`` and ``sink.append`` spied; return the
+    physical plans of the frames it persisted and of those it wrote."""
+    persisted, written = [], []
+    frame_cls = type(docs_df)  # the session's concrete DataFrame class
+    real_persist = frame_cls.persist
+
+    def persist_spy(self, *args, **kwargs):
+        # The plan the cache will run: a fresh frame over this one, planned
+        # before this one is cached (upstream caches are leaves in it).
+        persisted.append(self.select("*")._jdf.queryExecution().executedPlan())
+        return real_persist(self, *args, **kwargs)
+
+    def write_spy(real):
+        def spy(df, *args, **kwargs):
+            written.append(df._jdf.queryExecution().executedPlan())
+            return real(df, *args, **kwargs)
+
+        return spy
+
+    monkeypatch.setattr(frame_cls, "persist", persist_spy)
+    monkeypatch.setattr(lineage.sink, "write_partitioned", write_spy(lineage.sink.write_partitioned))
+    monkeypatch.setattr(lineage.sink, "append", write_spy(lineage.sink.append))
+    s = lineage.run_with_lineage(spark, docs_df, root, "job_py", N_BUCKETS)
+    monkeypatch.undo()
+    assert s["buckets_run"] > 0
+    return persisted, written
+
+
 def test_job_has_one_python_stage(spark, docs_df, tmp_path, monkeypatch):
     """A job crosses into Python once: one mapInArrow stage routes, builds
     pages and extracts; neither the routing UDF nor the page-kernel UDF is
@@ -378,29 +408,57 @@ def test_job_has_one_python_stage(spark, docs_df, tmp_path, monkeypatch):
 
     monkeypatch.setattr(vendor_detect, "route_columns", refuse)
     monkeypatch.setattr(pipeline, "page_entries_frame", refuse)
-
-    plans = []
-    frame_cls = type(docs_df)  # the session's concrete DataFrame class
-    real_persist = frame_cls.persist
-
-    def persist_spy(self, *args, **kwargs):
-        # The plan the cache will run: a fresh frame over this one, planned
-        # before this one is cached (upstream caches are leaves in it).
-        plans.append(self.select("*")._jdf.queryExecution().executedPlan())
-        return real_persist(self, *args, **kwargs)
-
-    def write_spy(real):
-        def spy(df, *args, **kwargs):
-            plans.append(df._jdf.queryExecution().executedPlan())
-            return real(df, *args, **kwargs)
-
-        return spy
-
-    monkeypatch.setattr(frame_cls, "persist", persist_spy)
-    monkeypatch.setattr(lineage.sink, "write_partitioned", write_spy(lineage.sink.write_partitioned))
-    monkeypatch.setattr(lineage.sink, "append", write_spy(lineage.sink.append))
-    s = lineage.run_with_lineage(spark, docs_df, str(tmp_path / "out"), "job_py", N_BUCKETS)
-    monkeypatch.undo()
-    assert s["buckets_run"] > 0
-    nodes = [n for p in plans for n in _python_nodes(p)]
+    persisted, written = _job_plans(spark, docs_df, str(tmp_path / "out"), monkeypatch)
+    nodes = [n for p in persisted + written for n in _python_nodes(p)]
     assert len(nodes) == 1 and nodes[0] in ("MapInArrow", "PythonMapInArrow"), nodes
+
+
+def _doc_id_exchange_parents(plan) -> list[str]:
+    """For every shuffle exchange keyed on an expression of ``doc_id`` in a
+    physical plan (not descending into cached relations), the name of the
+    node it feeds."""
+    out, stack = [], [(plan, None)]
+    while stack:
+        node, parent = stack.pop()
+        name = node.nodeName()
+        if name == "Exchange" and "doc_id#" in node.outputPartitioning().toString():
+            out.append(parent)
+        if name == "AdaptiveSparkPlan":
+            stack.append((node.executedPlan(), parent))
+        children = node.children()
+        stack.extend((children.apply(i), name) for i in range(children.size()))
+    return out
+
+
+def test_outputs_are_shuffle_free_projections_of_the_winners(
+    spark, docs_df, tmp_path, monkeypatch
+):
+    """Each doc is finished inside the Python stage, so the job persists
+    one frame (the admitted winners) and regroups nothing by doc after it:
+    across the plans of every frame it persists and writes, the only
+    exchange keyed on doc_id is the one feeding that stage."""
+    persisted, written = _job_plans(spark, docs_df, str(tmp_path / "out"), monkeypatch)
+    assert len(persisted) == 1
+    parents = [n for p in persisted + written for n in _doc_id_exchange_parents(p)]
+    assert len(parents) == 1 and parents[0] in ("MapInArrow", "PythonMapInArrow"), parents
+    nodes = [n for p in persisted + written for n in _python_nodes(p)]
+    assert len(nodes) == 1, nodes
+
+
+def test_admitted_doc_without_spans_keeps_its_doc_stats(spark, tmp_path):
+    """An admitted doc with no spans has no pages and no entries, yet the
+    oracle gives it a doc_stats row (total_pages 0, extraction_success
+    false); the shipped path must write that row too."""
+    docs = corpus.gen_corpus(6, 901)
+    labeled = next(d for d in docs if d["vendor"])
+    docs.append({**labeled, "doc_id": "zz_no_spans", "file_hash": "no_spans", "spans": []})
+    exp = oracle.corpus_outputs(docs)["doc_stats"]
+    assert {"doc_id": "zz_no_spans", "total_pages": 0} in [
+        {k: r[k] for k in ("doc_id", "total_pages")} for r in exp
+    ]
+    df = spark.createDataFrame(docs, schema=corpus.spark_schema())
+    root = str(tmp_path / "no_spans")
+    lineage.run_with_lineage(spark, df, root, "job_ns", N_BUCKETS)
+    got = lineage.read_output(spark, root, "doc_stats")
+    cols = sorted(got.columns)
+    assert _sorted_rows(got.collect(), cols) == _sorted_rows(exp, cols)
